@@ -1,44 +1,38 @@
-"""The extraction kernel (U1 boilerplate classify + U2 reading-order
-reassembly + U3 media preservation) as ONE vectorized Arrow pandas UDF.
+"""The extraction operator (U1 boilerplate classify + U2 reading-order
+reassembly + U3 media preservation): ONE `mapInArrow` over the span
+table, running the Arrow-native kernel in extract_arrow.py.
 
 Design (SPEC.md §7):
-- The array<struct> column never crosses the Arrow boundary as structs:
-  Spark extracts field-wise arrays (``spans.kind`` -> array<string>, ...),
-  so the Python side receives numpy arrays per field — no list-of-dict
-  materialization.
-- Inside the UDF the batch is flattened to ONE columnar span table
-  (np.concatenate / np.repeat) and every rule of SPEC.md runs as numpy /
-  pandas column ops: no per-document Python in the hot path.
-- The result returns field-wise arrays; ``arrays_zip`` reassembles the
+- Spans cross the JVM->Python boundary as Arrow buffers and stay Arrow
+  buffers end to end: no Python-object materialization per span.
+- The kernel flattens each batch to ONE columnar span table and runs
+  every rule of SPEC.md as numpy / pyarrow.compute column ops: no
+  per-document Python in the hot path.
+- The kernel returns field-wise arrays; ``arrays_zip`` reassembles the
   output span structs JVM-side.
 
-Reference behavior anchors (derived, not copied):
-/root/reference/app/services/docling_service.py:53-91 (convert + failure
-rows), :253-279 (reading order), :207-208 (media flags).
+This module also holds the kernel's word counter, `_count_words`; the
+kernel looks it up here at call time, so it can be swapped at module
+attribute level (the benchmark's traced run times it that way).
+
+Reference behavior anchors (derived, not copied): reference
+app/services/docling_service.py:53-91 (convert + failure rows),
+:253-279 (reading order), :207-208 (media flags).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-try:  # vectorized RE2 string kernels (Arrow ships with pyspark)
-    import pyarrow as pa
-    import pyarrow.compute as pc
-except ImportError:  # pragma: no cover - pyarrow is a pyspark dependency
-    pa = pc = None
-
-
-# ASCII whitespace = 0x20 plus 0x09-0x0D (\t\n\v\f\r) — tested by range
-# comparison in _count_words (see note there)
+from .extract_arrow import OUT_SPARK_SCHEMA, extract_map_in_arrow
 
 
 def _count_words(values) -> np.ndarray:
-    """Count \\S+ runs per element — the kernel's hottest operation (two
-    full passes over every span text). Both the pandas object path
-    (per-element re.findall) and pyarrow's RE2 count_substring_regex
+    """Count \\S+ runs per element — the kernel's hottest operation.
+    Per-element re.findall and pyarrow's RE2 count_substring_regex both
     measure ~320ms/100k spans; instead, count word *starts* directly on
     the Arrow UTF-8 byte buffer with numpy (~10ms): a word start is a
     non-space byte at a string start or after a space byte. Byte-level is
@@ -47,15 +41,12 @@ def _count_words(values) -> np.ndarray:
     contain PYTHON whitespace beyond ASCII (\\x1c-\\x1f, Unicode spaces)
     are recounted on a str.split() slow path below, so the result is
     exactly the oracle's len(text.split()) for EVERY input, not just the
-    ASCII fixture alphabet. Accepts an object ndarray or a pyarrow
-    StringArray (zero-copy for the Arrow-native kernel)."""
+    ASCII fixture alphabet. Accepts a pyarrow StringArray (zero-copy, the
+    kernel's case) or a sequence of str/None (converted once). Nulls
+    count 0."""
     n = len(values)
     if n == 0:
         return np.zeros(0, dtype=np.int64)
-    if pa is None:
-        return np.array(
-            [0 if v is None else len(str(v).split()) for v in values], dtype=np.int64
-        )
     arr = values if isinstance(values, pa.Array) else pa.array(values, type=pa.string())
     offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
         arr.offset : arr.offset + n + 1
@@ -103,336 +94,10 @@ def _count_words(values) -> np.ndarray:
         rows = np.unique(
             np.searchsorted(offsets, np.nonzero(trig)[0], side="right") - 1
         )
-        if isinstance(values, pa.Array):
-            for r in rows:
-                v = values[int(r)].as_py()
-                counts[r] = 0 if v is None else len(v.split())
-        else:
-            for r in rows:
-                v = values[int(r)]
-                counts[r] = 0 if v is None else len(str(v).split())
+        for r in rows:
+            v = arr[int(r)].as_py()
+            counts[r] = 0 if v is None else len(v.split())
     return counts
-
-
-def _str_len(obj_values) -> np.ndarray:
-    if pc is not None:
-        arr = pa.array(obj_values, type=pa.string())
-        return pc.utf8_length(arr).to_numpy(zero_copy_only=False)
-    return pd.Series(obj_values).str.len().to_numpy()
-
-
-def _ends_hyphen(values) -> np.ndarray:
-    """rstrip(text) ends with '-' and has length > 1 — hyphen-continuation
-    test (SPEC §3.2), vectorized in Arrow for the PDF-body subset.
-    Accepts an object ndarray or a pyarrow StringArray."""
-    if pc is not None:
-        arr = values if isinstance(values, pa.Array) else pa.array(values, type=pa.string())
-        rt = pc.utf8_rtrim_whitespace(arr)
-        return pc.and_(
-            pc.greater(pc.utf8_length(rt), 1), pc.ends_with(rt, pattern="-")
-        ).to_numpy(zero_copy_only=False)
-    rt = pd.Series(values).str.rstrip()
-    return ((rt.str.len() > 1) & rt.str.endswith("-")).to_numpy()
-
-from ..schema import KERNEL_RESULT_STRUCT
-from ..spec import (
-    ALL_KINDS,
-    HTML_BOILER_KINDS,
-    HTML_CANDIDATE_KINDS,
-    HTML_CONTENT_KINDS,
-    HTML_KINDS,
-    MEDIA_KINDS,
-    MIN_CONTENT_WORDS,
-    PDF_BOILER_KINDS,
-    PDF_KINDS,
-    REPEAT_MAX_WORDS,
-    REPEAT_MIN_COUNT,
-)
-
-# flavor codes
-_HTML, _PDF, _PLAIN, _FAILED = 0, 1, 2, 3
-
-
-def _obj_arr(a) -> np.ndarray:
-    """1-D object ndarray from a sequence of lists/None WITHOUT numpy's
-    2-D coercion of uniform-length nested lists (np.asarray([[1,2],[3,4]],
-    dtype=object) is shape (2,2); pandas never coerces)."""
-    return pd.Series(list(a), dtype=object).to_numpy()
-
-
-def _empty_result(n: int) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "kinds": [np.array([], dtype=object)] * n,
-            "texts": [np.array([], dtype=object)] * n,
-            "media_refs": [np.array([], dtype=object)] * n,
-            "orders": [np.array([], dtype=np.int32)] * n,
-            "page_nos": [np.array([], dtype=np.int32)] * n,
-            "bboxes": [np.array([], dtype=object)] * n,
-            "status": ["completed"] * n,
-            "error": [None] * n,
-            "word_count": np.zeros(n, dtype=np.int64),
-            "char_count": np.zeros(n, dtype=np.int64),
-            "page_count": np.zeros(n, dtype=np.int64),
-            "has_images": np.zeros(n, dtype=bool),
-            "has_tables": np.zeros(n, dtype=bool),
-        }
-    )
-
-
-def extract_batch(
-    kinds_s: pd.Series,
-    texts_s: pd.Series,
-    refs_s: pd.Series,
-    offs_s: pd.Series,
-    bbox_s: pd.Series | None = None,
-) -> pd.DataFrame:
-    """Pure-pandas implementation of SPEC.md over one Arrow batch.
-    bbox_s (optional, parallel to the other span fields) carries per-span
-    layout boxes; when absent every output bbox is null."""
-    n = len(kinds_s)
-    if n == 0:
-        return _empty_result(0)
-
-    lens = np.fromiter((len(a) for a in kinds_s), dtype=np.int64, count=n)
-    total = int(lens.sum())
-    if total == 0:
-        return _empty_result(n)
-
-    d = np.repeat(np.arange(n, dtype=np.int64), lens)
-    k = np.concatenate([np.asarray(a, dtype=object) for a in kinds_s])
-    t = np.concatenate([np.asarray(a, dtype=object) for a in texts_s])
-    r = np.concatenate([np.asarray(a, dtype=object) for a in refs_s])
-    o = np.concatenate([np.asarray(a, dtype=np.int64) for a in offs_s])
-    if bbox_s is None:
-        b = np.full(total, None, dtype=object)
-    else:
-        b = np.concatenate([_obj_arr(a) for a in bbox_s])
-
-    # sort by (doc, offset) — stored order is untrusted
-    idx = np.lexsort((o, d))
-    d, k, t, r, o, b = d[idx], k[idx], t[idx], r[idx], o[idx], b[idx]
-
-    f = pd.DataFrame({"d": d, "k": k, "t": t, "r": r, "o": o, "b": b})
-    kk = f["k"]
-
-    is_media = kk.isin(MEDIA_KINDS).to_numpy()
-    is_html_kind = kk.isin(HTML_KINDS).to_numpy()
-    is_pdf_kind = kk.isin(PDF_KINDS).to_numpy()
-    is_known = kk.isin(ALL_KINDS).to_numpy()
-
-    # ---- flavor / failure per doc (SPEC §2)
-    has_unknown = np.bincount(d[~is_known], minlength=n) > 0
-    has_html = np.bincount(d[is_html_kind], minlength=n) > 0
-    has_pdf = np.bincount(d[is_pdf_kind], minlength=n) > 0
-    flavor = np.full(n, _PLAIN, dtype=np.int8)
-    flavor[has_pdf] = _PDF
-    flavor[has_html] = _HTML
-    flavor[has_unknown] = _FAILED
-
-    # first unknown kind per failed doc (rows are offset-sorted)
-    errors: dict[int, str] = {}
-    if has_unknown.any():
-        bad = f[~is_known]
-        firsts = bad.groupby("d", sort=False)["k"].first()
-        errors = {int(di): f"unknown kind: {kv}" for di, kv in firsts.items()}
-
-    row_flavor = flavor[d]
-
-    # ---- page derivation (A7/S8): a 'pageno' span marks a page START;
-    # a span's page = max(1, inclusive count of pageno spans at-or-before
-    # it) within its doc; page_count = number of pageno markers per doc
-    is_pageno = (kk == "pageno").to_numpy()
-    cp = np.cumsum(is_pageno)
-    row_pos = np.arange(total, dtype=np.int64)
-    first_of_doc = np.empty(total, dtype=bool)
-    first_of_doc[0] = True
-    first_of_doc[1:] = d[1:] != d[:-1]
-    doc_start_idx = np.maximum.accumulate(np.where(first_of_doc, row_pos, -1))
-    base_cp = cp[doc_start_idx] - is_pageno[doc_start_idx]
-    f["pg"] = np.maximum(cp - base_cp, 1).astype(np.int32)
-    page_count = np.bincount(d[is_pageno], minlength=n).astype(np.int64)
-
-    # ---- classification
-    words = _count_words(f["t"].to_numpy())
-
-    keep = np.zeros(total, dtype=bool)
-
-    # plain flavor: everything is content
-    keep |= row_flavor == _PLAIN
-
-    # HTML flavor (SPEC §3.1)
-    mh = row_flavor == _HTML
-    if mh.any():
-        # pass-1 labels: 1 content, 0 boiler, 2 undecided, 3 media
-        lab = np.full(total, -1, dtype=np.int8)
-        lab[mh & is_media] = 3
-        lab[mh & kk.isin(HTML_BOILER_KINDS).to_numpy()] = 0
-        lab[mh & kk.isin(HTML_CONTENT_KINDS).to_numpy()] = 1
-        cand = mh & kk.isin(HTML_CANDIDATE_KINDS).to_numpy()
-        lab[cand & (words >= MIN_CONTENT_WORDS)] = 1
-        lab[cand & (words < MIN_CONTENT_WORDS)] = 2
-        # mixed-flavor rows: PDF kinds inside an HTML-flavor doc carry no
-        # HTML prior — the oracle's else-branch labels them CONTENT
-        # (oracle/extract.py::_classify_html); leaving them at -1 both
-        # dropped them and removed them from smoothing neighborhoods
-        lab[mh & (lab == -1)] = 1
-
-        # neighborhood smoothing over decided non-media labels
-        dec = pd.Series(np.where((lab == 0) | (lab == 1), lab, np.nan), index=f.index)
-        g = dec.groupby(f["d"])
-        prev_dec = g.shift(1).groupby(f["d"]).ffill().fillna(0.0).to_numpy()
-        next_dec = g.shift(-1).groupby(f["d"]).bfill().fillna(0.0).to_numpy()
-        undec = lab == 2
-        lab[undec & (prev_dec == 1.0) & (next_dec == 1.0)] = 1
-        lab[lab == 2] = 0
-        keep |= mh & ((lab == 1) | (lab == 3))
-
-    # PDF flavor (SPEC §3.2 pass 1)
-    mp = row_flavor == _PDF
-    if mp.any():
-        nm = mp & ~is_media
-        # exact-text repetition count among non-media rows of each pdf doc
-        rep = np.zeros(total, dtype=np.int64)
-        sub = f[nm]
-        if len(sub):
-            rep_sub = sub.groupby(["d", "t"], sort=False)["t"].transform("size").to_numpy()
-            rep[nm] = rep_sub
-        pdf_boiler = kk.isin(PDF_BOILER_KINDS).to_numpy() | (
-            (rep >= REPEAT_MIN_COUNT) & (words <= REPEAT_MAX_WORDS)
-        )
-        keep |= mp & (is_media | ~pdf_boiler)
-
-    keep &= row_flavor != _FAILED
-
-    # ---- hyphen merge over kept non-media rows (SPEC §3.2)
-    kept = f[keep].copy()
-    kept["is_media"] = is_media[keep]
-    kept["flavor"] = row_flavor[keep]
-    # carry per-row word counts forward: only merged rows (rare) need a
-    # recount, so the second full _count_words pass disappears
-    kept["w"] = words[keep]
-    textrows = kept[~kept["is_media"]].copy()
-
-    if len(textrows):
-        kvals = textrows["k"].to_numpy()
-        dvals = textrows["d"].to_numpy()
-        is_body = kvals == "body"
-        body_pdf = is_body & (textrows["flavor"].to_numpy() == _PDF)
-        hyph = np.zeros(len(textrows), dtype=bool)
-        if body_pdf.any():
-            hyph[body_pdf] = _ends_hyphen(textrows["t"].to_numpy()[body_pdf])
-        # prev-row hyphen within the same doc (rows are (d, o)-sorted)
-        prev_hyph = np.empty(len(textrows), dtype=bool)
-        prev_hyph[0] = False
-        prev_hyph[1:] = hyph[:-1] & (dvals[1:] == dvals[:-1])
-        joins = prev_hyph & is_body
-        gid = np.cumsum(~joins)
-        textrows["gid"] = gid
-
-        if joins.any():
-            is_last = np.empty(len(textrows), dtype=bool)
-            is_last[:-1] = ~joins[1:]
-            is_last[-1] = True
-            is_first = ~joins
-            piece = textrows["t"].copy()
-            m_mid = ~is_first & ~is_last
-            m_head = is_first & ~is_last
-            m_tail = ~is_first & is_last
-            piece[m_mid] = textrows["t"][m_mid].str.strip().str.slice(0, -1)
-            piece[m_head] = textrows["t"][m_head].str.rstrip().str.slice(0, -1)
-            piece[m_tail] = textrows["t"][m_tail].str.lstrip()
-            textrows["t"] = piece
-            # collapse multi-piece groups (rare): python join over small subset
-            sizes = np.bincount(gid)[gid]
-            multi = sizes > 1
-            if multi.any():
-                sub = textrows[multi]
-                agg = sub.groupby("gid").agg(
-                    d=("d", "first"), k=("k", "first"), t=("t", "".join),
-                    r=("r", "first"), o=("o", "first"), pg=("pg", "first"),
-                    b=("b", "first"),  # merged block inherits piece 1's bbox
-                )
-                agg["is_media"] = False
-                agg["w"] = _count_words(agg["t"].to_numpy())
-                cols = ["d", "k", "t", "r", "o", "is_media", "w", "pg", "b"]
-                textrows = pd.concat([textrows[~multi][cols], agg[cols]])
-
-    _COLS = ["d", "k", "t", "r", "o", "is_media", "w", "pg", "b"]
-    final = pd.concat(
-        [textrows[_COLS], kept[kept["is_media"]][_COLS]]
-    ).sort_values(["d", "o"], kind="stable")
-
-    # ---- per-doc assembly
-    fd = final["d"].to_numpy()
-    cnts = np.bincount(fd, minlength=n)
-    cuts = np.cumsum(cnts)[:-1]
-    k_out = np.split(final["k"].to_numpy(), cuts)
-    t_out = np.split(final["t"].to_numpy(), cuts)
-    r_out = np.split(final["r"].to_numpy(), cuts)
-    b_out = np.split(final["b"].to_numpy(), cuts)
-    p_out = np.split(final["pg"].to_numpy().astype(np.int32), cuts)
-    orders = np.split(
-        (np.arange(len(final)) - np.repeat(np.concatenate([[0], np.cumsum(cnts)[:-1]]), cnts)).astype(np.int32),
-        cuts,
-    )
-
-    nonmedia_final = ~final["is_media"].to_numpy()
-    w_final = final["w"].to_numpy()
-    c_final = _str_len(final["t"].to_numpy())
-    word_count = np.bincount(fd[nonmedia_final], weights=w_final[nonmedia_final], minlength=n).astype(np.int64)
-    n_text = np.bincount(fd[nonmedia_final], minlength=n)
-    char_count = (
-        np.bincount(fd[nonmedia_final], weights=c_final[nonmedia_final], minlength=n).astype(np.int64)
-        + np.maximum(n_text - 1, 0)
-    )
-    has_img = np.bincount(fd[(final["k"] == "image").to_numpy()], minlength=n) > 0
-    has_tab = np.bincount(fd[(final["k"] == "table").to_numpy()], minlength=n) > 0
-
-    status = np.where(flavor == _FAILED, "failed", "completed")
-    err = [errors.get(i) for i in range(n)]
-    # failed docs: force empty output + zero counters
-    for i in np.nonzero(flavor == _FAILED)[0]:
-        k_out[i] = np.array([], dtype=object)
-        t_out[i] = np.array([], dtype=object)
-        r_out[i] = np.array([], dtype=object)
-        b_out[i] = np.array([], dtype=object)
-        orders[i] = np.array([], dtype=np.int32)
-        p_out[i] = np.array([], dtype=np.int32)
-    word_count[flavor == _FAILED] = 0
-    char_count[flavor == _FAILED] = 0
-    page_count[flavor == _FAILED] = 0
-    has_img[flavor == _FAILED] = False
-    has_tab[flavor == _FAILED] = False
-
-    return pd.DataFrame(
-        {
-            "kinds": k_out,
-            "texts": t_out,
-            "media_refs": r_out,
-            "orders": orders,
-            "page_nos": p_out,
-            "bboxes": b_out,
-            "status": status,
-            "error": err,
-            "word_count": word_count,
-            "char_count": char_count,
-            "page_count": page_count,
-            "has_images": has_img,
-            "has_tables": has_tab,
-        }
-    )
-
-
-@F.pandas_udf(KERNEL_RESULT_STRUCT)
-def _extract_kernel(
-    kinds_s: pd.Series,
-    texts_s: pd.Series,
-    refs_s: pd.Series,
-    offs_s: pd.Series,
-    bbox_s: pd.Series,
-) -> pd.DataFrame:
-    return extract_batch(kinds_s, texts_s, refs_s, offs_s, bbox_s)
 
 
 def extract(df: DataFrame) -> DataFrame:
@@ -457,60 +122,27 @@ def extract(df: DataFrame) -> DataFrame:
     if missing or not isinstance(spans_type, T.ArrayType):
         raise ValueError(f"extract(): spans struct missing fields {sorted(missing)}")
 
-    if pa is not None:
-        # Arrow-native path: spans stay Arrow buffers end to end (no
-        # Python string materialization at the UDF boundary, which is
-        # ~75% of the pandas_udf route's wall time)
-        from .extract_arrow import OUT_SPARK_SCHEMA, extract_map_in_arrow
-
-        res = df.select("doc_id", "spans").mapInArrow(
-            extract_map_in_arrow, schema=OUT_SPARK_SCHEMA
-        )
-        r = {name: F.col(name) for name in (
-            "kinds", "texts", "media_refs", "orders", "page_nos", "bboxes",
-            "status", "error",
-            "word_count", "char_count", "page_count", "has_images", "has_tables",
-        )}
-    else:  # pragma: no cover - pyarrow ships with pyspark
-        bbox_col = (
-            F.col("spans.bbox")
-            if "bbox" in fields
-            else F.expr("transform(spans, x -> CAST(NULL AS array<double>))")
-        )
-        res = df.select(
-            "doc_id",
-            _extract_kernel(
-                F.col("spans.kind"),
-                F.col("spans.text"),
-                F.col("spans.media_ref"),
-                F.col("spans.offset"),
-                bbox_col,
-            ).alias("rr"),
-        ).select("doc_id", "rr.*")
-        r = {name: F.col(name) for name in (
-            "kinds", "texts", "media_refs", "orders", "page_nos", "bboxes",
-            "status", "error",
-            "word_count", "char_count", "page_count", "has_images", "has_tables",
-        )}
-
+    res = df.select("doc_id", "spans").mapInArrow(
+        extract_map_in_arrow, schema=OUT_SPARK_SCHEMA
+    )
     spans = F.arrays_zip(
-        r["kinds"].alias("kind"),
-        r["texts"].alias("text"),
-        r["media_refs"].alias("media_ref"),
-        r["orders"].alias("order"),
+        F.col("kinds").alias("kind"),
+        F.col("texts").alias("text"),
+        F.col("media_refs").alias("media_ref"),
+        F.col("orders").alias("order"),
     ).alias("spans")
     metadata = (
         F.when(
-            r["status"] == "failed",
-            F.create_map(F.lit("error"), r["error"]),
+            F.col("status") == "failed",
+            F.create_map(F.lit("error"), F.col("error")),
         )
         .otherwise(
             F.create_map(
-                F.lit("word_count"), r["word_count"].cast("string"),
-                F.lit("char_count"), r["char_count"].cast("string"),
-                F.lit("page_count"), r["page_count"].cast("string"),
-                F.lit("has_images"), F.when(r["has_images"], "true").otherwise("false"),
-                F.lit("has_tables"), F.when(r["has_tables"], "true").otherwise("false"),
+                F.lit("word_count"), F.col("word_count").cast("string"),
+                F.lit("char_count"), F.col("char_count").cast("string"),
+                F.lit("page_count"), F.col("page_count").cast("string"),
+                F.lit("has_images"), F.when(F.col("has_images"), "true").otherwise("false"),
+                F.lit("has_tables"), F.when(F.col("has_tables"), "true").otherwise("false"),
             )
         )
         .alias("metadata")
@@ -520,7 +152,7 @@ def extract(df: DataFrame) -> DataFrame:
     # north-rule equality invariant is pinned on (kind, text, media_ref,
     # order) and must not change shape
     return res.select(
-        "doc_id", spans, r["status"].alias("status"), metadata,
-        r["page_nos"].alias("span_pages"),
-        r["bboxes"].alias("span_bboxes"),
+        "doc_id", spans, "status", metadata,
+        F.col("page_nos").alias("span_pages"),
+        F.col("bboxes").alias("span_bboxes"),
     )

@@ -1,26 +1,26 @@
 """Arrow-native extraction kernel (U1-U3) for `mapInArrow`.
 
-Semantics are identical to the reference pandas kernel in extract.py
-(`extract_batch`, the SPEC.md implementation the pytest suite pins); this
-path removes the dominant cost of the pandas_udf route: materializing
-~4 Python-string objects per span at the Arrow->pandas boundary (measured
-~75% of end-to-end extraction wall time at sf0.1). Here every span column
-stays an Arrow buffer end to end:
+The one engine implementation of SPEC.md; the independent per-document
+reference is oracle/extract.py (`extract_doc`), which the pytest suite
+compares this kernel against. Every span column stays an Arrow buffer end
+to end, so no Python-string object is materialized per span at the
+JVM->Python boundary (when spans crossed as pandas objects, that
+materialization measured ~75% of end-to-end extraction wall time at
+sf0.1):
 
 - list offsets/value_lengths give the per-doc layout (no np.concatenate
   of object arrays),
 - span kinds are dictionary-encoded once; every kind-set test becomes a
-  small lookup table applied to integer codes (the precedence loop runs
-  over the <=20 distinct kinds, guaranteeing identical rule ordering to
-  the pandas kernel),
+  small lookup table applied to integer codes (built by one loop over the
+  <=20 distinct kinds),
 - word counts run byte-level on the UTF-8 buffer (extract._count_words),
 - selection/reordering is one `pc.take` per output column,
 - only hyphen-merge groups (rare) touch Python strings, on exactly the
   affected rows.
 
-Reference behavior anchors (derived, not copied):
-/root/reference/app/services/docling_service.py:53-91 (failure rows),
-:253-279 (reading order), :207-208 (media flags).
+Reference behavior anchors (derived, not copied): reference
+app/services/docling_service.py:53-91 (failure rows), :253-279 (reading
+order), :207-208 (media flags).
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..spec import (
     ALL_KINDS,
@@ -64,20 +65,16 @@ OUT_SCHEMA = pa.schema(
     ]
 )
 
-OUT_SPARK_SCHEMA = (
-    "doc_id string, kinds array<string>, texts array<string>, "
-    "media_refs array<string>, orders array<int>, page_nos array<int>, "
-    "bboxes array<array<double>>, "
-    "status string, error string, word_count long, char_count long, "
-    "page_count long, has_images boolean, has_tables boolean"
-)
+# the same output format as a Spark schema, for mapInArrow(schema=...)
+OUT_SPARK_SCHEMA = from_arrow_schema(OUT_SCHEMA)
 
 _BBOX_T = pa.list_(pa.float64())
 
 
 def _kind_luts(dictionary: list[str]):
-    """Per-distinct-kind classification, replicating the pandas kernel's
-    assignment ORDER over sets (later assignments win)."""
+    """Per-distinct-kind classification lookup tables. The HTML prior
+    sets are disjoint, so each kind gets exactly the label the oracle's
+    `_classify_html` if/elif chain gives it."""
     m = len(dictionary)
     is_media = np.zeros(m, dtype=bool)
     is_html = np.zeros(m, dtype=bool)
@@ -111,6 +108,15 @@ def _kind_luts(dictionary: list[str]):
         is_media, is_html, is_pdf, is_known, html_lab, pdf_boiler,
         is_body, is_image, is_table, is_pageno,
     )
+
+
+def _ends_hyphen(values: pa.Array) -> np.ndarray:
+    """rstrip(text) ends with '-' and has length > 1 — hyphen-continuation
+    test (SPEC §3.2), vectorized in Arrow for the PDF-body subset."""
+    rt = pc.utf8_rtrim_whitespace(values)
+    return pc.and_(
+        pc.greater(pc.utf8_length(rt), 1), pc.ends_with(rt, pattern="-")
+    ).to_numpy(zero_copy_only=False)
 
 
 def _nearest_decided(lab: np.ndarray, decided: np.ndarray, d: np.ndarray):
@@ -177,15 +183,14 @@ def _empty_output(doc_id: pa.Array) -> pa.RecordBatch:
 
 
 def extract_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
-    from .extract import _count_words, _ends_hyphen
+    # looked up per call so the counter can be swapped at module level
+    from .extract import _count_words
 
     n = batch.num_rows
     doc_id = batch.column(0)
     if n == 0:
         return _empty_output(doc_id)
     spans = batch.column(1)
-    if isinstance(spans, pa.ChunkedArray):  # pragma: no cover - RecordBatch cols are flat
-        spans = spans.combine_chunks()
 
     lens = np.asarray(spans.value_lengths().fill_null(0), dtype=np.int64)
     total = int(lens.sum())
@@ -397,14 +402,10 @@ def extract_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     # through `orig` and leaves synthetic positions (>= total) alone
     omap = orig if orig is not None else np.arange(total, dtype=np.int64)
     if n_syn:
-        ext_k = pa.concat_arrays([karr.combine_chunks() if isinstance(karr, pa.ChunkedArray) else karr,
-                                  pa.array(syn_kinds, type=pa.string())])
-        ext_t = pa.concat_arrays([tarr.combine_chunks() if isinstance(tarr, pa.ChunkedArray) else tarr,
-                                  pa.array(syn_texts, type=pa.string())])
-        ext_r = pa.concat_arrays([rarr.combine_chunks() if isinstance(rarr, pa.ChunkedArray) else rarr,
-                                  pa.array(syn_refs, type=pa.string())])
-        ext_b = pa.concat_arrays([barr.combine_chunks() if isinstance(barr, pa.ChunkedArray) else barr,
-                                  pa.array(syn_bb, type=_BBOX_T)])
+        ext_k = pa.concat_arrays([karr, pa.array(syn_kinds, type=pa.string())])
+        ext_t = pa.concat_arrays([tarr, pa.array(syn_texts, type=pa.string())])
+        ext_r = pa.concat_arrays([rarr, pa.array(syn_refs, type=pa.string())])
+        ext_b = pa.concat_arrays([barr, pa.array(syn_bb, type=_BBOX_T)])
         omap = np.concatenate([omap, np.arange(total, total + n_syn)])
         fin_idx = np.concatenate([base_pos, np.arange(total, total + n_syn)])
         fin_d = np.concatenate([d[base_pos], np.array(syn_d, dtype=np.int64)])

@@ -220,16 +220,14 @@ class ExtractionPipeline:
         }
 
     @staticmethod
-    def _content_key(df: DataFrame, columns: list) -> str:
-        """Order-independent content fingerprint of `df` projected onto
-        `columns` (the INPUT's column order — xxhash64 over a struct is
-        field-order-sensitive, so both sides of a comparison must hash
-        the same ordering): row count + sum of per-row xxhash64.
-        Deterministic across sessions, partitionings, and row orders."""
+    def _content_key(df: DataFrame) -> str:
+        """Order-independent content fingerprint of `df`: row count + sum
+        of per-row xxhash64. Deterministic across sessions,
+        partitionings, and row orders."""
         agg = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
-                F.xxhash64(F.struct(*columns)).cast("decimal(38,0)")
+                F.xxhash64(F.struct(*df.columns)).cast("decimal(38,0)")
             ).alias("h"),
         ).first()
         return f"content:{agg['n']}:{agg['h']}"
@@ -283,7 +281,7 @@ class ExtractionPipeline:
             # in a fresh session — resumes. (Map-typed input columns
             # would need a to_json pre-hash; the pipeline's input
             # contract is (doc_id, spans), which xxhash64 supports.)
-            src_key = self._content_key(input_df, input_df.columns)
+            src_key = self._content_key(input_df)
         # marker + wipe go through the Hadoop FS so staging works under
         # any --output scheme (open()/shutil only resolve local paths;
         # on hdfs://s3a:// they would either fail or silently restage)
@@ -307,27 +305,6 @@ class ExtractionPipeline:
             write_text_file(self.spark, marker, layout)
             staged_layout = layout
         staged_layout = staged_layout.strip()
-        if (
-            staged_layout != layout
-            and staged_layout.startswith(f"{self.n_partitions} plan:")
-            and src_key.startswith("content:")
-        ):
-            # Migration from the pre-content-key format: markers written
-            # by the earlier version recorded Spark's semanticHash, which
-            # is unstable for re-created in-memory inputs (the reason the
-            # key changed) — a layout mismatch here says nothing about
-            # whether the staged ROWS match this input. Re-verify by
-            # content: fingerprint the staged rows themselves (one extra
-            # scan, paid only on a legacy marker) and, on a match,
-            # rewrite the marker so committed batches resume instead of
-            # being stranded behind a key-format change. A genuine
-            # different-input mismatch still falls through to the raise.
-            staged_df = self.spark.read.option("basePath", self.staged_dir).parquet(
-                self.staged_dir
-            )
-            if self._content_key(staged_df, input_df.columns) == src_key:
-                write_text_file(self.spark, marker, layout)
-                staged_layout = layout
         if staged_layout != layout:
             raise ValueError(
                 f"staged layout at {self.staged_dir} was bucketed for "

@@ -53,30 +53,6 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-# Field-wise (column-per-field) result of the extraction kernel, before
-# arrays_zip re-assembly — this is what crosses the Arrow boundary.
-KERNEL_RESULT_STRUCT = T.StructType(
-    [
-        T.StructField("kinds", T.ArrayType(T.StringType(), False), False),
-        T.StructField("texts", T.ArrayType(T.StringType(), False), False),
-        T.StructField("media_refs", T.ArrayType(T.StringType(), False), False),
-        T.StructField("orders", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("page_nos", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField(
-            "bboxes",
-            T.ArrayType(T.ArrayType(T.DoubleType(), containsNull=False), containsNull=True),
-            False,
-        ),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("word_count", T.LongType(), False),
-        T.StructField("char_count", T.LongType(), False),
-        T.StructField("page_count", T.LongType(), False),
-        T.StructField("has_images", T.BooleanType(), False),
-        T.StructField("has_tables", T.BooleanType(), False),
-    ]
-)
-
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

@@ -3,8 +3,10 @@ local in-process HTTP server — no external network. Covers the reference
 download_from_url contract (file_utils.py:46-101): chunked download,
 Content-Length pre-abort, in-flight size abort with partial cleanup,
 Content-Disposition / URL-basename / fallback naming, md5-prefixed landing
-names, and error-rows-not-exceptions. The final test closes the S2 loop:
-fetched files are picked up by the S1/S3 binaryfile_ingest scan."""
+names, and error-rows-not-exceptions; plus the untrusted-input guards:
+non-http(s) schemes and path-bearing Content-Disposition filenames. The
+final test closes the S2 loop: fetched files are picked up by the S1/S3
+binaryfile_ingest scan."""
 
 from __future__ import annotations
 
@@ -84,6 +86,30 @@ def test_filename_fallbacks():
     assert filename_from_headers(None, "http://h/a/b/c.txt?x=1#frag") == "c.txt"
     assert filename_from_headers(None, "http://h/a/dir/") == "dir"
     assert filename_from_headers('inline; filename="n.pdf"', "http://h/x") == "n.pdf"
+
+
+def test_non_http_scheme_is_error_row(tmp_path):
+    secret = tmp_path / "secret.txt"
+    secret.write_text("local file")
+    landing = tmp_path / "landing"
+    row = fetch_one(secret.as_uri(), str(landing))
+    assert row["path"] is None and row["n_bytes"] == 0
+    assert "unsupported URL scheme 'file'" in row["error"]
+    assert os.listdir(landing) == []  # nothing landed
+
+
+def test_content_disposition_cannot_escape_landing_dir(server, tmp_path):
+    assert filename_from_headers('attachment; filename="../x"', "http://h/y") == "x"
+    assert filename_from_headers('attachment; filename="/etc/x"', "http://h/y") == "x"
+    assert filename_from_headers('attachment; filename="a\x00b\nc"', "http://h/y") == "abc"
+    assert filename_from_headers('attachment; filename="dir/"', "http://h/y") == "y"
+    _Handler.ROUTES["/esc"] = {"body": b"data", "disposition": 'attachment; filename="../x"'}
+    landing = tmp_path / "landing"
+    row = fetch_one(f"{server}/esc", str(landing))
+    assert row["error"] is None
+    assert os.path.dirname(row["path"]) == str(landing)
+    assert os.path.basename(row["path"]).endswith("_x")
+    assert sorted(os.listdir(tmp_path)) == ["landing"]
 
 
 def test_content_length_preabort(server, tmp_path):

@@ -190,33 +190,23 @@ def test_staged_rejects_different_inmemory_input(spark, tmp_path, input_df):
     assert p3.run(recreated)["batches"] == 0
 
 
-def test_staged_legacy_plan_marker_migrates(spark, tmp_path, input_df):
-    """Staging dirs written by the pre-content-key version carry a
-    'plan:<semanticHash>' marker. A key-format change must not strand
-    their committed batches: on a legacy marker the pipeline re-verifies
-    the staged ROWS against the input's content fingerprint and rewrites
-    the marker in place (matching input), while a genuinely different
-    input still raises."""
+def test_staged_legacy_plan_marker_rejected(spark, tmp_path, input_df):
+    """A 'plan:<semanticHash>' marker (the key format before content
+    fingerprints) is a layout mismatch like any other: the run refuses
+    loudly, even for the input that was staged, and leaves the marker
+    as it found it — stale staging is never silently reused."""
     p = ExtractionPipeline(
         spark, str(tmp_path / "lg"), n_partitions=N_PARTS, batch_size=BATCH,
         stage_input=True,
     )
     p.run(input_df)
     marker = tmp_path / "lg" / "_staged" / "_STAGED_LAYOUT"
-    marker.write_text(f"{N_PARTS} plan:deadbeef")  # simulate the old format
-
-    other = spans_df(spark, N_DOCS // 2)
-    p_bad = ExtractionPipeline(
-        spark, str(tmp_path / "lg"), run_id="bad", n_partitions=N_PARTS,
-        batch_size=BATCH, stage_input=True,
-    )
-    with pytest.raises(ValueError, match="bucketed for"):
-        p_bad.run(other)
-    assert marker.read_text() == f"{N_PARTS} plan:deadbeef"  # untouched
+    marker.write_text(f"{N_PARTS} plan:deadbeef")
 
     p2 = ExtractionPipeline(
         spark, str(tmp_path / "lg"), n_partitions=N_PARTS, batch_size=BATCH,
         stage_input=True,
     )
-    assert p2.run(input_df)["batches"] == 0  # resumed, not restaged
-    assert marker.read_text().startswith(f"{N_PARTS} content:")  # migrated
+    with pytest.raises(ValueError, match=f"bucketed for '{N_PARTS} plan:deadbeef'"):
+        p2.run(input_df)
+    assert marker.read_text() == f"{N_PARTS} plan:deadbeef"  # untouched

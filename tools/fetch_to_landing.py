@@ -13,8 +13,12 @@ job only ever scans storage. Per-URL contract kept from the reference:
 - size guard BEFORE the body via Content-Length when the server sends
   one, and IN-FLIGHT while streaming (a lying/absent Content-Length still
   aborts at max_bytes and removes the partial file);
-- filename from the Content-Disposition header when present, else the
-  URL path basename, else "downloaded_file";
+- only http/https URLs are fetched; any other scheme (file://, ftp://,
+  data:) is an error row and writes nothing;
+- filename from the Content-Disposition header when present (reduced to
+  its basename, control characters stripped, so a header can never
+  name a path outside the landing dir), else the URL path basename,
+  else "downloaded_file";
 - landing name "url_download_{md5(url)[:8]}_{filename}" — the same
   hash-prefix collision guard as the upload path (S1);
 - one bad URL is an ERROR ROW in the returned manifest, never an
@@ -28,21 +32,29 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import sys
 import urllib.error
+import urllib.parse
 import urllib.request
 
 CHUNK_BYTES = 8192
 MAX_URL_FILE_BYTES = 100 * 1024 * 1024  # reference config.py:29
 URL_TIMEOUT_S = 30  # reference config.py:28
+ALLOWED_SCHEMES = ("http", "https")
+_CONTROL_CHARS = re.compile(r"[\x00-\x1f\x7f]")
 
 
 def filename_from_headers(content_disposition: str | None, url: str) -> str:
     """Reference get_filename_from_response: Content-Disposition's
-    filename= (quotes stripped) wins; else the URL path basename; else
-    the fixed fallback."""
+    filename= (quotes stripped, then reduced to its basename with control
+    characters removed — the header is untrusted) wins; else the URL
+    path basename; else the fixed fallback."""
     if content_disposition and "filename=" in content_disposition:
-        return content_disposition.split("filename=")[1].strip('"')
+        name = content_disposition.split("filename=")[1].strip('"')
+        name = os.path.basename(_CONTROL_CHARS.sub("", name))
+        if name:
+            return name
     path = url.split("?", 1)[0].split("#", 1)[0]
     base = path.rstrip("/").rsplit("/", 1)[-1]
     # scheme-only / host-only URLs leave the netloc here; treat a value
@@ -65,6 +77,9 @@ def fetch_one(
     os.makedirs(landing_dir, exist_ok=True)
     dst = part = None
     try:
+        scheme = urllib.parse.urlsplit(url).scheme
+        if scheme not in ALLOWED_SCHEMES:
+            raise ValueError(f"unsupported URL scheme {scheme!r} (http/https only)")
         req = urllib.request.Request(url, headers={"User-Agent": "fetch-to-landing/1"})
         with urllib.request.urlopen(req, timeout=timeout) as resp:
             clen = resp.headers.get("Content-Length")
