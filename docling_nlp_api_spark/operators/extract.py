@@ -22,81 +22,180 @@ app/services/docling_service.py:53-91 (convert + failure rows),
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .extract_arrow import OUT_SPARK_SCHEMA, extract_map_in_arrow
+from .extract_arrow import OUT_SPARK_SCHEMA, extract_map_in_arrow, utf8_buffers
+
+
+# Bytes per block of the whitespace scan: the block and its three scratch
+# rows (1 MiB) stay in a 2 MiB L2 cache. A multiple of 8, so that each
+# block packs into whole bytes of the bit mask.
+_BLOCK = 1 << 18
+
+_U1, _U2, _U4, _U56, _U63 = (np.uint64(k) for k in (1, 2, 4, 56, 63))
+_M1 = np.uint64(0x5555555555555555)
+_M2 = np.uint64(0x3333333333333333)
+_M4 = np.uint64(0x0F0F0F0F0F0F0F0F)
+_H01 = np.uint64(0x0101010101010101)
+
+# The 3-byte UTF-8 whitespace sequences as (b0 << 16 | b1 << 8 | b2),
+# sorted: U+1680, U+2000-200A, U+2028, U+2029, U+202F, U+205F, U+3000.
+# The 2-byte ones, U+0085 and U+00A0, are C2 85 and C2 A0.
+_WS3 = np.array(
+    [0xE19A80, *range(0xE28080, 0xE2808B), 0xE280A8, 0xE280A9, 0xE280AF, 0xE2819F, 0xE38080],
+    dtype=np.int64,
+)
+
+
+# _count_words' scratch arrays, kept per thread and grown to the largest
+# input seen: fresh multi-MB arrays on every call page-fault (~5,200 minor
+# faults, about a sixth of the counter's time, per pass over 37 MB of
+# text). Rows are 64 bytes longer than a multiple of 4 KiB: operands of
+# one ufunc at a 4 KiB-aligned distance alias in the CPU's load/store
+# tracking, which made the whole counter ~1.7x slower (Xeon, numpy 1.26).
+_scratch = threading.local()
+
+
+def _workspace(nw: int) -> tuple[np.ndarray, np.ndarray]:
+    """This thread's scratch: four uint64 rows of >= nw + 1 words (space
+    mask, word starts, a temporary, prefix counts) and three rows of
+    _BLOCK bytes (two uint8 temporaries, one bool mask)."""
+    words = getattr(_scratch, "words", None)
+    if words is None or words.shape[1] < nw + 1:
+        words = _scratch.words = np.empty((4, -(-(nw + 1) // 512) * 512 + 8), dtype=np.uint64)
+    block = getattr(_scratch, "block", None)
+    if block is None:
+        block = _scratch.block = np.empty((3, _BLOCK + 64), dtype=np.uint8)
+    return words, block
+
+
+def _popcount(x: np.ndarray, out: np.ndarray, tmp: np.ndarray) -> np.ndarray:
+    """Set bits per uint64 of `x`, into `out` (SWAR: numpy 1.26 has no
+    bitwise_count). `out` and `tmp` are scratch of x's shape."""
+    np.right_shift(x, _U1, out=tmp)
+    tmp &= _M1
+    np.subtract(x, tmp, out=out)
+    np.right_shift(out, _U2, out=tmp)
+    tmp &= _M2
+    out &= _M2
+    out += tmp
+    np.right_shift(out, _U4, out=tmp)
+    out += tmp
+    out &= _M4
+    out *= _H01
+    out >>= _U56
+    return out
+
+
+def _multibyte_space(chunk: np.ndarray, leads: np.ndarray) -> np.ndarray:
+    """Byte positions of the non-ASCII whitespace characters among the
+    UTF-8 lead bytes at `leads` (all bytes of each such character)."""
+    last = len(chunk) - 1
+    b0 = chunk[leads].astype(np.int64)
+    b1 = chunk[np.minimum(leads + 1, last)].astype(np.int64)
+    b2 = chunk[np.minimum(leads + 2, last)].astype(np.int64)
+    two = leads[(b0 == 0xC2) & ((b1 == 0x85) | (b1 == 0xA0))]
+    key = (b0 << 16) | (b1 << 8) | b2
+    three = leads[_WS3[np.searchsorted(_WS3, key).clip(max=len(_WS3) - 1)] == key]
+    return np.concatenate([two, two + 1, three, three + 1, three + 2])
 
 
 def _count_words(values) -> np.ndarray:
-    """Count \\S+ runs per element — the kernel's hottest operation.
-    Per-element re.findall and pyarrow's RE2 count_substring_regex both
-    measure ~320ms/100k spans; instead, count word *starts* directly on
-    the Arrow UTF-8 byte buffer with numpy (~10ms): a word start is a
-    non-space byte at a string start or after a space byte. Byte-level is
-    exact for ASCII whitespace; UTF-8 continuation bytes are never space
-    bytes, so multi-byte chars count as non-space — and rows that might
-    contain PYTHON whitespace beyond ASCII (\\x1c-\\x1f, Unicode spaces)
-    are recounted on a str.split() slow path below, so the result is
-    exactly the oracle's len(text.split()) for EVERY input, not just the
-    ASCII fixture alphabet. Accepts a pyarrow StringArray (zero-copy, the
-    kernel's case) or a sequence of str/None (converted once). Nulls
-    count 0."""
+    """len(s.split()) per string, exactly, for any Unicode text: the
+    kernel's word counter (MIN_CONTENT_WORDS / REPEAT_MAX_WORDS, SPEC §3,
+    and the word_count metadata). Accepts a pyarrow StringArray (read
+    zero-copy from its offsets and data buffers, the kernel's case) or a
+    sequence of str/None (converted once). Nulls count 0.
+
+    Whitespace is exactly the 29 code points for which str.isspace() is
+    true: ASCII 09-0D and 1C-20, tested as one range on the minimum of
+    two wrapping uint8 subtractions, and 19 multi-byte characters,
+    matched on their UTF-8 sequences (C2 85, C2 A0, E1 9A 80,
+    E2 80 80-8A, E2 80 A8/A9/AF, E2 81 9F, E3 80 80) at lead bytes
+    >= 0xC2 only. Every byte of such a
+    character is marked as space; UTF-8 continuation bytes of any other
+    character are non-space. One chunk.max() skips the multi-byte match
+    on ASCII-only text.
+
+    The space mask is built one _BLOCK of bytes at a time in reused,
+    cache-resident buffers (a full-size bool mask and its temporaries
+    cost more in memory traffic than the compares themselves), and packed
+    into uint64 words, little-endian bit order, so all later work runs on
+    1/64 of the bytes. A word starts at a non-space byte whose previous
+    byte is space: `prev_space & ~space` on the packed words, with the
+    carry from the previous word. The starts inside string r are a
+    difference of prefix counts at its two offsets; a prefix count is a
+    cumsum of per-word popcounts plus a masked popcount of the partial
+    word. A string whose first byte is non-space but no word start (the
+    chunk's first byte, or one after the previous string's non-space last
+    byte) gets +1. There is no per-row Python and no fallback path."""
     n = len(values)
     if n == 0:
         return np.zeros(0, dtype=np.int64)
     arr = values if isinstance(values, pa.Array) else pa.array(values, type=pa.string())
-    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-        arr.offset : arr.offset + n + 1
-    ].astype(np.int64)
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-    if offsets[-1] == offsets[0]:
+    offsets, chunk = utf8_buffers(arr)
+    size = len(chunk)
+    if size == 0:
         return np.zeros(n, dtype=np.int64)
-    chunk = data[offsets[0] : offsets[-1]]
-    offsets = offsets - offsets[0]
-    # space test via range comparisons, not a 256-entry LUT gather: the
-    # byte-indexed gather defeats SIMD and measures ~2.6x slower than
-    # three vectorized compares (39ms vs 15ms on a 15 MB chunk)
-    is_space = (chunk == 0x20) | ((chunk >= 0x09) & (chunk <= 0x0D))
-    # word start = non-space byte right after a space byte (fused shifted
-    # AND, no materialized prev_space copy), or a non-space byte at a
-    # string start — but ONLY start offsets that lie inside the buffer: a
-    # trailing empty/null string's start offset equals len(chunk), and
-    # clipping it into the buffer would mark the final byte of the
-    # PREVIOUS string as a false word start
-    # (_count_words(['ab','']) must be [1,0], not [2,0])
-    starts = np.empty(len(chunk), dtype=bool)
-    starts[0] = not is_space[0]
-    np.logical_and(~is_space[1:], is_space[:-1], out=starts[1:])
-    starts_in = offsets[:-1]
-    si = starts_in[starts_in < len(chunk)]
-    starts[si] = ~is_space[si]
-    # histogram the start positions into the per-string offset bins;
-    # ~5x cheaper than a cumsum over the whole byte buffer
-    sidx = np.nonzero(starts)[0]
-    counts = np.diff(np.searchsorted(sidx, offsets))
 
-    # Unicode parity slow path (SPEC: Python str.split() semantics). The
-    # byte test above is exact only for ASCII whitespace; Python also
-    # splits on \x1c-\x1f (FS/GS/RS/US) and the Unicode space characters,
-    # whose UTF-8 lead bytes are 0xC2 (NBSP/NEL), 0xE1 (U+1680), 0xE2
-    # (U+2000-200A/2028/2029/202F/205F) and 0xE3 (U+3000). Rows
-    # containing any trigger byte are recounted exactly with str.split()
-    # — the oracle's rule — so the kernel cannot misclassify a span (or
-    # drift word_count) on non-ASCII whitespace. The trigger over-matches
-    # (any C2/E1/E2/E3-lead char flags its row), but the fixture alphabet
-    # is ASCII, so the slow path prices only genuinely exotic rows.
-    trig = ((chunk >= 0x1C) & (chunk <= 0x1F)) | (chunk == 0xC2)
-    trig |= (chunk >= 0xE1) & (chunk <= 0xE3)
-    if trig.any():
-        rows = np.unique(
-            np.searchsorted(offsets, np.nonzero(trig)[0], side="right") - 1
-        )
-        for r in rows:
-            v = arr[int(r)].as_py()
-            counts[r] = 0 if v is None else len(v.split())
+    # packed space mask; one spare word past the end, so the offset of a
+    # trailing empty or null string (== size) indexes a real word
+    nw = size // 64 + 1
+    words, block = _workspace(nw)
+    space, starts, buf, prefix = words[0, :nw], words[1, :nw], words[2, :nw], words[3, : nw + 1]
+    space[size // 64 :] = 0
+    space_bytes = space.view(np.uint8)
+    unicode = int(chunk.max()) >= 0xC2
+    leads = []
+    for lo in range(0, size, _BLOCK):
+        b = chunk[lo : lo + _BLOCK]
+        k = len(b)
+        t1, t2, s = block[0, :k], block[1, :k], block[2, :k].view(bool)
+        np.subtract(b, 0x09, out=t1)
+        np.subtract(b, 0x1C, out=t2)
+        np.minimum(t1, t2, out=t1)  # 09-0D and 1C-20 both land on 0-4
+        np.less_equal(t1, 4, out=s)
+        space_bytes[lo // 8 : lo // 8 + (k + 7) // 8] = np.packbits(s, bitorder="little")
+        if unicode:
+            np.greater_equal(b, 0xC2, out=s)
+            p = np.flatnonzero(s)
+            if len(p):
+                leads.append(p + lo)
+    if leads:
+        pos = _multibyte_space(chunk, np.concatenate(leads))
+        if len(pos):
+            np.bitwise_or.at(space, pos >> 6, _U1 << (pos & 63).astype(np.uint64))
+
+    # word starts: non-space bytes whose previous byte is space
+    np.left_shift(space, _U1, out=starts)
+    np.right_shift(space[:-1], _U63, out=buf[1:])
+    starts[1:] |= buf[1:]
+    np.invert(space, out=buf)
+    starts &= buf
+    prefix[0] = 0
+    np.cumsum(_popcount(starts, buf, prefix[1:]), out=prefix[1:])
+
+    w = offsets >> 6
+    bit = (offsets & 63).view(np.uint64)
+    at = starts[w]
+    part = np.left_shift(_U1, bit)
+    part -= _U1
+    part &= at
+    tmp = np.empty_like(part)
+    below = _popcount(part, part, tmp)
+    below += np.take(prefix, w, out=tmp)
+    counts = np.diff(below.view(np.int64))
+    # +1 where string r starts with a non-space byte that is no word start
+    at |= np.take(space, w, out=tmp)
+    at >>= bit
+    fix = (at[:-1] & _U1) == 0
+    fix &= offsets[1:] > offsets[:-1]
+    counts += fix
     return counts
 
 

@@ -13,10 +13,18 @@ sf0.1):
 - span kinds are dictionary-encoded once; every kind-set test becomes a
   small lookup table applied to integer codes (built by one loop over the
   <=20 distinct kinds),
-- word counts run byte-level on the UTF-8 buffer (extract._count_words),
-- selection/reordering is one `pc.take` per output column,
-- only hyphen-merge groups (rare) touch Python strings, on exactly the
-  affected rows.
+- word counts are one exact, bit-packed pass over the UTF-8 data buffer
+  for all of Python's whitespace (extract._count_words), with no per-row
+  fallback,
+- only integer lanes are sorted, by one int64 (doc, offset) key; string
+  columns are copied once, by one `take` per output column,
+- string rules read only the texts they can apply to: the PDF
+  repeated-short rule dictionary-encodes only texts of <=
+  REPEAT_MAX_WORDS words, the hyphen test runs only on body texts whose
+  last byte can end an rstripped '-', and char_count uses byte lengths
+  when the output text is ASCII,
+- hyphen-merge groups are cut and joined with Arrow string kernels: no
+  Python string is built per span.
 
 Reference behavior anchors (derived, not copied): reference
 app/services/docling_service.py:53-91 (failure rows), :253-279 (reading
@@ -117,6 +125,41 @@ def _ends_hyphen(values: pa.Array) -> np.ndarray:
     return pc.and_(
         pc.greater(pc.utf8_length(rt), 1), pc.ends_with(rt, pattern="-")
     ).to_numpy(zero_copy_only=False)
+
+
+def _doc_order(d: np.ndarray, o: np.ndarray) -> np.ndarray:
+    """Stable argsort by (doc, offset), as np.lexsort((o, d)) but on one
+    int64 key: doc indices are < 2**31 and int32 offsets span < 2**32."""
+    return np.argsort((d << 32) | (o - o.min()), kind="stable")
+
+
+def utf8_buffers(values: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """A StringArray's len + 1 offsets (int64, rebased to 0) and the UTF-8
+    bytes they span, read zero-copy from its buffers through its offset."""
+    offs = np.frombuffer(values.buffers()[1], dtype=np.int32)[
+        values.offset : values.offset + len(values) + 1
+    ].astype(np.int64)
+    data = np.frombuffer(values.buffers()[2], dtype=np.uint8)[offs[0] : offs[-1]]
+    return offs - offs[0], data
+
+
+def _last_bytes(values: pa.Array, pos: np.ndarray) -> np.ndarray:
+    """Last UTF-8 byte of each string values[pos]; an empty or null string
+    reads 0x00."""
+    offs, data = utf8_buffers(values)
+    if not len(data):
+        return np.zeros(len(pos), dtype=np.uint8)
+    ends = offs[pos + 1]
+    return np.where(ends > offs[pos], data[np.maximum(ends - 1, 0)], 0)
+
+
+def _char_lengths(values: pa.Array) -> np.ndarray:
+    """Code points per string: the byte lengths when the text is all
+    ASCII (one max() over its bytes), else utf8_length."""
+    offs, data = utf8_buffers(values)
+    if not len(data) or int(data.max()) < 0x80:
+        return np.diff(offs)
+    return np.asarray(pc.utf8_length(values), dtype=np.int64)
 
 
 def _nearest_decided(lab: np.ndarray, decided: np.ndarray, d: np.ndarray):
@@ -233,7 +276,7 @@ def extract_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     # copied exactly once, at the final kept-subset take.
     same_doc = d[1:] == d[:-1]
     if np.any(same_doc & (np.diff(o) <= 0)):
-        orig = np.lexsort((o, d))
+        orig = _doc_order(d, o)
         d, o = d[orig], o[orig]
     else:
         orig = None
@@ -317,30 +360,25 @@ def extract_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
 
     mp = row_flavor == _PDF
     if mp.any():
-        nm = mp & ~is_media
+        # repeated-short rule: equal texts have equal word counts, so
+        # counting repeats among the short non-media texts alone is exact
+        # and keeps the long ones out of the dictionary encode
+        short_pos = np.nonzero(mp & ~is_media & (words <= REPEAT_MAX_WORDS))[0]
         rep = np.zeros(total, dtype=np.int64)
-        nm_pos = np.nonzero(nm)[0]
-        if len(nm_pos):
-            tcodes_arr = tarr.take(pa.array(_op(nm_pos))).dictionary_encode()
+        if len(short_pos):
+            tcodes_arr = tarr.take(pa.array(_op(short_pos))).dictionary_encode()
             tcodes = np.asarray(tcodes_arr.indices, dtype=np.int64)
-            key = d[nm_pos] * (tcodes.max() + 1) + tcodes
+            key = d[short_pos] * (tcodes.max() + 1) + tcodes
             _, inv, cnt = np.unique(key, return_inverse=True, return_counts=True)
-            rep[nm_pos] = cnt[inv]
-        pdf_boiler = pboil_l[codes] | ((rep >= REPEAT_MIN_COUNT) & (words <= REPEAT_MAX_WORDS))
+            rep[short_pos] = cnt[inv]
+        pdf_boiler = pboil_l[codes] | (rep >= REPEAT_MIN_COUNT)
         keep |= mp & (is_media | ~pdf_boiler)
 
     keep &= row_flavor != _FAILED
 
     # ---- hyphen merge over kept non-media rows (SPEC §3.2)
     tr_pos = np.nonzero(keep & ~is_media)[0]  # span-level indices, (d,o)-sorted
-    syn_kinds: list[str] = []
-    syn_texts: list[str] = []
-    syn_refs: list[str] = []
-    syn_bb: list = []
-    syn_d: list[int] = []
-    syn_o: list[int] = []
-    syn_w: list[int] = []
-    syn_pg: list[int] = []
+    n_syn = 0
     drop_from_tr = np.zeros(len(tr_pos), dtype=bool)
 
     if len(tr_pos):
@@ -348,8 +386,14 @@ def extract_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
         tr_body = body_l[codes[tr_pos]]
         body_pdf = tr_body & (row_flavor[tr_pos] == _PDF)
         hyph = np.zeros(len(tr_pos), dtype=bool)
-        if body_pdf.any():
-            hyph[body_pdf] = _ends_hyphen(tarr.take(pa.array(_op(tr_pos[body_pdf]))))
+        # only a text whose last byte is '-', ASCII space/control or part
+        # of a multi-byte character can rstrip() to a trailing '-'
+        cand = np.nonzero(body_pdf)[0]
+        if len(cand):
+            last = _last_bytes(tarr, _op(tr_pos[cand]))
+            cand = cand[(last == 0x2D) | (last <= 0x20) | (last >= 0x80)]
+        if len(cand):
+            hyph[cand] = _ends_hyphen(tarr.take(pa.array(_op(tr_pos[cand]))))
         prev_hyph = np.empty(len(tr_pos), dtype=bool)
         prev_hyph[0] = False
         prev_hyph[1:] = hyph[:-1] & (trd[1:] == trd[:-1])
@@ -359,81 +403,69 @@ def extract_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
             sizes = np.bincount(gid)[gid]
             multi = sizes > 1
             drop_from_tr = multi
-            # python path over exactly the merged rows (rare)
             mpos = tr_pos[multi]
             mgid = gid[multi]
-            mtexts = tarr.take(pa.array(_op(mpos))).to_pylist()
+            mtexts = tarr.take(pa.array(_op(mpos)))
             is_first = ~joins[multi]
             is_last = np.empty(len(mpos), dtype=bool)
             # within the multi subset, group boundaries come from gid
             is_last[:-1] = mgid[1:] != mgid[:-1]
             is_last[-1] = True
-            pieces: list[str] = []
-            start = 0
-            for i, s in enumerate(mtexts):
-                if is_first[i] and not is_last[i]:
-                    s = s.rstrip()[:-1]
-                elif not is_first[i] and not is_last[i]:
-                    s = s.strip()[:-1]
-                elif not is_first[i] and is_last[i]:
-                    s = s.lstrip()
-                pieces.append(s)
-                if is_last[i]:
-                    p0 = mpos[start]
-                    op0 = int(orig[p0]) if orig is not None else int(p0)
-                    syn_kinds.append(dictionary[codes[p0]])
-                    syn_texts.append("".join(pieces[start : i + 1]))
-                    syn_refs.append(rarr[op0].as_py())
-                    syn_bb.append(barr[op0].as_py())  # merged block: piece 1's bbox
-                    syn_d.append(int(d[p0]))
-                    syn_o.append(int(o[p0]))
-                    syn_pg.append(int(pg[p0]))
-                    start = i + 1
-            syn_w = list(_count_words(np.array(syn_texts, dtype=object)))
+            # the oracle's cuts: the first piece is rstripped and loses
+            # its hyphen, a middle piece is stripped and loses its hyphen,
+            # the last piece is lstripped; each group's pieces are joined
+            cut = pc.utf8_slice_codeunits
+            pieces = pc.if_else(
+                pa.array(is_first),
+                cut(pc.utf8_rtrim_whitespace(mtexts), 0, -1),
+                pc.if_else(
+                    pa.array(is_last),
+                    pc.utf8_ltrim_whitespace(mtexts),
+                    cut(pc.utf8_trim_whitespace(mtexts), 0, -1),
+                ),
+            )
+            groups = np.append(np.flatnonzero(is_first), len(mpos)).astype(np.int32)
+            syn_texts = pc.binary_join(pa.ListArray.from_arrays(pa.array(groups), pieces), "")
+            n_syn = len(syn_texts)
+            # a merged block keeps its first piece's kind, position,
+            # media_ref and bbox
+            p0 = mpos[is_first]
+            first = pa.array(_op(p0))
+            syn_kinds, syn_refs, syn_bb = karr.take(first), rarr.take(first), barr.take(first)
+            syn_d, syn_o, syn_pg = d[p0], o[p0], pg[p0]
+            syn_w = _count_words(syn_texts)
 
     # ---- final row set: kept singles + synthetic merged + kept media
     keep_final = keep.copy()
     keep_final[tr_pos[drop_from_tr]] = False
     base_pos = np.nonzero(keep_final)[0]
 
-    n_syn = len(syn_texts)
     # string arrays are in ORIGINAL order; synthetic rows are appended
     # after them, so the final take index maps sorted-space positions
     # through `orig` and leaves synthetic positions (>= total) alone
-    omap = orig if orig is not None else np.arange(total, dtype=np.int64)
+    take_idx = _op(base_pos)
+    fin_d, fin_w, fin_pg = d[base_pos], words[base_pos], pg[base_pos]
+    fin_media = is_media[base_pos]
+    fin_img, fin_tab = img_l[codes[base_pos]], tab_l[codes[base_pos]]
+    ext_k, ext_t, ext_r, ext_b = karr, tarr, rarr, barr
     if n_syn:
-        ext_k = pa.concat_arrays([karr, pa.array(syn_kinds, type=pa.string())])
-        ext_t = pa.concat_arrays([tarr, pa.array(syn_texts, type=pa.string())])
-        ext_r = pa.concat_arrays([rarr, pa.array(syn_refs, type=pa.string())])
-        ext_b = pa.concat_arrays([barr, pa.array(syn_bb, type=_BBOX_T)])
-        omap = np.concatenate([omap, np.arange(total, total + n_syn)])
-        fin_idx = np.concatenate([base_pos, np.arange(total, total + n_syn)])
-        fin_d = np.concatenate([d[base_pos], np.array(syn_d, dtype=np.int64)])
-        fin_o = np.concatenate([o[base_pos], np.array(syn_o, dtype=np.int64)])
-        fin_w = np.concatenate([words[base_pos], np.array(syn_w, dtype=np.int64)])
-        fin_pg = np.concatenate([pg[base_pos], np.array(syn_pg, dtype=np.int32)])
-        fin_media = np.concatenate([is_media[base_pos], np.zeros(n_syn, dtype=bool)])
-        fin_img = np.concatenate([img_l[codes[base_pos]], np.zeros(n_syn, dtype=bool)])
-        fin_tab = np.concatenate([tab_l[codes[base_pos]], np.zeros(n_syn, dtype=bool)])
-    else:
-        ext_k, ext_t, ext_r, ext_b = karr, tarr, rarr, barr
-        fin_idx = base_pos
-        fin_d, fin_o, fin_w = d[base_pos], o[base_pos], words[base_pos]
-        fin_pg = pg[base_pos]
-        fin_media = is_media[base_pos]
-        fin_img = img_l[codes[base_pos]]
-        fin_tab = tab_l[codes[base_pos]]
+        ext_k = pa.concat_arrays([karr, syn_kinds])
+        ext_t = pa.concat_arrays([tarr, syn_texts])
+        ext_r = pa.concat_arrays([rarr, syn_refs])
+        ext_b = pa.concat_arrays([barr, syn_bb])
+        # the kept rows are in (doc, offset) order; merge the synthetic
+        # rows in at their first piece's place
+        order = _doc_order(np.concatenate([fin_d, syn_d]), np.concatenate([o[base_pos], syn_o]))
+        no = np.zeros(n_syn, dtype=bool)
+        take_idx = np.concatenate([take_idx, np.arange(total, total + n_syn)])[order]
+        fin_d = np.concatenate([fin_d, syn_d])[order]
+        fin_w = np.concatenate([fin_w, syn_w])[order]
+        fin_pg = np.concatenate([fin_pg, syn_pg])[order]
+        fin_media = np.concatenate([fin_media, no])[order]
+        fin_img = np.concatenate([fin_img, no])[order]
+        fin_tab = np.concatenate([fin_tab, no])[order]
 
-    order = np.lexsort((fin_o, fin_d))
-    fin_idx = fin_idx[order]
-    fin_d = fin_d[order]
-    fin_w = fin_w[order]
-    fin_pg = fin_pg[order]
-    fin_media = fin_media[order]
-    fin_img = fin_img[order]
-    fin_tab = fin_tab[order]
-
-    take = pa.array(omap[fin_idx])
+    take = pa.array(take_idx)
     out_k = ext_k.take(take)
     out_t = ext_t.take(take)
     out_r = ext_r.take(take)
@@ -443,12 +475,12 @@ def extract_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     cnts = np.bincount(fin_d, minlength=n)
     offsets = np.zeros(n + 1, dtype=np.int32)
     np.cumsum(cnts, out=offsets[1:])
-    m = len(fin_idx)
+    m = len(take_idx)
     orders_vals = (np.arange(m, dtype=np.int64) - np.repeat(offsets[:-1].astype(np.int64), cnts)).astype(np.int32)
 
     nonmedia = ~fin_media
     word_count = np.bincount(fin_d[nonmedia], weights=fin_w[nonmedia], minlength=n).astype(np.int64)
-    c_final = np.asarray(pc.utf8_length(out_t), dtype=np.int64)
+    c_final = _char_lengths(out_t)
     n_text = np.bincount(fin_d[nonmedia], minlength=n)
     char_count = (
         np.bincount(fin_d[nonmedia], weights=c_final[nonmedia], minlength=n).astype(np.int64)

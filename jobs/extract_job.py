@@ -17,8 +17,9 @@ Cluster usage (ships the package to executors via --py-files):
     NOTE: memory MUST be sized on the submit line (--driver-memory /
     --executor-memory): under spark-submit the JVM exists before the
     session builder runs, so get_spark's spark.driver.memory config is
-    silently ignored (tools/submit_scaling_bench.py found the 1g default
-    OOMs a local[4] run at the sf0.5 tier).
+    silently ignored (the spark-submit scaling run recorded in
+    BENCH/submit_scaling.json found the 1g default OOMs a local[4] run
+    at the sf0.5 tier).
 
 Sandbox smoke (local[32], synthetic tier):
 
@@ -76,8 +77,8 @@ def main(argv: list[str] | None = None) -> int:
     t0 = time.time()
     summary = pipe.run(spans)
     # job-phase wall time (excludes JVM/session startup): the number that
-    # amortizes on a long-running cluster job, reported alongside total
-    # submit wall time by tools/submit_scaling_bench.py
+    # amortizes on a long-running cluster job; BENCH/submit_scaling.json
+    # reports it alongside total submit wall time
     summary["wall_sec"] = round(time.time() - t0, 2)
     print(json.dumps(summary))
     spark.stop()

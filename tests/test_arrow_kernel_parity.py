@@ -58,8 +58,15 @@ def kernel_metadata(got, i):
     }
 
 
-def assert_parity(ids, spans_rows, span_t=SPAN_T):
-    got = extract_record_batch(to_batch(ids, spans_rows, span_t)).to_pydict()
+def assert_parity(ids, spans_rows, span_t=SPAN_T, rows=None):
+    """Kernel output == oracle on every doc; with rows=(k, m), on docs
+    k..k+m-1 of a batch.slice(k, m), so every column the kernel reads
+    carries a non-zero Arrow offset."""
+    batch = to_batch(ids, spans_rows, span_t)
+    if rows is not None:
+        k, m = rows
+        batch, ids, spans_rows = batch.slice(k, m), ids[k : k + m], spans_rows[k : k + m]
+    got = extract_record_batch(batch).to_pydict()
     for i, did in enumerate(ids):
         # extract_doc annotates the span dicts it is given: pass copies
         exp = extract_doc(did, [dict(s) for s in spans_rows[i]])
@@ -104,6 +111,75 @@ def test_adversarial_docs():
         "caption_only": [S("caption", "cap", "", 0)],
     }
     assert_parity(list(cases), list(cases.values()))
+
+
+def _pdf(*spans):
+    """A PDF doc: (kind, text[, media_ref[, bbox]]) tuples at offsets 0, 1, ..."""
+    return [
+        {"kind": k, "text": t, "media_ref": rest[0] if rest else "",
+         "offset": i, "bbox": rest[1] if len(rest) > 1 else None}
+        for i, (k, t, *rest) in enumerate(spans)
+    ]
+
+
+# docs that pin the kernel's shortcuts on PDF text: the repeated-short
+# rule over short texts only, the last-byte prefilter of the hyphen test,
+# and the first-piece media_ref/bbox of a merged block
+PDF_EDGE_DOCS = {
+    "repeat_long_kept": _pdf(
+        *[("body", "one two three four five six seven")] * 3, ("body", "tail"),
+    ),
+    "repeat_short_dropped": _pdf(
+        *[("body", "one two three four five six")] * 3, ("body", "tail"),
+    ),
+    "repeat_mixed": _pdf(
+        ("body", "a b"), ("body", "x y z w v u t s"), ("body", "a b"),
+        ("body", "x y z w v u t s"), ("body", "a b"), ("body", "x y z w v u t s"),
+    ),
+    "hyphen_space": _pdf(("body", "li- "), ("body", "ne")),
+    "hyphen_ideographic_space": _pdf(("body", "li- \u3000"), ("body", " ne")),
+    "hyphen_info_sep": _pdf(("body", "li-\x1c"), ("body", "ne")),
+    "hyphen_nbsp": _pdf(("body", "li-\u00a0"), ("body", "ne")),
+    "en_dash_no_merge": _pdf(("body", "li\u2013"), ("body", "ne")),
+    "en_dash_space_no_merge": _pdf(("body", "li\u2013 "), ("body", "ne")),
+    "hyphen_empty_next": _pdf(("body", "ab-"), ("body", ""), ("body", "c")),
+    "hyphen_three_pieces": _pdf(
+        ("body", "  con-  "), ("body", " ti-\t"), ("body", "\u2009nued here")),
+    "hyphen_first_has_media": _pdf(
+        ("body", "mul-", "m://first", [1.0, 2.0, 3.0, 4.0]),
+        ("body", "ti", "m://second", [5.0, 6.0, 7.0, 8.0]),
+        ("image", "", "m://img", [0.0, 0.0, 1.0, 1.0]),
+        ("body", "end-", "", [9.0, 9.0, 9.0, 9.0]),
+        ("body", "less", "m://x", None),
+    ),
+    "unicode_text": _pdf(
+        ("body", "caf\u00e9 \u201cquoted\u201d\u00a0text"), ("body", "\u4e2d\u6587 words"),
+        ("body", "\u201cq\u201d"), ("body", "\u201cq\u201d"), ("body", "\u201cq\u201d"),
+    ),
+}
+
+
+def test_pdf_edge_docs():
+    assert_parity(list(PDF_EDGE_DOCS), list(PDF_EDGE_DOCS.values()))
+
+
+def test_pdf_edge_docs_sliced():
+    """The same docs between generated ones, through batch.slice(k, m):
+    every buffer read must honour the arrays' offsets."""
+    ids, rows = [], []
+    for num in range(6):
+        did, sp = gen_doc(num)
+        ids.append(did)
+        rows.append(list(sp))
+    ids += list(PDF_EDGE_DOCS)
+    rows += list(PDF_EDGE_DOCS.values())
+    for num in range(6, 9):
+        did, sp = gen_doc(num)
+        ids.append(did)
+        rows.append(list(sp))
+    edge = len(PDF_EDGE_DOCS)
+    for k, m in [(6, edge), (3, edge + 4), (7, edge - 2), (1, len(ids) - 2)]:
+        assert_parity(ids, rows, rows=(k, m))
 
 
 def test_empty_batch():

@@ -12,7 +12,7 @@ for them the question is purely whether the r2 wall-times were
 noisy-neighbor windows (documented up to 25x on this VM), so they are
 re-measured interleaved with a stable control (q1).
 
-Protocol (the scaling_bench pattern): every round runs each item once,
+Protocol (as for BENCH/scaling.json): every round runs each item once,
 rounds alternate item order, best-of over all rounds wins; `--update`
 merges additional rounds from a later time window into
 BENCH/regress_ab.json so no conclusion rests on one window.
