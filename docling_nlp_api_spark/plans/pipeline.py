@@ -10,25 +10,23 @@ sandbox — same commit protocol):
                                              committed_at)
     <out>/_metrics/*.parquet                per-partition docs/spans/wall_sec
     <out>/_staged/part_id=K/*.parquet       optional (stage_input=True): the
-                                            input restaged by part_id so
+                                            input restaged by part_id, so
                                             batch/resume scans prune to
-                                            pending partitions (the flat-
-                                            parquet stand-in for an Iceberg
-                                            source bucketed on doc_id)
+                                            pending partitions (Iceberg
+                                            bucket(N, doc_id) stand-in)
 
 Commit protocol (mirrors Iceberg MERGE semantics with plain files):
 1. pending = all partition ids LEFT ANTI JOIN committed checkpoint rows
-2. per batch of partitions: dynamic-partition-overwrite the output dirs
-   (idempotent on re-run of an uncommitted partition), then append
-   checkpoint + metrics rows.
+2. per batch: (a) one write query overwrites the batch's output dirs
+   (dynamic partition overwrite, idempotent on re-run) and observes the
+   docs/spans in and out per partition; (b) append checkpoint, then metrics.
 3. a crash between (2a) and (2b) re-processes that batch only; committed
    partitions are never touched again -> no double-counted metrics.
 
 Skew (mega-docs): docs with size(spans) > MEGA_SPAN_THRESHOLD are routed
 through a dedicated pass that spreads one doc per task; the Arrow batch cap
 (session.py) bounds per-batch memory for the rest. At cluster scale the
-same split becomes a salted repartition — a doc is never split (span order
-is per-doc), only re-balanced.
+same split becomes a salted repartition (a doc is never split).
 
 Reference anchor: the reference absorbs per-document failures into data
 rather than failing the request (docling_service.py:82-91); this pipeline
@@ -42,9 +40,11 @@ import time
 import uuid
 from datetime import datetime, timezone
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..schema import CHECKPOINT_SCHEMA, METRICS_SCHEMA
 from ..spec import MEGA_SPAN_THRESHOLD
@@ -119,73 +119,61 @@ class ExtractionPipeline:
                 F.pmod(F.xxhash64("doc_id"), F.lit(self.n_partitions)).cast("int"),
             )
 
-        pending = self.pending_partitions()
+        committed = self.committed_partitions()
+        pending = sorted(set(range(self.n_partitions)) - committed)
         batches = [
             pending[i : i + self.batch_size] for i in range(0, len(pending), self.batch_size)
         ]
         done = 0
         total_docs = 0
-        for bi, batch in enumerate(batches):
+        write_s: list[float] = []
+        commit_s: list[float] = []
+        for batch in batches:
             t0 = time.time()
             started_at = datetime.now(timezone.utc).replace(tzinfo=None)
             chunk = src.filter(F.col("part_id").isin(batch))
 
-            # skew split: mega-docs one-per-task, normal docs hash-balanced
+            # skew split: mega-docs one-per-task, normal docs hash-balanced.
+            # The per-partition counts are observed DURING the output write
+            # instead of by extra jobs over the input and the result. Every
+            # observation sits in the write's result stage, after all
+            # exchanges, where Spark merges each task's accumulator once per
+            # output partition: a retried task does not count twice. Hence
+            # one observation per input branch, right after its
+            # repartition: a node both branches shared would sit before
+            # their exchanges, in map stages whose retries re-add counts.
             is_mega = F.size("spans") > MEGA_SPAN_THRESHOLD
-            normal = chunk.filter(~is_mega)
-            mega = chunk.filter(is_mega)
+            normal, obs_n = _observed(
+                chunk.filter(~is_mega).repartition(max(len(batch) * 2, 2), "doc_id"), batch
+            )
+            mega, obs_m = _observed(chunk.filter(is_mega).repartition(8), batch)
 
             # part_id is a pure function of doc_id — recompute it on the
             # extract output instead of joining back to the input (the join
             # was a full shuffle of the extracted spans per commit batch)
             part_col = F.pmod(F.xxhash64("doc_id"), F.lit(self.n_partitions)).cast("int")
-            ext_n = extract(normal.repartition(max(len(batch) * 2, 2), "doc_id")).withColumn(
-                "part_id", part_col
+            result, obs_out = _observed(
+                extract(normal)
+                .withColumn("part_id", part_col)
+                .unionByName(extract(mega).withColumn("part_id", part_col)),
+                batch,
+                failed=True,
             )
-            ext_m = extract(mega.repartition(8)).withColumn("part_id", part_col)
-            result = ext_n.unionByName(ext_m)
-
-            # one pass: write output + collect per-partition metrics.
-            # DISK_ONLY: a commit batch of extracted docs is gigabytes at
-            # the 50x tier — deserialized in-heap caching evicts nothing
-            # fast enough and OOMs the executors (sf5 run, 16g heap);
-            # disk blocks cost one serialization the parquet write needs
-            # anyway and keep task heap for the kernel
-            result = result.persist(StorageLevel.DISK_ONLY)
-            try:
-                (
-                    result.withColumn("n_spans_out", F.size("spans"))
-                    .write.mode("overwrite")
-                    .partitionBy("part_id")
-                    .parquet(self.extracted_dir)
-                )
-                stats = {
-                    r["part_id"]: r
-                    for r in result.groupBy("part_id")
-                    .agg(
-                        F.count("*").alias("docs"),
-                        F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("failed"),
-                        F.sum(F.size("spans")).alias("spans_out"),
-                    )
-                    .collect()
-                }
-                ins = {
-                    r["part_id"]: r
-                    for r in chunk.groupBy("part_id")
-                    .agg(F.count("*").alias("docs_in"), F.sum(F.size("spans")).alias("spans_in"))
-                    .collect()
-                }
-            finally:
-                result.unpersist()
+            (
+                result.withColumn("n_spans_out", F.size("spans"))
+                .write.mode("overwrite")
+                .partitionBy("part_id")
+                .parquet(self.extracted_dir)
+            )
+            ins_n, ins_m, outs = obs_n.get, obs_m.get, obs_out.get
 
             wall = time.time() - t0
+            write_s.append(wall)
             committed_at = datetime.now(timezone.utc).replace(tzinfo=None)
             ck_rows, mt_rows = [], []
             for pid in batch:
-                s = stats.get(pid)
-                i = ins.get(pid)
-                docs_in = int(i["docs_in"]) if i else 0
-                docs_out = int(s["docs"]) if s else 0
+                docs_in = ins_n[f"docs_{pid}"] + ins_m[f"docs_{pid}"]
+                docs_out = outs[f"docs_{pid}"]
                 ck_rows.append(
                     (self.run_id, pid, "committed", docs_in, docs_out, started_at, committed_at)
                 )
@@ -195,19 +183,18 @@ class ExtractionPipeline:
                         pid,
                         docs_in,
                         docs_out,
-                        int(s["failed"]) if s else 0,
-                        int(i["spans_in"]) if i else 0,
-                        int(s["spans_out"]) if s else 0,
+                        outs[f"failed_{pid}"],
+                        ins_n[f"spans_{pid}"] + ins_m[f"spans_{pid}"],
+                        outs[f"spans_{pid}"],
                         wall / max(len(batch), 1),
                     )
                 )
                 total_docs += docs_out
-            spark.createDataFrame(ck_rows, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.ckpt_dir)
-            spark.createDataFrame(mt_rows, METRICS_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.metrics_dir)
+            t1 = time.time()
+            self._append_records(ck_rows, CHECKPOINT_SCHEMA, self.ckpt_dir)
+            self._append_records(mt_rows, METRICS_SCHEMA, self.metrics_dir)
+            commit_s.append(time.time() - t1)
+            committed |= set(batch)
             done += 1
             if fail_after_batches is not None and done >= fail_after_batches:
                 raise RuntimeError(f"injected failure after {done} batches")
@@ -215,9 +202,21 @@ class ExtractionPipeline:
         return {
             "run_id": self.run_id,
             "batches": done,
-            "partitions_done": len(self.committed_partitions()),
+            "partitions_done": len(committed),
             "docs_out": total_docs,
+            "write_s": write_s,
+            "commit_s": commit_s,
         }
+
+    def _append_records(self, rows: list[tuple], schema: StructType, path: str) -> None:
+        """Append commit records (checkpoint or metrics rows, as tuples in
+        `schema` order) as one parquet file. The rows cross to the JVM as
+        one Arrow table: a row-pickled createDataFrame of a few tuples
+        costs about a second per append."""
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+        )
+        self.spark.createDataFrame(table).coalesce(1).write.mode("append").parquet(path)
 
     @staticmethod
     def _content_key(df: DataFrame) -> str:
@@ -323,6 +322,27 @@ class ExtractionPipeline:
 
     def read_metrics(self) -> DataFrame:
         return self.spark.read.schema(METRICS_SCHEMA).parquet(self.metrics_dir)
+
+
+def _observed(
+    df: DataFrame, batch: list[int], failed: bool = False
+) -> tuple[DataFrame, Observation]:
+    """`df` with per-partition counts observed on it, for each part_id p
+    in `batch`: `docs_{p}`, `spans_{p}` (total size(spans)) and, with
+    `failed`, `failed_{p}` (status = 'failed'). sum() over no rows is
+    NULL, hence the coalesce: a batch may hold no mega-doc, and a
+    partition may hold no doc at all. Each aggregate is one SQL string,
+    so building it costs one call into the JVM."""
+    exprs = []
+    for p in batch:
+        exprs += [
+            f"count_if(part_id = {p}) AS docs_{p}",
+            f"coalesce(sum(if(part_id = {p}, size(spans), NULL)), 0) AS spans_{p}",
+        ]
+        if failed:
+            exprs.append(f"count_if(part_id = {p} AND status = 'failed') AS failed_{p}")
+    obs = Observation()
+    return df.observe(obs, *map(F.expr, exprs)), obs
 
 
 def new_run_id() -> str:

@@ -27,6 +27,10 @@ Sandbox smoke (local[32], synthetic tier):
 
 Re-running the same --run-id resumes: committed partitions are skipped via
 the checkpoint anti-join; the job is idempotent at partition granularity.
+
+Prints one JSON summary line: batches, partitions_done, docs_out, the job
+phase wall_sec, and per commit batch the measured seconds of the output
+write (`write_s`) and of the checkpoint + metrics appends (`commit_s`).
 """
 
 from __future__ import annotations
@@ -80,6 +84,8 @@ def main(argv: list[str] | None = None) -> int:
     # amortizes on a long-running cluster job; BENCH/submit_scaling.json
     # reports it alongside total submit wall time
     summary["wall_sec"] = round(time.time() - t0, 2)
+    for phase in ("write_s", "commit_s"):
+        summary[phase] = [round(x, 3) for x in summary[phase]]
     print(json.dumps(summary))
     spark.stop()
     return 0
