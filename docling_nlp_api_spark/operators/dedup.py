@@ -710,7 +710,7 @@ def _near_dup_candidates(
     table is an agg subtree the broadcast join computes at execution.
     audit=True eagerly materializes the counts (one corpus scan at BUILD
     time) and prints the oversized-bucket report driver-side — the mode
-    the scale benches run (tools/neardup_fused_bench.py); plan-only and
+    the scale benches ran (BENCH/neardup_fused.json); plan-only and
     never-executed consumers should not pay that scan, which is why it
     is opt-in."""
     from . import vecmath

@@ -9,7 +9,8 @@ Design (SPEC.md §7):
   every rule of SPEC.md as numpy / pyarrow.compute column ops: no
   per-document Python in the hot path.
 - The kernel returns field-wise arrays; ``arrays_zip`` reassembles the
-  output span structs JVM-side.
+  output span structs JVM-side (`assemble`, shared with the pipeline,
+  which feeds the kernel from its staged files instead).
 
 This module also holds the kernel's word counter, `_count_words`; the
 kernel looks it up here at call time, so it can be swapped at module
@@ -28,6 +29,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 from .extract_arrow import OUT_SPARK_SCHEMA, extract_map_in_arrow, utf8_buffers
 
@@ -199,31 +201,26 @@ def _count_words(values) -> np.ndarray:
     return counts
 
 
-def extract(df: DataFrame) -> DataFrame:
-    """documents_spans -> extracted (EXTRACTED_SCHEMA shape).
-
-    Input: (doc_id string, spans array<struct<kind,text,media_ref,offset>>).
-    Output: (doc_id, spans array<struct<kind,text,media_ref,order>>, status,
-    metadata map<string,string>).
-    """
-    import pyspark.sql.types as T
-
+def check_input_schema(schema: StructType) -> None:
+    """Raise a ValueError unless `schema` has the kernel's input columns:
+    doc_id and spans array<struct<kind,text,media_ref,offset>>."""
     try:
-        spans_type = df.schema["spans"].dataType
+        spans_type = schema["spans"].dataType
         fields = {f.name for f in spans_type.elementType.fields}  # type: ignore[union-attr]
     except (KeyError, AttributeError) as exc:
         raise ValueError(
             "extract() expects a 'spans' column of type "
             "array<struct<kind,text,media_ref,offset>>; got: "
-            f"{df.schema.simpleString()}"
+            f"{schema.simpleString()}"
         ) from exc
     missing = {"kind", "text", "media_ref", "offset"} - fields
-    if missing or not isinstance(spans_type, T.ArrayType):
+    if missing or not isinstance(spans_type, ArrayType):
         raise ValueError(f"extract(): spans struct missing fields {sorted(missing)}")
 
-    res = df.select("doc_id", "spans").mapInArrow(
-        extract_map_in_arrow, schema=OUT_SPARK_SCHEMA
-    )
+
+def assemble(kernel_out: DataFrame, *keep: str) -> DataFrame:
+    """extract()'s output rows from the kernel's field-wise columns
+    (OUT_SPARK_SCHEMA), followed by the `keep` columns of `kernel_out`."""
     spans = F.arrays_zip(
         F.col("kinds").alias("kind"),
         F.col("texts").alias("text"),
@@ -250,8 +247,22 @@ def extract(df: DataFrame) -> DataFrame:
     # bbox of spans[i]) rather than fields inside the span struct: the
     # north-rule equality invariant is pinned on (kind, text, media_ref,
     # order) and must not change shape
-    return res.select(
+    return kernel_out.select(
         "doc_id", spans, "status", metadata,
         F.col("page_nos").alias("span_pages"),
         F.col("bboxes").alias("span_bboxes"),
+        *keep,
+    )
+
+
+def extract(df: DataFrame) -> DataFrame:
+    """documents_spans -> extracted (EXTRACTED_SCHEMA shape).
+
+    Input: (doc_id string, spans array<struct<kind,text,media_ref,offset>>).
+    Output: (doc_id, spans array<struct<kind,text,media_ref,order>>, status,
+    metadata map<string,string>).
+    """
+    check_input_schema(df.schema)
+    return assemble(
+        df.select("doc_id", "spans").mapInArrow(extract_map_in_arrow, schema=OUT_SPARK_SCHEMA)
     )

@@ -4,29 +4,38 @@ metrics and exactly-once resume (north rule).
 Layout (Iceberg in production; partitioned parquet + checkpoint dir in the
 sandbox — same commit protocol):
 
+    <out>/_staged/part_id=K/*.parquet       the input, restaged once by
+                                            part_id = pmod(xxhash64(doc_id), N)
+                                            (Iceberg bucket(N, doc_id)
+                                            stand-in; _STAGED_LAYOUT marks
+                                            a committed staging)
     <out>/extracted/part_id=K/*.parquet     output, hash-partitioned by doc_id
     <out>/_checkpoints/*.parquet            (run_id, partition_id, status,
                                              rows_in, rows_out, started_at,
                                              committed_at)
     <out>/_metrics/*.parquet                per-partition docs/spans/wall_sec
-    <out>/_staged/part_id=K/*.parquet       optional (stage_input=True): the
-                                            input restaged by part_id, so
-                                            batch/resume scans prune to
-                                            pending partitions (Iceberg
-                                            bucket(N, doc_id) stand-in)
+
+Ingest: a commit batch reads only its pending partitions' staged files.
+The driver lists them through the Hadoop FS and packs them into tasks by
+bytes, with Spark's own file-scan rule (`plan_tasks`). Each task is one
+row of a tiny `spark.range`; its `mapInArrow` reads the task's files with
+pyarrow and feeds them straight to the kernel. Span data never crosses
+from the JVM to Python, and nothing is shuffled: a batch is one write job
+of one stage.
 
 Commit protocol (mirrors Iceberg MERGE semantics with plain files):
 1. pending = all partition ids LEFT ANTI JOIN committed checkpoint rows
-2. per batch: (a) one write query overwrites the batch's output dirs
+2. per batch: (a) one write job overwrites the batch's output dirs
    (dynamic partition overwrite, idempotent on re-run) and observes the
    docs/spans in and out per partition; (b) append checkpoint, then metrics.
 3. a crash between (2a) and (2b) re-processes that batch only; committed
    partitions are never touched again -> no double-counted metrics.
 
-Skew (mega-docs): docs with size(spans) > MEGA_SPAN_THRESHOLD are routed
-through a dedicated pass that spreads one doc per task; the Arrow batch cap
-(session.py) bounds per-batch memory for the rest. At cluster scale the
-same split becomes a salted repartition (a doc is never split).
+Skew (mega-docs): hashing doc_id spreads mega-docs over the part_ids, and
+no doc is ever split. A staged file larger than the split size is a task
+of its own, and extract_arrow._bounded_slices cuts every batch the kernel
+sees to a span budget, so a mega-doc bounds kernel memory by its own size
+and needs no path of its own.
 
 Reference anchor: the reference absorbs per-document failures into data
 rather than failing the request (docling_service.py:82-91); this pipeline
@@ -35,20 +44,38 @@ does the same at partition granularity and never fails the job for a doc.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import time
 import uuid
 from datetime import datetime, timezone
+from functools import partial
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructType
 
+from ..operators.extract import assemble, check_input_schema
+from ..operators.extract_arrow import OUT_SCHEMA, _bounded_slices, extract_record_batch
 from ..schema import CHECKPOINT_SCHEMA, METRICS_SCHEMA
-from ..spec import MEGA_SPAN_THRESHOLD
-from ..operators.extract import extract
+from ..session import (
+    arrow_fs,
+    fs_delete,
+    fs_exists,
+    fs_list_files,
+    read_text_file,
+    write_text_file,
+)
+
+# the kernel's output, plus each doc's part_id and input span count
+_INGEST_SCHEMA = OUT_SCHEMA.append(pa.field("part_id", pa.int32())).append(
+    pa.field("n_spans_in", pa.int32())
+)
+_INGEST_SPARK_SCHEMA = from_arrow_schema(_INGEST_SCHEMA)
 
 
 class ExtractionPipeline:
@@ -59,14 +86,12 @@ class ExtractionPipeline:
         run_id: str = "run0",
         n_partitions: int = 16,
         batch_size: int = 8,
-        stage_input: bool = False,
     ):
         self.spark = spark
         self.out_dir = out_dir
         self.run_id = run_id
         self.n_partitions = n_partitions
         self.batch_size = batch_size
-        self.stage_input = stage_input
         self.extracted_dir = os.path.join(out_dir, "extracted")
         self.ckpt_dir = os.path.join(out_dir, "_checkpoints")
         self.metrics_dir = os.path.join(out_dir, "_metrics")
@@ -75,12 +100,10 @@ class ExtractionPipeline:
     # -- checkpoint table ---------------------------------------------------
     def committed_partitions(self) -> set[int]:
         # Hadoop-FS existence check, NOT os.path.isdir: with an
-        # hdfs://s3a:// out_dir (the documented cluster invocation) the
+        # hdfs:// or s3:// out_dir (the documented cluster invocation) the
         # local check is always False, which would silently disable
         # exactly-once resume — every re-run would reprocess ALL
         # partitions and append duplicate checkpoint + metrics rows.
-        from ..session import fs_exists
-
         if not fs_exists(self.spark, self.ckpt_dir):
             return set()
         df = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.ckpt_dir)
@@ -103,21 +126,12 @@ class ExtractionPipeline:
         """Process all pending partitions in commit batches. Returns a
         summary dict. `fail_after_batches` injects a crash (tests)."""
         spark = self.spark
+        check_input_schema(input_df.schema)
+        # before any job: a scheme pyarrow cannot open fails here, not in a task
+        fs, staged_path = arrow_fs(self.staged_dir)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-        if self.stage_input:
-            src = self._staged_src(input_df)
-        else:
-            # each commit batch's `part_id IN (...)` filter below scans the
-            # WHOLE input: part_id is computed, so nothing prunes. Fine when
-            # the source table is already bucket-partitioned on doc_id
-            # (Iceberg `bucket(N, doc_id)` — the production layout, where
-            # the filter becomes partition pruning for free); for a flat
-            # source at scale, pass stage_input=True.
-            src = input_df.withColumn(
-                "part_id",
-                F.pmod(F.xxhash64("doc_id"), F.lit(self.n_partitions)).cast("int"),
-            )
+        self._stage(input_df)
+        batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
         committed = self.committed_partitions()
         pending = sorted(set(range(self.n_partitions)) - committed)
@@ -131,65 +145,45 @@ class ExtractionPipeline:
         for batch in batches:
             t0 = time.time()
             started_at = datetime.now(timezone.utc).replace(tzinfo=None)
-            chunk = src.filter(F.col("part_id").isin(batch))
-
-            # skew split: mega-docs one-per-task, normal docs hash-balanced.
-            # The per-partition counts are observed DURING the output write
-            # instead of by extra jobs over the input and the result. Every
-            # observation sits in the write's result stage, after all
-            # exchanges, where Spark merges each task's accumulator once per
-            # output partition: a retried task does not count twice. Hence
-            # one observation per input branch, right after its
-            # repartition: a node both branches shared would sit before
-            # their exchanges, in map stages whose retries re-add counts.
-            is_mega = F.size("spans") > MEGA_SPAN_THRESHOLD
-            normal, obs_n = _observed(
-                chunk.filter(~is_mega).repartition(max(len(batch) * 2, 2), "doc_id"), batch
-            )
-            mega, obs_m = _observed(chunk.filter(is_mega).repartition(8), batch)
-
-            # part_id is a pure function of doc_id — recompute it on the
-            # extract output instead of joining back to the input (the join
-            # was a full shuffle of the extracted spans per commit batch)
-            part_col = F.pmod(F.xxhash64("doc_id"), F.lit(self.n_partitions)).cast("int")
-            result, obs_out = _observed(
-                extract(normal)
-                .withColumn("part_id", part_col)
-                .unionByName(extract(mega).withColumn("part_id", part_col)),
-                batch,
-                failed=True,
-            )
-            (
-                result.withColumn("n_spans_out", F.size("spans"))
-                .write.mode("overwrite")
-                .partitionBy("part_id")
-                .parquet(self.extracted_dir)
-            )
-            ins_n, ins_m, outs = obs_n.get, obs_m.get, obs_out.get
+            tasks = self._plan_batch(batch, staged_path)
+            counts: dict[str, int] = {}
+            if tasks:
+                # The per-partition counts are observed DURING the output
+                # write. The write is one stage with no exchange, and Spark
+                # merges each task's accumulator of that result stage once
+                # per output partition: a retried task does not count twice.
+                kernel_out = spark.range(len(tasks), numPartitions=len(tasks)).mapInArrow(
+                    partial(_extract_files, fs=fs, tasks=tasks, batch_rows=batch_rows),
+                    schema=_INGEST_SPARK_SCHEMA,
+                )
+                result, obs = _observed(assemble(kernel_out, "part_id", "n_spans_in"), batch)
+                (
+                    result.drop("n_spans_in")
+                    .withColumn("n_spans_out", F.size("spans"))
+                    .write.mode("overwrite")
+                    .partitionBy("part_id")
+                    .parquet(self.extracted_dir)
+                )
+                counts = obs.get
 
             wall = time.time() - t0
             write_s.append(wall)
             committed_at = datetime.now(timezone.utc).replace(tzinfo=None)
             ck_rows, mt_rows = [], []
             for pid in batch:
-                docs_in = ins_n[f"docs_{pid}"] + ins_m[f"docs_{pid}"]
-                docs_out = outs[f"docs_{pid}"]
+                docs, failed, spans_in, spans_out = (
+                    counts.get(f"{k}_{pid}", 0) for k in ("docs", "failed", "spans_in", "spans_out")
+                )
                 ck_rows.append(
-                    (self.run_id, pid, "committed", docs_in, docs_out, started_at, committed_at)
+                    (self.run_id, pid, "committed", docs, docs, started_at, committed_at)
                 )
                 mt_rows.append(
                     (
-                        self.run_id,
-                        pid,
-                        docs_in,
-                        docs_out,
-                        outs[f"failed_{pid}"],
-                        ins_n[f"spans_{pid}"] + ins_m[f"spans_{pid}"],
-                        outs[f"spans_{pid}"],
+                        self.run_id, pid, docs, docs, failed, spans_in, spans_out,
                         wall / max(len(batch), 1),
                     )
                 )
-                total_docs += docs_out
+                total_docs += docs
             t1 = time.time()
             self._append_records(ck_rows, CHECKPOINT_SCHEMA, self.ckpt_dir)
             self._append_records(mt_rows, METRICS_SCHEMA, self.metrics_dir)
@@ -207,6 +201,25 @@ class ExtractionPipeline:
             "write_s": write_s,
             "commit_s": commit_s,
         }
+
+    def _plan_batch(self, part_ids: list[int], staged_path: str) -> list[list[tuple[str, int]]]:
+        """The staged files of `part_ids`, listed through the Hadoop FS and
+        packed into tasks of (pyarrow path, part_id) with the session's
+        file-scan settings. `staged_path` is the staging dir as
+        session.arrow_fs resolves it."""
+        files = [
+            (f"{staged_path}/part_id={k}/{name}", k, size)
+            for k in part_ids
+            for name, size in fs_list_files(self.spark, f"{self.staged_dir}/part_id={k}")
+            if name.endswith(".parquet") and not name.startswith(("_", "."))
+        ]
+        conf = self.spark._jsparkSession.sessionState().conf()
+        return plan_tasks(
+            files,
+            conf.filesMaxPartitionBytes(),
+            conf.filesOpenCostInBytes(),
+            self.spark.sparkContext.defaultParallelism,
+        )
 
     def _append_records(self, rows: list[tuple], schema: StructType, path: str) -> None:
         """Append commit records (checkpoint or metrics rows, as tuples in
@@ -232,15 +245,17 @@ class ExtractionPipeline:
         return f"content:{agg['n']}:{agg['h']}"
 
     def _staged_src(self, input_df: DataFrame) -> DataFrame:
+        """The staged input as a table, staging it first if needed."""
+        self._stage(input_df)
+        return self.spark.read.option("basePath", self.staged_dir).parquet(self.staged_dir)
+
+    def _stage(self, input_df: DataFrame) -> None:
         """One-time restage of the input PHYSICALLY partitioned by part_id
         (the sandbox stand-in for an Iceberg table bucket-partitioned on
-        doc_id). After staging, every commit batch's `part_id IN (...)`
-        filter is PARTITION PRUNING — a batch reads only its own files,
-        and a resume at 90% complete reads only the pending 10% of input
-        bytes instead of re-scanning the whole table once per remaining
-        batch. Total input read: 1 full scan (staging) + 1 partition-
-        pruned scan per batch, vs n_batches full scans unstaged
-        (BENCH/pipeline_resume_sf5.json quantifies both).
+        doc_id). After staging, a commit batch reads only its own
+        partitions' files, and a resume at 90% complete reads only the
+        pending 10% of input bytes. Total input read: 1 full scan
+        (staging), then each staged file once.
 
         Crash-safe: the staging write is atomic-by-marker — the marker
         is written only after the parquet job commits, so a crash
@@ -259,8 +274,6 @@ class ExtractionPipeline:
         than silently reused (an in-place
         rewrite of the same file paths is the one change this cannot
         see — delete _staged/ when rewriting a source in place)."""
-        import hashlib
-
         marker = os.path.join(self.staged_dir, "_STAGED_LAYOUT")
         files = input_df.inputFiles()
         if files:
@@ -284,8 +297,6 @@ class ExtractionPipeline:
         # marker + wipe go through the Hadoop FS so staging works under
         # any --output scheme (open()/shutil only resolve local paths;
         # on hdfs://s3a:// they would either fail or silently restage)
-        from ..session import fs_delete, read_text_file, write_text_file
-
         layout = f"{self.n_partitions} {src_key}"
         staged_layout = read_text_file(self.spark, marker)
         if staged_layout is None:
@@ -313,9 +324,6 @@ class ExtractionPipeline:
                 "ones) — delete the "
                 "staging or match it"
             )
-        return self.spark.read.option("basePath", self.staged_dir).parquet(
-            self.staged_dir
-        )
 
     def read_output(self) -> DataFrame:
         return self.spark.read.parquet(self.extracted_dir)
@@ -324,23 +332,71 @@ class ExtractionPipeline:
         return self.spark.read.schema(METRICS_SCHEMA).parquet(self.metrics_dir)
 
 
-def _observed(
-    df: DataFrame, batch: list[int], failed: bool = False
-) -> tuple[DataFrame, Observation]:
+def plan_tasks(
+    files: list[tuple[str, int, int]], max_bytes: int, open_cost: int, parallelism: int
+) -> list[list[tuple[str, int]]]:
+    """Pack `files`, (path, part_id, bytes) tuples, into tasks of
+    (path, part_id) by Spark's file-scan rule (FilePartition): split size
+    = min(max_bytes, max(open_cost, total / parallelism)), where the
+    total counts `open_cost` once per file; files go largest first, and
+    a task closes when the next file would take it past the split size.
+    A file is never split, so one larger than the split size is a task
+    of its own. No files plan no tasks."""
+    total = sum(size + open_cost for *_, size in files)
+    split = min(max_bytes, max(open_cost, total // parallelism))
+    tasks: list[list[tuple[str, int]]] = []
+    cur: list[tuple[str, int]] = []
+    cur_bytes = 0
+    for path, pid, size in sorted(files, key=lambda f: -f[2]):
+        if cur and cur_bytes + size > split:
+            tasks.append(cur)
+            cur, cur_bytes = [], 0
+        cur.append((path, pid))
+        cur_bytes += size + open_cost
+    if cur:
+        tasks.append(cur)
+    return tasks
+
+
+def _extract_files(batches, fs, tasks: list[list[tuple[str, int]]], batch_rows: int):
+    """mapInArrow body of a batch's write: for each task index in
+    `batches`, read the task's staged files from `fs` with pyarrow,
+    `batch_rows` docs at a time, and run the kernel on span-bounded
+    slices. Each output row carries its doc's part_id and input span
+    count (_INGEST_SCHEMA)."""
+    for ids in batches:
+        for t in ids.column(0).to_pylist():
+            for path, pid in tasks[t]:
+                with fs.open_input_file(path) as f:
+                    reader = pq.ParquetFile(f)
+                    for batch in reader.iter_batches(batch_rows, columns=["doc_id", "spans"]):
+                        for piece in _bounded_slices(batch):
+                            out = extract_record_batch(piece)
+                            yield pa.RecordBatch.from_arrays(
+                                [
+                                    *out.columns,
+                                    pa.array(np.full(out.num_rows, pid, dtype=np.int32)),
+                                    piece.column(1).value_lengths().fill_null(0),
+                                ],
+                                schema=_INGEST_SCHEMA,
+                            )
+
+
+def _observed(df: DataFrame, batch: list[int]) -> tuple[DataFrame, Observation]:
     """`df` with per-partition counts observed on it, for each part_id p
-    in `batch`: `docs_{p}`, `spans_{p}` (total size(spans)) and, with
-    `failed`, `failed_{p}` (status = 'failed'). sum() over no rows is
-    NULL, hence the coalesce: a batch may hold no mega-doc, and a
-    partition may hold no doc at all. Each aggregate is one SQL string,
-    so building it costs one call into the JVM."""
+    in `batch`: `docs_{p}`, `failed_{p}` (status = 'failed'), `spans_in_{p}`
+    (total n_spans_in) and `spans_out_{p}` (total size(spans)). sum()
+    over no rows is NULL, hence the coalesce: a partition may hold no doc
+    at all. Each aggregate is one SQL string, so building it costs one
+    call into the JVM."""
     exprs = []
     for p in batch:
         exprs += [
             f"count_if(part_id = {p}) AS docs_{p}",
-            f"coalesce(sum(if(part_id = {p}, size(spans), NULL)), 0) AS spans_{p}",
+            f"count_if(part_id = {p} AND status = 'failed') AS failed_{p}",
+            f"coalesce(sum(if(part_id = {p}, n_spans_in, NULL)), 0) AS spans_in_{p}",
+            f"coalesce(sum(if(part_id = {p}, size(spans), NULL)), 0) AS spans_out_{p}",
         ]
-        if failed:
-            exprs.append(f"count_if(part_id = {p} AND status = 'failed') AS failed_{p}")
     obs = Observation()
     return df.observe(obs, *map(F.expr, exprs)), obs
 

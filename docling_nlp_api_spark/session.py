@@ -4,7 +4,10 @@ way a 1000-executor cluster run would be (AQE, Arrow, UTC, skew join)."""
 from __future__ import annotations
 
 import os
+from urllib.parse import urlsplit
 
+import pyarrow as pa
+import pyarrow.fs as pafs
 from pyspark.sql import SparkSession
 
 
@@ -136,6 +139,31 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(jpath))
+
+
+def fs_list_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """(name, bytes) of each file directly under the directory `path`
+    (any scheme), through the Hadoop FS; [] if `path` does not exist."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return []
+    return [(st.getPath().getName(), st.getLen()) for st in fs.listStatus(jpath) if st.isFile()]
+
+
+def arrow_fs(uri: str) -> tuple[pafs.FileSystem, str]:
+    """The pyarrow filesystem and path of a Hadoop-style `uri`, for
+    reading in Python workers what Spark wrote. A path without a scheme
+    is local and made absolute here: Python workers do not share the
+    driver's working directory. A scheme pyarrow does not handle raises
+    a ValueError that names it (Hadoop's s3a:// is pyarrow's s3://)."""
+    scheme = urlsplit(uri).scheme
+    if not scheme:
+        return pafs.LocalFileSystem(), os.path.abspath(uri)
+    try:
+        return pafs.FileSystem.from_uri(uri)
+    except pa.ArrowInvalid as exc:
+        raise ValueError(f"pyarrow cannot open '{scheme}://' paths such as {uri}: {exc}") from exc
 
 
 def fs_delete(spark: SparkSession, path: str) -> None:

@@ -23,7 +23,7 @@ PDF_BOILER_KINDS = frozenset({"pageno", "runhead"})
 REPEAT_MIN_COUNT = 3   # exact text repeated >= this many times ...
 REPEAT_MAX_WORDS = 6   # ... and this short -> boilerplate
 
-MEGA_SPAN_THRESHOLD = 5000  # docs above this take the mega path (SPEC §7)
+MEGA_SPAN_THRESHOLD = 5000  # docs above this count as mega-docs (SPEC §7)
 
 FLAVOR_HTML = "html"
 FLAVOR_PDF = "pdf"

@@ -14,6 +14,12 @@ Cluster usage (ships the package to executors via --py-files):
         --run-id prod-2026-08-16 \
         --partitions 4096 --batch-size 64
 
+    The pipeline restages --input once under <output>/_staged/ by
+    hash(doc_id); every commit batch then reads only its own partitions'
+    staged files, with pyarrow, inside the extraction tasks. The output
+    root must use a scheme pyarrow opens (a local path, file://, s3://,
+    hdfs://): Hadoop's s3a:// is rejected before any job runs.
+
     NOTE: memory MUST be sized on the submit line (--driver-memory /
     --executor-memory): under spark-submit the JVM exists before the
     session builder runs, so get_spark's spark.driver.memory config is

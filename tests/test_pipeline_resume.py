@@ -63,9 +63,9 @@ def test_rerun_is_noop(spark, tmp_path, input_df):
 
 
 def test_staged_crash_resume_identical(spark, tmp_path, input_df):
-    """stage_input=True: same exactly-once/equality contract, and the
-    batch scans prune to the staged part_id dirs (the Iceberg-bucketed
-    source stand-in)."""
+    """The staged layout: same exactly-once/equality contract, and the
+    staged table prunes to its part_id dirs (the Iceberg-bucketed source
+    stand-in)."""
     ref = ExtractionPipeline(
         spark, str(tmp_path / "ref"), n_partitions=N_PARTS, batch_size=BATCH
     )
@@ -74,7 +74,6 @@ def test_staged_crash_resume_identical(spark, tmp_path, input_df):
 
     p = ExtractionPipeline(
         spark, str(tmp_path / "st"), n_partitions=N_PARTS, batch_size=BATCH,
-        stage_input=True,
     )
     with pytest.raises(RuntimeError, match="injected failure"):
         p.run(input_df, fail_after_batches=1)
@@ -111,7 +110,6 @@ def test_staged_restage_wipes_dead_attempt_orphans(spark, tmp_path, input_df):
     _staged_src wipes the dir whenever the marker is absent."""
     dead = ExtractionPipeline(
         spark, str(tmp_path / "wo"), n_partitions=N_PARTS * 2, batch_size=BATCH,
-        stage_input=True,
     )
     # simulate the crash window: staging parquet committed, marker never
     # written (the marker write is the commit point)
@@ -127,7 +125,6 @@ def test_staged_restage_wipes_dead_attempt_orphans(spark, tmp_path, input_df):
     # part_id=8..15 orphans; the wipe must remove them
     p = ExtractionPipeline(
         spark, str(tmp_path / "wo"), n_partitions=N_PARTS, batch_size=BATCH,
-        stage_input=True,
     )
     p.run(input_df)
     staged_dirs = {
@@ -145,12 +142,11 @@ def test_staged_restage_wipes_dead_attempt_orphans(spark, tmp_path, input_df):
 def test_staged_layout_mismatch_raises(spark, tmp_path, input_df):
     p = ExtractionPipeline(
         spark, str(tmp_path / "mm"), n_partitions=N_PARTS, batch_size=BATCH,
-        stage_input=True,
     )
     p.run(input_df)
     p2 = ExtractionPipeline(
         spark, str(tmp_path / "mm"), run_id="other", n_partitions=N_PARTS * 2,
-        batch_size=BATCH, stage_input=True,
+        batch_size=BATCH,
     )
     with pytest.raises(ValueError, match="bucketed for"):
         p2.run(input_df)
@@ -167,14 +163,13 @@ def test_staged_rejects_different_inmemory_input(spark, tmp_path, input_df):
     resume of an in-memory pipeline would falsely abort."""
     p = ExtractionPipeline(
         spark, str(tmp_path / "sh"), n_partitions=N_PARTS, batch_size=BATCH,
-        stage_input=True,
     )
     p.run(input_df)
 
     other = spans_df(spark, N_DOCS // 2)  # different in-memory input
     p2 = ExtractionPipeline(
         spark, str(tmp_path / "sh"), run_id="other", n_partitions=N_PARTS,
-        batch_size=BATCH, stage_input=True,
+        batch_size=BATCH,
     )
     with pytest.raises(ValueError, match="bucketed for"):
         p2.run(other)
@@ -185,7 +180,6 @@ def test_staged_rejects_different_inmemory_input(spark, tmp_path, input_df):
     recreated = spans_df(spark, N_DOCS, partitions=3)
     p3 = ExtractionPipeline(
         spark, str(tmp_path / "sh"), n_partitions=N_PARTS, batch_size=BATCH,
-        stage_input=True,
     )
     assert p3.run(recreated)["batches"] == 0
 
@@ -197,7 +191,6 @@ def test_staged_legacy_plan_marker_rejected(spark, tmp_path, input_df):
     as it found it — stale staging is never silently reused."""
     p = ExtractionPipeline(
         spark, str(tmp_path / "lg"), n_partitions=N_PARTS, batch_size=BATCH,
-        stage_input=True,
     )
     p.run(input_df)
     marker = tmp_path / "lg" / "_staged" / "_STAGED_LAYOUT"
@@ -205,7 +198,6 @@ def test_staged_legacy_plan_marker_rejected(spark, tmp_path, input_df):
 
     p2 = ExtractionPipeline(
         spark, str(tmp_path / "lg"), n_partitions=N_PARTS, batch_size=BATCH,
-        stage_input=True,
     )
     with pytest.raises(ValueError, match=f"bucketed for '{N_PARTS} plan:deadbeef'"):
         p2.run(input_df)
@@ -228,8 +220,7 @@ def _part_recount(df, n_parts):
     return {r["p"]: (r["docs"], r["failed"], r["spans"]) for r in rows}
 
 
-@pytest.mark.parametrize("stage_input", [False, True])
-def test_metrics_exact_per_partition(spark, tmp_path, stage_input):
+def test_metrics_exact_per_partition(spark, tmp_path):
     """Every _metrics and _checkpoints row equals an independent
     per-partition recount of the input and of the output. The input holds
     a mega-doc (num 997) and two unknown-kind docs (failure rows), and
@@ -249,7 +240,6 @@ def test_metrics_exact_per_partition(spark, tmp_path, stage_input):
 
     p = ExtractionPipeline(
         spark, str(tmp_path / "mx"), n_partitions=n_parts, batch_size=batch_size,
-        stage_input=stage_input,
     )
     summary = p.run(df)
     assert summary["partitions_done"] == n_parts and summary["docs_out"] == 12
@@ -356,3 +346,191 @@ def test_commit_records_match_tuple_path(spark, tmp_path):
         arrow_file, tuple_file = (glob.glob(f"{d}/*.parquet") for d in (arrow_dir, tuple_dir))
         assert len(arrow_file) == len(tuple_file) == 1
         assert pq.read_schema(arrow_file[0]).equals(pq.read_schema(tuple_file[0]), check_metadata=True)
+
+
+def _rows(df):
+    """extract()-shaped rows of `df`, sorted by doc_id, as plain values."""
+    return sorted(
+        (
+            r["doc_id"], r["status"], [tuple(s) for s in r["spans"]],
+            sorted(r["metadata"].items()), list(r["span_pages"]),
+            [None if b is None else list(b) for b in r["span_bboxes"]],
+        )
+        for r in df.select("doc_id", "spans", "status", "metadata", "span_pages", "span_bboxes")
+        .collect()
+    )
+
+
+@pytest.fixture()
+def recorded_plans(monkeypatch):
+    """Every task plan the pipeline makes, in order."""
+    from docling_nlp_api_spark.plans import pipeline
+
+    plans = []
+    plan_tasks = pipeline.plan_tasks
+
+    def recording_plan_tasks(*args):
+        plans.append(plan_tasks(*args))
+        return plans[-1]
+
+    monkeypatch.setattr(pipeline, "plan_tasks", recording_plan_tasks)
+    return plans
+
+
+def test_output_independent_of_input_layout(spark, tmp_path, recorded_plans):
+    """The same docs (with mega-doc 997 and two unknown-kind docs) written
+    as 1 file, as 7 files, and as 1 file restaged into row groups of a
+    few rows read back in 2-doc Arrow batches: every run gives the same
+    output content and the same _metrics rows."""
+    import pyarrow.parquet as pq
+
+    from docling_nlp_api_spark.schema import DOCUMENTS_SPANS_SCHEMA
+
+    bad = spark.createDataFrame(
+        [(f"bad-{i}", [("blink", "x", "", 0, None)] * (i + 1)) for i in range(2)],
+        DOCUMENTS_SPANS_SCHEMA,
+    )
+    df = spans_df(spark, 10, start=990).unionByName(bad)
+    small_groups = {
+        "parquet.block.row.count.limit": "2",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "2",
+    }
+    layouts = {"one_file": (1, {}), "seven_files": (7, {}), "small_row_groups": (1, small_groups)}
+    keys, metrics, n_tasks = {}, {}, {}
+    for name, (n_files, conf) in layouts.items():
+        src = str(tmp_path / f"in_{name}")
+        df.repartition(n_files).write.parquet(src)
+        old = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            p = ExtractionPipeline(spark, str(tmp_path / name), n_partitions=4, batch_size=2)
+            n_plans = len(recorded_plans)
+            p.run(spark.read.parquet(src))
+        finally:
+            for k, v in old.items():
+                spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+        staged = sorted((tmp_path / name / "_staged").glob("part_id=*/*.parquet"))
+        if conf:
+            assert max(pq.ParquetFile(f).num_row_groups for f in staged) > 1
+        n_tasks[name] = [len(t) for plan in recorded_plans[n_plans:] for t in plan]
+        out = p.read_output().withColumn("metadata", F.to_json("metadata"))
+        keys[name] = ExtractionPipeline._content_key(out)
+        metrics[name] = sorted(tuple(r) for r in p.read_metrics().drop("wall_sec").collect())
+    assert max(n_tasks["seven_files"]) > 1  # some task packs several files
+    assert len(set(keys.values())) == 1, keys
+    assert len({tuple(m) for m in metrics.values()}) == 1, metrics
+    assert sum(r[2] for r in metrics["one_file"]) == 12
+
+
+def test_pipeline_output_equals_extract(spark, tmp_path):
+    """Pipeline output on the kernel-parity adversarial docs and mega-doc
+    997 equals extract() on the same input, column for column."""
+    from docling_nlp_api_spark.datagen import gen_doc
+    from docling_nlp_api_spark.operators.extract import extract
+    from docling_nlp_api_spark.schema import DOCUMENTS_SPANS_SCHEMA
+
+    def S(k, t, r, o):
+        return (k, t, r, o, None)
+
+    cases = {
+        "empty": [],
+        "unknown": [S("martian", "x", "", 0), S("p", "hello world", "", 1)],
+        "all_media": [S("image", "", "m://0", 0), S("table", "a b", "m://1", 1)],
+        "all_boiler": [S("nav", "home", "", 0), S("footer", "c", "", 1)],
+        "hyphen_merge": [S("body", "li-", "", 0), S("body", " ne", "", 1), S("pageno", "3", "", 2)],
+        "hyphen_lone": [S("body", "-", "", 0), S("body", "x", "", 1)],
+        "hyphen_tail": [S("body", "end-", "", 0)],
+        "ws_only": [S("p", " ", "", 5), S("h1", "T", "", 2)],
+        "caption_only": [S("caption", "cap", "", 0)],
+    }
+    src = str(tmp_path / "in")
+    spark.createDataFrame(list(cases.items()), DOCUMENTS_SPANS_SCHEMA).unionByName(
+        spans_df(spark, 1, start=997)
+    ).write.parquet(src)
+    df = spark.read.parquet(src)
+    assert df.filter(F.col("doc_id") == gen_doc(997)[0]).count() == 1
+
+    p = ExtractionPipeline(spark, str(tmp_path / "out"), n_partitions=4, batch_size=4)
+    p.run(df)
+    out = p.read_output()
+    assert out.filter(F.col("n_spans_out") != F.size("spans")).count() == 0
+    want = _rows(extract(df))
+    assert len(want) == 10
+    assert _rows(out) == want
+
+
+def test_plan_tasks_packs_every_file_once():
+    """Every file lands in exactly one task; a task holding more than one
+    file stays within the split size, counting the open cost of each file
+    but the last (Spark's FilePartition rule); largest files go first; an
+    empty batch plans no tasks."""
+    import random
+
+    from docling_nlp_api_spark.plans.pipeline import plan_tasks
+
+    rng = random.Random(7)
+    files = [(f"f{i}", i % 5, rng.choice([1, 10, 100, 1_000, 30_000])) for i in range(60)]
+    size = {f[0]: f[2] for f in files}
+    for max_bytes, open_cost, parallelism in [(16_000, 400, 4), (10**9, 1, 3), (100, 400, 8)]:
+        tasks = plan_tasks(files, max_bytes, open_cost, parallelism)
+        split = min(max_bytes, max(open_cost, sum(s + open_cost for *_, s in files) // parallelism))
+        placed = sorted(path for t in tasks for path, _ in t)
+        assert placed == sorted(size)
+        assert all(pid == int(path[1:]) % 5 for t in tasks for path, pid in t)
+        for t in tasks:
+            packed = sum(size[path] for path, _ in t) + open_cost * (len(t) - 1)
+            assert len(t) == 1 or packed <= split, (t, split)
+        assert size[tasks[0][0][0]] == max(size.values())
+    assert plan_tasks([], 16_000, 400, 4) == []
+
+
+def test_empty_batches_commit_zero_counts(spark, tmp_path, recorded_plans):
+    """Batches whose partitions hold no doc plan no task and run no
+    write, yet commit one zero-count checkpoint and metrics row each."""
+    from docling_nlp_api_spark.schema import CHECKPOINT_SCHEMA
+
+    p = ExtractionPipeline(spark, str(tmp_path / "e"), n_partitions=8, batch_size=1)
+    p.run(spans_df(spark, 2))
+    assert [] in recorded_plans and len(recorded_plans) == 8
+    metrics = {r["partition_id"]: r for r in p.read_metrics().collect()}
+    ck = {r["partition_id"]: r for r in spark.read.schema(CHECKPOINT_SCHEMA).parquet(p.ckpt_dir).collect()}
+    assert sorted(metrics) == sorted(ck) == list(range(8))
+    for i, plan in enumerate(recorded_plans):
+        m = metrics[i]
+        if not plan:
+            assert (m["docs_in"], m["docs_out"], m["spans_in"], m["spans_out"]) == (0, 0, 0, 0)
+            assert (ck[i]["status"], ck[i]["rows_in"], ck[i]["rows_out"]) == ("committed", 0, 0)
+    assert sum(m["docs_in"] for m in metrics.values()) == 2
+
+
+def test_arrow_fs_resolves_local_and_rejects_s3a(spark, tmp_path, monkeypatch):
+    """Local paths (absolute, relative, file://) resolve to pyarrow's local
+    filesystem with an absolute path. An s3a:// output root fails on the
+    driver with a ValueError that names the scheme, before any job."""
+    import os
+
+    import pyarrow.fs as pafs
+
+    from docling_nlp_api_spark.session import arrow_fs
+
+    monkeypatch.chdir(tmp_path)
+    for uri, path in [
+        (str(tmp_path / "a"), str(tmp_path / "a")),
+        ("rel/dir", os.path.join(str(tmp_path), "rel", "dir")),
+        (f"file://{tmp_path}/b", f"{tmp_path}/b"),
+    ]:
+        fs, got = arrow_fs(uri)
+        assert isinstance(fs, pafs.LocalFileSystem) and got == path, (uri, got)
+    with pytest.raises(ValueError, match="'s3a://'"):
+        arrow_fs("s3a://bucket/out/_staged")
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "s3a-output")
+    try:
+        p = ExtractionPipeline(spark, "s3a://bucket/out", n_partitions=2, batch_size=1)
+        with pytest.raises(ValueError, match="'s3a://'"):
+            p.run(spans_df(spark, 3))
+        assert list(sc.statusTracker().getJobIdsForGroup("s3a-output")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

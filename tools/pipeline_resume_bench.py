@@ -14,19 +14,19 @@ commit batch, resume with the SAME run_id, and prove:
    directly on the same input — the crash/resume path changes nothing;
 3. proportionality: resumed wall time tracks the pending-partition
    fraction (the crash committed 1 of 4 batches, so resume does ~3/4 of
-   the work plus the per-batch input-scan overhead);
-4. staging: both stage_input modes run the identical protocol — the
-   unstaged mode scans the full input once per commit batch (correct
-   when the source is an Iceberg table bucketed on doc_id, where the
-   part_id filter prunes for free), the staged mode pays one restage
-   write up front and then every batch/resume scan partition-prunes.
+   the work). The crash phase also pays the one-time restage of the
+   input by part_id; every batch after it reads only its own
+   partitions' staged files.
 
 The small-scale correctness twin is tests/test_pipeline_resume.py; this
 tool is the evidence that the protocol HOLDS at a tier where a partition
 is gigabytes, not kilobytes.
 
 Usage: python tools/pipeline_resume_bench.py [--input .data/spans_sf5_v2]
-       [--out /tmp/pipeline_resume_sf5] [--json BENCH/pipeline_resume_sf5.json]
+       [--out /tmp/pipeline_resume_sf5] [--json BENCH/pipeline_resume_sf5_arrow.json]
+
+BENCH/pipeline_resume_sf5.json is the frozen record of the earlier
+two-layout (staged / unstaged) version of this run.
 """
 
 from __future__ import annotations
@@ -64,7 +64,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", default=".data/spans_sf5_v2")
     ap.add_argument("--out", default="/tmp/pipeline_resume_sf5")
-    ap.add_argument("--json", default="BENCH/pipeline_resume_sf5.json")
+    ap.add_argument("--json", default="BENCH/pipeline_resume_sf5_arrow.json")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -81,63 +81,43 @@ def main() -> int:
     ref_sec = round(time.time() - t0, 1)
     print(f"reference kernel checksum over {ref_n} docs in {ref_sec}s", flush=True)
 
-    def run_mode(staged: bool) -> dict:
-        out = args.out + ("_staged" if staged else "")
-        shutil.rmtree(out, ignore_errors=True)
-        pipe = ExtractionPipeline(
-            spark, out, run_id="sf5bench", n_partitions=N_PARTITIONS,
-            batch_size=BATCH_SIZE, stage_input=staged,
-        )
-        t0 = time.time()
-        crashed = False
-        try:
-            pipe.run(src, fail_after_batches=1)
-        except RuntimeError as exc:
-            crashed = True
-            print(f"[staged={staged}] injected crash: {exc}", flush=True)
-        crash_sec = round(time.time() - t0, 1)
-        committed_after_crash = sorted(pipe.committed_partitions())
-        assert crashed, "fail_after_batches did not fire"
-        assert len(committed_after_crash) == BATCH_SIZE, committed_after_crash
+    shutil.rmtree(args.out, ignore_errors=True)
+    pipe = ExtractionPipeline(
+        spark, args.out, run_id="sf5bench", n_partitions=N_PARTITIONS, batch_size=BATCH_SIZE,
+    )
+    t0 = time.time()
+    crashed = False
+    try:
+        pipe.run(src, fail_after_batches=1)
+    except RuntimeError as exc:
+        crashed = True
+        print(f"injected crash: {exc}", flush=True)
+    crash_sec = round(time.time() - t0, 1)
+    committed_after_crash = sorted(pipe.committed_partitions())
+    assert crashed, "fail_after_batches did not fire"
+    assert len(committed_after_crash) == BATCH_SIZE, committed_after_crash
 
-        t0 = time.time()
-        summary = pipe.run(src)
-        resume_sec = round(time.time() - t0, 1)
-        assert summary["partitions_done"] == N_PARTITIONS, summary
+    t0 = time.time()
+    summary = pipe.run(src)
+    resume_sec = round(time.time() - t0, 1)
+    assert summary["partitions_done"] == N_PARTITIONS, summary
 
-        # exactly-once accounting
-        m = pipe.read_metrics()
-        per_pid = m.groupBy("partition_id").agg(F.count("*").alias("k")).collect()
-        dup_pids = [r["partition_id"] for r in per_pid if r["k"] != 1]
-        assert not dup_pids, f"partitions metered more than once: {dup_pids}"
-        tot = m.agg(
-            F.sum("docs_in").alias("di"), F.sum("docs_out").alias("do"),
-            F.sum("spans_in").alias("si"), F.sum("spans_out").alias("so"),
-        ).collect()[0]
-        assert int(tot["di"]) == ref_n, (tot, ref_n)
+    # exactly-once accounting
+    m = pipe.read_metrics()
+    per_pid = m.groupBy("partition_id").agg(F.count("*").alias("k")).collect()
+    dup_pids = [r["partition_id"] for r in per_pid if r["k"] != 1]
+    assert not dup_pids, f"partitions metered more than once: {dup_pids}"
+    tot = m.agg(
+        F.sum("docs_in").alias("di"), F.sum("docs_out").alias("do"),
+        F.sum("spans_in").alias("si"), F.sum("spans_out").alias("so"),
+    ).collect()[0]
+    assert int(tot["di"]) == ref_n, (tot, ref_n)
 
-        out_sum, out_n = checksum(
-            pipe.read_output().select("doc_id", "status", "spans", "metadata")
-        )
-        assert (out_sum, out_n) == (ref_sum, ref_n), (
-            f"pipeline output != kernel output: {(out_sum, out_n)} vs {(ref_sum, ref_n)}"
-        )
-        shutil.rmtree(out, ignore_errors=True)
-        return {
-            "crash_phase_sec": crash_sec,
-            "resume_phase_sec": resume_sec,
-            "resume_to_crash_ratio": round(resume_sec / crash_sec, 2),
-            "metrics_totals": {k: int(tot[k2]) for k, k2 in
-                               [("docs_in", "di"), ("docs_out", "do"),
-                                ("spans_in", "si"), ("spans_out", "so")]},
-            "checksum_match": True,
-            "exactly_once": True,
-        }
-
-    modes = {
-        "unstaged": run_mode(False),
-        "staged": run_mode(True),
-    }
+    out_sum, out_n = checksum(pipe.read_output().select("doc_id", "status", "spans", "metadata"))
+    assert (out_sum, out_n) == (ref_sum, ref_n), (
+        f"pipeline output != kernel output: {(out_sum, out_n)} vs {(ref_sum, ref_n)}"
+    )
+    shutil.rmtree(args.out, ignore_errors=True)
     result = {
         "input": args.input,
         "n_docs": ref_n,
@@ -146,14 +126,18 @@ def main() -> int:
         "crash_after_batches": 1,
         "pending_fraction_at_resume": (N_PARTITIONS - BATCH_SIZE) / N_PARTITIONS,
         "reference_kernel_sec": ref_sec,
-        "modes": modes,
+        "crash_phase_sec": crash_sec,
+        "resume_phase_sec": resume_sec,
+        "resume_to_crash_ratio": round(resume_sec / crash_sec, 2),
+        "metrics_totals": {k: int(tot[k2]) for k, k2 in
+                           [("docs_in", "di"), ("docs_out", "do"),
+                            ("spans_in", "si"), ("spans_out", "so")]},
+        "checksum_match": True,
+        "exactly_once": True,
         "note": "crash committed 1 of 4 batches; resume re-derived pending "
         "partitions from the checkpoint table and never rewrote committed "
-        "ones; output checksum equals the pure kernel's in both modes. "
-        "Unstaged scans the full input once per commit batch (the Iceberg-"
-        "bucketed-source case needs no staging); staged pays one restage "
-        "write in the crash phase, then every batch/resume scan prunes to "
-        "its own part_id dirs.",
+        "ones; output checksum equals the pure kernel's. The crash phase "
+        "includes the one-time restage of the input by part_id.",
     }
     with open(args.json, "w") as f:
         json.dump(result, f, indent=2)
