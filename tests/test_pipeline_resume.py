@@ -220,13 +220,15 @@ def _part_recount(df, n_parts):
     return {r["p"]: (r["docs"], r["failed"], r["spans"]) for r in rows}
 
 
-def test_metrics_exact_per_partition(spark, tmp_path):
+@pytest.mark.parametrize("file_backed", [False, True])
+def test_metrics_exact_per_partition(spark, tmp_path, file_backed):
     """Every _metrics and _checkpoints row equals an independent
     per-partition recount of the input and of the output. The input holds
     a mega-doc (num 997) and two unknown-kind docs (failure rows), and
     has fewer docs than partitions: some batch has no mega-doc, and some
     partition and one whole batch have no doc at all, where the observed
-    sums are NULL."""
+    sums are NULL. The input is staged from memory (content-fingerprinted)
+    and from parquet files (fingerprinted by its file list)."""
     from docling_nlp_api_spark.schema import CHECKPOINT_SCHEMA, DOCUMENTS_SPANS_SCHEMA
     from docling_nlp_api_spark.spec import MEGA_SPAN_THRESHOLD
 
@@ -237,6 +239,10 @@ def test_metrics_exact_per_partition(spark, tmp_path):
     )
     df = spans_df(spark, 10, start=990).unionByName(bad).cache()
     assert df.filter(F.size("spans") > MEGA_SPAN_THRESHOLD).count() == 1
+    if file_backed:
+        df.write.parquet(str(tmp_path / "src"))
+        df = spark.read.parquet(str(tmp_path / "src"))
+        assert df.inputFiles()
 
     p = ExtractionPipeline(
         spark, str(tmp_path / "mx"), n_partitions=n_parts, batch_size=batch_size,
