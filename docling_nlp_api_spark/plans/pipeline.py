@@ -17,11 +17,14 @@ sandbox — same commit protocol):
 
 Ingest: a commit batch reads only its pending partitions' staged files.
 The driver lists them through the Hadoop FS and packs them into tasks by
-bytes, with Spark's own file-scan rule (`plan_tasks`). Each task is one
-row of a tiny `spark.range`; its `mapInArrow` reads the task's files with
-pyarrow and feeds them straight to the kernel. Span data never crosses
-from the JVM to Python, and nothing is shuffled: a batch is one write job
-of one stage.
+bytes, with Spark's own split size, in part_id order (`plan_tasks`). Each
+task is one row of a tiny `spark.range`; its `mapInArrow` reads the
+task's files with pyarrow and feeds them straight to the kernel. Span
+data never crosses from the JVM to Python, and nothing is shuffled: a
+batch is one write job of one stage. The tasks open the staged files at
+the URI Spark wrote them to (session.qualified_uri), so the output root
+must be on a filesystem pyarrow opens (a local path or file://); run()
+rejects any other before its first job.
 
 Commit protocol (mirrors Iceberg MERGE semantics with plain files):
 1. pending = all partition ids LEFT ANTI JOIN committed checkpoint rows
@@ -127,8 +130,9 @@ class ExtractionPipeline:
         summary dict. `fail_after_batches` injects a crash (tests)."""
         spark = self.spark
         check_input_schema(input_df.schema)
-        # before any job: a scheme pyarrow cannot open fails here, not in a task
-        fs, staged_path = arrow_fs(self.staged_dir)
+        # before any job: a scheme pyarrow cannot open fails here, not in a
+        # task; tasks read the staged files where Spark writes them
+        fs, staged_path = arrow_fs(spark, self.staged_dir)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         self._stage(input_df)
         batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
@@ -244,11 +248,6 @@ class ExtractionPipeline:
         ).first()
         return f"content:{agg['n']}:{agg['h']}"
 
-    def _staged_src(self, input_df: DataFrame) -> DataFrame:
-        """The staged input as a table, staging it first if needed."""
-        self._stage(input_df)
-        return self.spark.read.option("basePath", self.staged_dir).parquet(self.staged_dir)
-
     def _stage(self, input_df: DataFrame) -> None:
         """One-time restage of the input PHYSICALLY partitioned by part_id
         (the sandbox stand-in for an Iceberg table bucket-partitioned on
@@ -336,10 +335,13 @@ def plan_tasks(
     files: list[tuple[str, int, int]], max_bytes: int, open_cost: int, parallelism: int
 ) -> list[list[tuple[str, int]]]:
     """Pack `files`, (path, part_id, bytes) tuples, into tasks of
-    (path, part_id) by Spark's file-scan rule (FilePartition): split size
-    = min(max_bytes, max(open_cost, total / parallelism)), where the
-    total counts `open_cost` once per file; files go largest first, and
-    a task closes when the next file would take it past the split size.
+    (path, part_id) with the split size of Spark's file scan
+    (FilePartition), min(max_bytes, max(open_cost, total / parallelism)),
+    where the total counts `open_cost` once per file; a task closes when
+    the next file would take it past the split size. Files go by part_id,
+    largest first within one, so a task covers a run of part_ids and the
+    partitioned write makes about one output file per part_id (Spark's
+    largest-first order over all files mixes part_ids in every task).
     A file is never split, so one larger than the split size is a task
     of its own. No files plan no tasks."""
     total = sum(size + open_cost for *_, size in files)
@@ -347,7 +349,7 @@ def plan_tasks(
     tasks: list[list[tuple[str, int]]] = []
     cur: list[tuple[str, int]] = []
     cur_bytes = 0
-    for path, pid, size in sorted(files, key=lambda f: -f[2]):
+    for path, pid, size in sorted(files, key=lambda f: (f[1], -f[2])):
         if cur and cur_bytes + size > split:
             tasks.append(cur)
             cur, cur_bytes = [], 0

@@ -151,18 +151,31 @@ def fs_list_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     return [(st.getPath().getName(), st.getLen()) for st in fs.listStatus(jpath) if st.isFile()]
 
 
-def arrow_fs(uri: str) -> tuple[pafs.FileSystem, str]:
-    """The pyarrow filesystem and path of a Hadoop-style `uri`, for
-    reading in Python workers what Spark wrote. A path without a scheme
-    is local and made absolute here: Python workers do not share the
-    driver's working directory. A scheme pyarrow does not handle raises
-    a ValueError that names it (Hadoop's s3a:// is pyarrow's s3://)."""
-    scheme = urlsplit(uri).scheme
-    if not scheme:
-        return pafs.LocalFileSystem(), os.path.abspath(uri)
+def qualified_uri(spark: SparkSession, path: str, conf=None) -> str:
+    """`path` as Spark and Hadoop resolve it: a path without a scheme or
+    authority is qualified against fs.defaultFS and the filesystem's
+    working directory (the JVM's, for a local path), under the Hadoop
+    Configuration `conf` (the session's by default). A path that names
+    both is returned as given, without loading its filesystem."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    uri = jpath.toUri()
+    if uri.getScheme() is None or uri.getAuthority() is None:
+        conf = conf if conf is not None else spark._jsc.hadoopConfiguration()
+        uri = jpath.getFileSystem(conf).makeQualified(jpath).toUri()
+    return uri.toString()
+
+
+def arrow_fs(spark: SparkSession, path: str) -> tuple[pafs.FileSystem, str]:
+    """The pyarrow filesystem and path of `path` as the session writes it
+    (qualified_uri), for reading in Python workers what Spark wrote. A
+    scheme pyarrow does not handle, or cannot open here, raises a
+    ValueError that names it (Hadoop's s3a:// is pyarrow's s3://;
+    pyarrow's hdfs:// needs libhdfs and the Hadoop CLASSPATH)."""
+    uri = qualified_uri(spark, path)
     try:
         return pafs.FileSystem.from_uri(uri)
-    except pa.ArrowInvalid as exc:
+    except (pa.ArrowException, OSError) as exc:
+        scheme = urlsplit(uri).scheme
         raise ValueError(f"pyarrow cannot open '{scheme}://' paths such as {uri}: {exc}") from exc
 
 

@@ -17,8 +17,9 @@ Cluster usage (ships the package to executors via --py-files):
     The pipeline restages --input once under <output>/_staged/ by
     hash(doc_id); every commit batch then reads only its own partitions'
     staged files, with pyarrow, inside the extraction tasks. The output
-    root must use a scheme pyarrow opens (a local path, file://, s3://,
-    hdfs://): Hadoop's s3a:// is rejected before any job runs.
+    root must be on a filesystem pyarrow opens; local paths and file://
+    are tested. A root that pyarrow cannot open (Hadoop-only schemes
+    such as s3a://, abfs://, viewfs://) is rejected before any job runs.
 
     NOTE: memory MUST be sized on the submit line (--driver-memory /
     --executor-memory): under spark-submit the JVM exists before the

@@ -96,7 +96,8 @@ def test_staged_crash_resume_identical(spark, tmp_path, input_df):
     # two tokens separately are vacuous)
     import re
 
-    src = p._staged_src(input_df)
+    p._stage(input_df)
+    src = spark.read.option("basePath", p.staged_dir).parquet(p.staged_dir)
     plan = src.filter(F.col("part_id").isin([0, 1]))._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"PartitionFilters: \[[^\]]*part_id", plan), plan
 
@@ -107,13 +108,13 @@ def test_staged_restage_wipes_dead_attempt_orphans(spark, tmp_path, input_df):
     partitionOverwriteMode=dynamic, under which mode("overwrite") only
     replaces partitions present in the NEW data, so a retry with a
     smaller bucket count would otherwise read the union of both layouts.
-    _staged_src wipes the dir whenever the marker is absent."""
+    _stage wipes the dir whenever the marker is absent."""
     dead = ExtractionPipeline(
         spark, str(tmp_path / "wo"), n_partitions=N_PARTS * 2, batch_size=BATCH,
     )
     # simulate the crash window: staging parquet committed, marker never
     # written (the marker write is the commit point)
-    dead._staged_src(input_df)
+    dead._stage(input_df)
     marker = tmp_path / "wo" / "_staged" / "_STAGED_LAYOUT"
     marker.unlink()
     orphan_dirs = {
@@ -387,7 +388,10 @@ def test_output_independent_of_input_layout(spark, tmp_path, recorded_plans):
     """The same docs (with mega-doc 997 and two unknown-kind docs) written
     as 1 file, as 7 files, and as 1 file restaged into row groups of a
     few rows read back in 2-doc Arrow batches: every run gives the same
-    output content and the same _metrics rows."""
+    output content and the same _metrics rows. The 7-file run plans with
+    a 1 KiB open cost, so the split size follows the files' bytes and
+    some task packs several files (at the default 4 MiB, a batch of a
+    few small files plans one task per file)."""
     import pyarrow.parquet as pq
 
     from docling_nlp_api_spark.schema import DOCUMENTS_SPANS_SCHEMA
@@ -401,7 +405,11 @@ def test_output_independent_of_input_layout(spark, tmp_path, recorded_plans):
         "parquet.block.row.count.limit": "2",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "2",
     }
-    layouts = {"one_file": (1, {}), "seven_files": (7, {}), "small_row_groups": (1, small_groups)}
+    layouts = {
+        "one_file": (1, {}),
+        "seven_files": (7, {"spark.sql.files.openCostInBytes": "1024"}),
+        "small_row_groups": (1, small_groups),
+    }
     keys, metrics, n_tasks = {}, {}, {}
     for name, (n_files, conf) in layouts.items():
         src = str(tmp_path / f"in_{name}")
@@ -417,7 +425,7 @@ def test_output_independent_of_input_layout(spark, tmp_path, recorded_plans):
             for k, v in old.items():
                 spark.conf.unset(k) if v is None else spark.conf.set(k, v)
         staged = sorted((tmp_path / name / "_staged").glob("part_id=*/*.parquet"))
-        if conf:
+        if name == "small_row_groups":
             assert max(pq.ParquetFile(f).num_row_groups for f in staged) > 1
         n_tasks[name] = [len(t) for plan in recorded_plans[n_plans:] for t in plan]
         out = p.read_output().withColumn("metadata", F.to_json("metadata"))
@@ -469,8 +477,10 @@ def test_pipeline_output_equals_extract(spark, tmp_path):
 def test_plan_tasks_packs_every_file_once():
     """Every file lands in exactly one task; a task holding more than one
     file stays within the split size, counting the open cost of each file
-    but the last (Spark's FilePartition rule); largest files go first; an
-    empty batch plans no tasks."""
+    but the last (Spark's FilePartition rule); files go in part_id order,
+    largest first within one, so the (task, part_id) pairs that become
+    output files number at most tasks + part_ids - 1; an empty batch
+    plans no tasks."""
     import random
 
     from docling_nlp_api_spark.plans.pipeline import plan_tasks
@@ -487,7 +497,10 @@ def test_plan_tasks_packs_every_file_once():
         for t in tasks:
             packed = sum(size[path] for path, _ in t) + open_cost * (len(t) - 1)
             assert len(t) == 1 or packed <= split, (t, split)
-        assert size[tasks[0][0][0]] == max(size.values())
+        order = [(pid, -size[path]) for t in tasks for path, pid in t]
+        assert order == sorted(order)
+        pairs = {(i, pid) for i, t in enumerate(tasks) for _, pid in t}
+        assert len(pairs) <= len(tasks) + 5 - 1
     assert plan_tasks([], 16_000, 400, 4) == []
 
 
@@ -512,24 +525,28 @@ def test_empty_batches_commit_zero_counts(spark, tmp_path, recorded_plans):
 
 def test_arrow_fs_resolves_local_and_rejects_s3a(spark, tmp_path, monkeypatch):
     """Local paths (absolute, relative, file://) resolve to pyarrow's local
-    filesystem with an absolute path. An s3a:// output root fails on the
-    driver with a ValueError that names the scheme, before any job."""
+    filesystem at the absolute path Spark writes to: a relative path is
+    the JVM's, whatever the Python working directory. An s3a:// output
+    root fails on the driver with a ValueError that names the scheme,
+    before any job."""
     import os
 
     import pyarrow.fs as pafs
 
     from docling_nlp_api_spark.session import arrow_fs
 
+    jvm_cwd = spark._jvm.java.lang.System.getProperty("user.dir")
     monkeypatch.chdir(tmp_path)
+    assert os.path.realpath(jvm_cwd) != os.path.realpath(tmp_path)
     for uri, path in [
         (str(tmp_path / "a"), str(tmp_path / "a")),
-        ("rel/dir", os.path.join(str(tmp_path), "rel", "dir")),
+        ("rel/dir", os.path.join(jvm_cwd, "rel", "dir")),
         (f"file://{tmp_path}/b", f"{tmp_path}/b"),
     ]:
-        fs, got = arrow_fs(uri)
+        fs, got = arrow_fs(spark, uri)
         assert isinstance(fs, pafs.LocalFileSystem) and got == path, (uri, got)
     with pytest.raises(ValueError, match="'s3a://'"):
-        arrow_fs("s3a://bucket/out/_staged")
+        arrow_fs(spark, "s3a://bucket/out/_staged")
 
     sc = spark.sparkContext
     sc.setLocalProperty("spark.jobGroup.id", "s3a-output")
@@ -540,3 +557,21 @@ def test_arrow_fs_resolves_local_and_rejects_s3a(spark, tmp_path, monkeypatch):
         assert list(sc.statusTracker().getJobIdsForGroup("s3a-output")) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_qualified_uri_follows_default_fs(spark, tmp_path):
+    """Under a non-local fs.defaultFS, a path without a scheme qualifies
+    against that filesystem, as Spark's writes resolve it, not against
+    the local disk; a path that names its scheme and authority is left
+    as it is. viewfs:// with a mount link onto tmp_path stands in for a
+    cluster's hdfs:// default: it loads without touching the network."""
+    from docling_nlp_api_spark.session import qualified_uri
+
+    conf = spark._jvm.org.apache.hadoop.conf.Configuration(spark._jsc.hadoopConfiguration())
+    conf.set("fs.defaultFS", "viewfs://cluster/")
+    conf.set("fs.viewfs.mounttable.cluster.link./data", f"file://{tmp_path}")
+    assert qualified_uri(spark, "/data/out/_staged", conf) == "viewfs://cluster/data/out/_staged"
+    rel = qualified_uri(spark, "out/_staged", conf)
+    assert rel.startswith("viewfs://cluster/") and rel.endswith("/out/_staged"), rel
+    assert qualified_uri(spark, "s3a://bucket/out", conf) == "s3a://bucket/out"
+    assert qualified_uri(spark, f"{tmp_path}/x") == f"file://{tmp_path}/x"
