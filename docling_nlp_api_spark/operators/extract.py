@@ -28,7 +28,6 @@ import threading
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
 
 from .extract_arrow import OUT_SPARK_SCHEMA, extract_map_in_arrow, utf8_buffers
@@ -218,41 +217,33 @@ def check_input_schema(schema: StructType) -> None:
         raise ValueError(f"extract(): spans struct missing fields {sorted(missing)}")
 
 
+# extract()'s output columns as SQL strings: a projection costs one call
+# into the JVM however many expressions it holds. arrays_zip names its
+# struct fields after its arguments, hence the renaming projection first.
+# span_pages / span_bboxes are PARALLEL arrays (page number / layout bbox
+# of spans[i]) rather than fields inside the span struct: the north-rule
+# equality invariant is pinned on (kind, text, media_ref, order) and must
+# not change shape
+_SPAN_FIELDS = ("kinds AS kind", "texts AS text", "media_refs AS media_ref", "orders AS `order`")
+_ASSEMBLE_SQL = (
+    "doc_id",
+    "arrays_zip(kind, text, media_ref, `order`) AS spans",
+    "status",
+    "CASE WHEN status = 'failed' THEN map('error', error) ELSE map("
+    "'word_count', CAST(word_count AS STRING), "
+    "'char_count', CAST(char_count AS STRING), "
+    "'page_count', CAST(page_count AS STRING), "
+    "'has_images', CASE WHEN has_images THEN 'true' ELSE 'false' END, "
+    "'has_tables', CASE WHEN has_tables THEN 'true' ELSE 'false' END) END AS metadata",
+    "page_nos AS span_pages",
+    "bboxes AS span_bboxes",
+)
+
+
 def assemble(kernel_out: DataFrame, *keep: str) -> DataFrame:
     """extract()'s output rows from the kernel's field-wise columns
     (OUT_SPARK_SCHEMA), followed by the `keep` columns of `kernel_out`."""
-    spans = F.arrays_zip(
-        F.col("kinds").alias("kind"),
-        F.col("texts").alias("text"),
-        F.col("media_refs").alias("media_ref"),
-        F.col("orders").alias("order"),
-    ).alias("spans")
-    metadata = (
-        F.when(
-            F.col("status") == "failed",
-            F.create_map(F.lit("error"), F.col("error")),
-        )
-        .otherwise(
-            F.create_map(
-                F.lit("word_count"), F.col("word_count").cast("string"),
-                F.lit("char_count"), F.col("char_count").cast("string"),
-                F.lit("page_count"), F.col("page_count").cast("string"),
-                F.lit("has_images"), F.when(F.col("has_images"), "true").otherwise("false"),
-                F.lit("has_tables"), F.when(F.col("has_tables"), "true").otherwise("false"),
-            )
-        )
-        .alias("metadata")
-    )
-    # span_pages / span_bboxes are PARALLEL arrays (page number / layout
-    # bbox of spans[i]) rather than fields inside the span struct: the
-    # north-rule equality invariant is pinned on (kind, text, media_ref,
-    # order) and must not change shape
-    return kernel_out.select(
-        "doc_id", spans, "status", metadata,
-        F.col("page_nos").alias("span_pages"),
-        F.col("bboxes").alias("span_bboxes"),
-        *keep,
-    )
+    return kernel_out.selectExpr("*", *_SPAN_FIELDS).selectExpr(*_ASSEMBLE_SQL, *keep)
 
 
 def extract(df: DataFrame) -> DataFrame:

@@ -10,29 +10,41 @@ sandbox — same commit protocol):
                                             stand-in; _STAGED_LAYOUT marks
                                             a committed staging)
     <out>/extracted/part_id=K/*.parquet     output, hash-partitioned by doc_id
-    <out>/_checkpoints/*.parquet            (run_id, partition_id, status,
+    <out>/_metrics/<run_id>-<pid>.parquet   one file per committed partition:
+                                            docs/spans in and out, wall_sec
+    <out>/_checkpoints/<run_id>-<pid>.parquet
+                                            one file per committed partition:
+                                            (run_id, partition_id, status,
                                              rows_in, rows_out, started_at,
-                                             committed_at)
-    <out>/_metrics/*.parquet                per-partition docs/spans/wall_sec
+                                             committed_at); the file is the
+                                            commit
 
 Ingest: a commit batch reads only its pending partitions' staged files.
-The driver lists them through the Hadoop FS and packs them into tasks by
-bytes, with Spark's own split size, in part_id order (`plan_tasks`). Each
-task is one row of a tiny `spark.range`; its `mapInArrow` reads the
-task's files with pyarrow and feeds them straight to the kernel. Span
-data never crosses from the JVM to Python, and nothing is shuffled: a
-batch is one write job of one stage. The tasks open the staged files at
-the URI Spark wrote them to (session.qualified_uri), so the output root
-must be on a filesystem pyarrow opens (a local path or file://); run()
-rejects any other before its first job.
+The driver lists them and packs them into tasks by bytes, with Spark's
+own split size, in part_id order (`plan_tasks`). Each task is one row of
+a tiny `spark.range`; its `mapInArrow` reads the task's files with
+pyarrow and feeds them straight to the kernel. Span data never crosses
+from the JVM to Python, and nothing is shuffled: a batch is one write
+job of one stage. The driver lists the staged files and the checkpoint
+files and writes the commit records, and the tasks read the staged
+files, with pyarrow at the URI Spark writes to (session.qualified_uri),
+so the output root must be on a filesystem pyarrow opens (a local path
+or file://); run() rejects any other before its first job.
 
 Commit protocol (mirrors Iceberg MERGE semantics with plain files):
-1. pending = all partition ids LEFT ANTI JOIN committed checkpoint rows
+1. pending = all partition ids minus those with a checkpoint file of this
+   run_id, found by listing _checkpoints (no Spark job).
 2. per batch: (a) one write job overwrites the batch's output dirs
    (dynamic partition overwrite, idempotent on re-run) and observes the
-   docs/spans in and out per partition; (b) append checkpoint, then metrics.
-3. a crash between (2a) and (2b) re-processes that batch only; committed
-   partitions are never touched again -> no double-counted metrics.
+   docs/spans in and out per partition; (b) the driver writes each
+   partition's metrics file, then each partition's checkpoint file, with
+   pyarrow, each under a hidden temp name moved onto its own name. No
+   Spark job commits anything.
+3. a crash anywhere before a partition's checkpoint file exists leaves
+   that partition pending: the resume rewrites its output dirs and its
+   metrics file under the same name, so no record is ever doubled. A
+   checkpoint file is written only after the batch's metrics files, so a
+   committed partition has its metrics and is never touched again.
 
 Skew (mega-docs): hashing doc_id spreads mega-docs over the part_ids, and
 no doc is ever split. A staged file larger than the split size is a task
@@ -48,7 +60,9 @@ does the same at partition granularity and never fails the job for a doc.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
+import re
 import time
 import uuid
 from datetime import datetime, timezone
@@ -56,6 +70,7 @@ from functools import partial
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -68,8 +83,6 @@ from ..schema import CHECKPOINT_SCHEMA, METRICS_SCHEMA
 from ..session import (
     arrow_fs,
     fs_delete,
-    fs_exists,
-    fs_list_files,
     read_text_file,
     write_text_file,
 )
@@ -79,6 +92,8 @@ _INGEST_SCHEMA = OUT_SCHEMA.append(pa.field("part_id", pa.int32())).append(
     pa.field("n_spans_in", pa.int32())
 )
 _INGEST_SPARK_SCHEMA = from_arrow_schema(_INGEST_SCHEMA)
+# a commit record's file name: <run_id>-<partition_id>.parquet
+_RECORD_NAME = re.compile(r"(?P<run_id>.+)-(?P<pid>[0-9]+)\.parquet")
 
 
 class ExtractionPipeline:
@@ -100,23 +115,30 @@ class ExtractionPipeline:
         self.metrics_dir = os.path.join(out_dir, "_metrics")
         self.staged_dir = os.path.join(out_dir, "_staged")
 
-    # -- checkpoint table ---------------------------------------------------
+    # -- commit records -----------------------------------------------------
     def committed_partitions(self) -> set[int]:
-        # Hadoop-FS existence check, NOT os.path.isdir: with an
-        # hdfs:// or s3:// out_dir (the documented cluster invocation) the
-        # local check is always False, which would silently disable
-        # exactly-once resume — every re-run would reprocess ALL
-        # partitions and append duplicate checkpoint + metrics rows.
-        if not fs_exists(self.spark, self.ckpt_dir):
-            return set()
-        df = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.ckpt_dir)
-        rows = (
-            df.filter((F.col("run_id") == self.run_id) & (F.col("status") == "committed"))
-            .select("partition_id")
-            .distinct()
-            .collect()
-        )
-        return {r["partition_id"] for r in rows}
+        """The partitions this run has committed: those with a checkpoint
+        file `<run_id>-<partition_id>.parquet`, found by listing
+        `_checkpoints` through pyarrow at the URI Spark writes to, with no
+        Spark job. A parquet file there with any other name (a Spark part
+        file of the old append layout, say) raises a ValueError that names
+        it: passing over it would redo every partition and count its
+        metrics twice."""
+        fs, root = arrow_fs(self.spark, self.ckpt_dir)
+        done = set()
+        for info in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True)):
+            name = info.base_name
+            if not name.endswith(".parquet") or name.startswith(("_", ".")):
+                continue
+            m = _RECORD_NAME.fullmatch(name)
+            if m is None:
+                raise ValueError(
+                    f"{self.ckpt_dir} holds {name}, which is no '<run_id>-<partition_id>.parquet' "
+                    "checkpoint file: it was not written by this pipeline's commit protocol"
+                )
+            if m["run_id"] == self.run_id:
+                done.add(int(m["pid"]))
+        return done
 
     def pending_partitions(self) -> list[int]:
         """All partition ids anti-joined against committed ones. The id set
@@ -131,13 +153,14 @@ class ExtractionPipeline:
         spark = self.spark
         check_input_schema(input_df.schema)
         # before any job: a scheme pyarrow cannot open fails here, not in a
-        # task; tasks read the staged files where Spark writes them
-        fs, staged_path = arrow_fs(spark, self.staged_dir)
+        # task; tasks read the staged files, and the driver writes the
+        # commit records, where Spark writes
+        fs, root = arrow_fs(spark, self.out_dir)
+        committed = self.committed_partitions()
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         self._stage(input_df)
         batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
-        committed = self.committed_partitions()
         pending = sorted(set(range(self.n_partitions)) - committed)
         batches = [
             pending[i : i + self.batch_size] for i in range(0, len(pending), self.batch_size)
@@ -149,7 +172,7 @@ class ExtractionPipeline:
         for batch in batches:
             t0 = time.time()
             started_at = datetime.now(timezone.utc).replace(tzinfo=None)
-            tasks = self._plan_batch(batch, staged_path)
+            tasks = self._plan_batch(batch, fs, f"{root}/_staged")
             counts: dict[str, int] = {}
             if tasks:
                 # The per-partition counts are observed DURING the output
@@ -168,7 +191,7 @@ class ExtractionPipeline:
                     .partitionBy("part_id")
                     .parquet(self.extracted_dir)
                 )
-                counts = obs.get
+                counts = obs.get["counts"].asDict()
 
             wall = time.time() - t0
             write_s.append(wall)
@@ -188,9 +211,13 @@ class ExtractionPipeline:
                     )
                 )
                 total_docs += docs
+            # every metrics file before any checkpoint file: a partition
+            # with a checkpoint, which is never redone, has its metrics
             t1 = time.time()
-            self._append_records(ck_rows, CHECKPOINT_SCHEMA, self.ckpt_dir)
-            self._append_records(mt_rows, METRICS_SCHEMA, self.metrics_dir)
+            for row in mt_rows:
+                self._write_record(fs, f"{root}/_metrics", METRICS_SCHEMA, row)
+            for row in ck_rows:
+                self._write_record(fs, f"{root}/_checkpoints", CHECKPOINT_SCHEMA, row)
             commit_s.append(time.time() - t1)
             committed |= set(batch)
             done += 1
@@ -206,16 +233,20 @@ class ExtractionPipeline:
             "commit_s": commit_s,
         }
 
-    def _plan_batch(self, part_ids: list[int], staged_path: str) -> list[list[tuple[str, int]]]:
-        """The staged files of `part_ids`, listed through the Hadoop FS and
-        packed into tasks of (pyarrow path, part_id) with the session's
-        file-scan settings. `staged_path` is the staging dir as
-        session.arrow_fs resolves it."""
+    def _plan_batch(
+        self, part_ids: list[int], fs: pafs.FileSystem, staged_path: str
+    ) -> list[list[tuple[str, int]]]:
+        """The staged files of `part_ids`, listed on `fs`, the filesystem
+        the tasks read them from, and packed into tasks of (path, part_id)
+        with the session's file-scan settings. `staged_path` is the staging
+        dir as session.arrow_fs resolves it."""
         files = [
-            (f"{staged_path}/part_id={k}/{name}", k, size)
+            (info.path, k, info.size)
             for k in part_ids
-            for name, size in fs_list_files(self.spark, f"{self.staged_dir}/part_id={k}")
-            if name.endswith(".parquet") and not name.startswith(("_", "."))
+            for info in fs.get_file_info(
+                pafs.FileSelector(f"{staged_path}/part_id={k}", allow_not_found=True)
+            )
+            if info.base_name.endswith(".parquet") and not info.base_name.startswith(("_", "."))
         ]
         conf = self.spark._jsparkSession.sessionState().conf()
         return plan_tasks(
@@ -225,15 +256,34 @@ class ExtractionPipeline:
             self.spark.sparkContext.defaultParallelism,
         )
 
-    def _append_records(self, rows: list[tuple], schema: StructType, path: str) -> None:
-        """Append commit records (checkpoint or metrics rows, as tuples in
-        `schema` order) as one parquet file. The rows cross to the JVM as
-        one Arrow table: a row-pickled createDataFrame of a few tuples
-        costs about a second per append."""
+    def _write_record(self, fs: pafs.FileSystem, path: str, schema: StructType, row: tuple) -> None:
+        """Write one commit record, `row` in `schema` order led by run_id
+        and partition_id, as the parquet file `<run_id>-<partition_id>.parquet`
+        under `path` on `fs`. The file is what Spark writes for the row:
+        the same parquet schema (INT96 timestamps, required columns) and
+        Spark's schema metadata. It is written under a hidden temp name,
+        which Spark's reader skips, and moved onto its own name, so a file
+        under that name is whole and a redo replaces it."""
+        fields = [
+            f.with_type(pa.timestamp("ns")) if pa.types.is_timestamp(f.type) else f
+            for f in to_arrow_schema(schema)
+        ]
+        meta = {
+            "org.apache.spark.version": self.spark.version,
+            "org.apache.spark.sql.parquet.row.metadata": json.dumps(
+                schema.jsonValue(), separators=(",", ":")
+            ),
+        }
         table = pa.Table.from_pylist(
-            [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+            [dict(zip(schema.names, row))], schema=pa.schema(fields, metadata=meta)
         )
-        self.spark.createDataFrame(table).coalesce(1).write.mode("append").parquet(path)
+        name = f"{row[0]}-{row[1]}.parquet"
+        fs.create_dir(path)
+        pq.write_table(
+            table, f"{path}/.{name}.tmp", filesystem=fs,
+            use_deprecated_int96_timestamps=True,
+        )
+        fs.move(f"{path}/.{name}.tmp", f"{path}/{name}")
 
     @staticmethod
     def _content_key(df: DataFrame) -> str:
@@ -389,8 +439,8 @@ def _observed(df: DataFrame, batch: list[int]) -> tuple[DataFrame, Observation]:
     in `batch`: `docs_{p}`, `failed_{p}` (status = 'failed'), `spans_in_{p}`
     (total n_spans_in) and `spans_out_{p}` (total size(spans)). sum()
     over no rows is NULL, hence the coalesce: a partition may hold no doc
-    at all. Each aggregate is one SQL string, so building it costs one
-    call into the JVM."""
+    at all. The aggregates are the fields of one SQL struct, `counts`, so
+    building them costs one call into the JVM."""
     exprs = []
     for p in batch:
         exprs += [
@@ -400,7 +450,7 @@ def _observed(df: DataFrame, batch: list[int]) -> tuple[DataFrame, Observation]:
             f"coalesce(sum(if(part_id = {p}, size(spans), NULL)), 0) AS spans_out_{p}",
         ]
     obs = Observation()
-    return df.observe(obs, *map(F.expr, exprs)), obs
+    return df.observe(obs, F.expr(f"struct({', '.join(exprs)}) AS counts")), obs
 
 
 def new_run_id() -> str:

@@ -141,16 +141,6 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def fs_list_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(name, bytes) of each file directly under the directory `path`
-    (any scheme), through the Hadoop FS; [] if `path` does not exist."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return []
-    return [(st.getPath().getName(), st.getLen()) for st in fs.listStatus(jpath) if st.isFile()]
-
-
 def qualified_uri(spark: SparkSession, path: str, conf=None) -> str:
     """`path` as Spark and Hadoop resolve it: a path without a scheme or
     authority is qualified against fs.defaultFS and the filesystem's

@@ -32,12 +32,14 @@ Sandbox smoke (local[32], synthetic tier):
 
     python jobs/extract_job.py --tier sf0.001 --output /tmp/extract_out
 
-Re-running the same --run-id resumes: committed partitions are skipped via
-the checkpoint anti-join; the job is idempotent at partition granularity.
+Re-running the same --run-id resumes: committed partitions, those with a
+checkpoint file under _checkpoints, are skipped; the job is idempotent at
+partition granularity.
 
 Prints one JSON summary line: batches, partitions_done, docs_out, the job
 phase wall_sec, and per commit batch the measured seconds of the output
-write (`write_s`) and of the checkpoint + metrics appends (`commit_s`).
+write (`write_s`) and of writing its metrics and checkpoint files
+(`commit_s`).
 """
 
 from __future__ import annotations

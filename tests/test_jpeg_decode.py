@@ -115,7 +115,7 @@ def test_color_constant_blocks_exact(sh, sv, w, h):
     upsample + color transform, EXACT on constant-per-block planes
     (component recovery is exact, so RGB must equal the reference
     transform bit-for-bit)."""
-    from docling_nlp_api_spark.operators.multimodal import encode_jpeg_color
+    from jpeg_encoders import encode_jpeg_color
 
     ch, cw = (h + sv - 1) // sv, (w + sh - 1) // sh
     y = ((np.arange(h)[:, None] // 8 * 8 + 30) % 256) + np.zeros((1, w), dtype=np.int64)
@@ -133,7 +133,7 @@ def test_color_random_content_with_restarts(sh, sv):
     """Arbitrary color content (AC paths in all three components,
     interleaved restart resync): per-component error <= 1 bounds the
     transformed RGB error at ~4 levels."""
-    from docling_nlp_api_spark.operators.multimodal import encode_jpeg_color
+    from jpeg_encoders import encode_jpeg_color
 
     rng = np.random.RandomState(23)
     h, w = 37, 45
@@ -151,7 +151,9 @@ def test_color_through_resize_operator(spark):
     thumbnail (not grayscale-replicated), correct dims."""
     import pandas as pd
 
-    from docling_nlp_api_spark.operators.multimodal import RESIZE_SCHEMA, encode_jpeg_color, resize_images
+    from jpeg_encoders import encode_jpeg_color
+
+    from docling_nlp_api_spark.operators.multimodal import RESIZE_SCHEMA, resize_images
 
     y = np.full((40, 48), 100, dtype=np.uint8)
     cb = np.full((20, 24), 90, dtype=np.uint8)
@@ -178,7 +180,7 @@ def test_progressive_bit_identical_to_sequential():
     reconstruct the EXACT coefficients of the sequential stream — the
     IDCT outputs are therefore bit-identical, across refinement depths
     and band splits."""
-    from docling_nlp_api_spark.operators.multimodal import encode_jpeg_gray_progressive
+    from jpeg_encoders import encode_jpeg_gray_progressive
 
     rng = np.random.RandomState(7)
     img = rng.randint(0, 256, (50, 60)).astype(np.uint8)
@@ -209,10 +211,7 @@ def test_color_progressive_bit_identical(sh, sv):
     scans over the component's TRUE block grid — the non-interleaved
     subtlety) reconstructs exactly the sequential stream's output,
     subsampled chroma included."""
-    from docling_nlp_api_spark.operators.multimodal import (
-        encode_jpeg_color,
-        encode_jpeg_color_progressive,
-    )
+    from jpeg_encoders import encode_jpeg_color, encode_jpeg_color_progressive
 
     rng = np.random.RandomState(31)
     h, w = 37, 45
@@ -229,7 +228,7 @@ def test_codec_corner_cases():
     """Adversarial shapes pinned as regressions: the all-EOB image
     (every coefficient zero in every scan), 1x1 frames, and a 1xN
     4:2:0 color frame through both sequential and progressive paths."""
-    from docling_nlp_api_spark.operators.multimodal import (
+    from jpeg_encoders import (
         encode_jpeg_color,
         encode_jpeg_color_progressive,
         encode_jpeg_gray_progressive,

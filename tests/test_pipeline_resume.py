@@ -273,8 +273,8 @@ def test_metrics_exact_per_partition(spark, tmp_path, file_backed):
 
 
 def test_crash_after_output_before_commit_records(spark, tmp_path, input_df, monkeypatch):
-    """Crash point: a batch's output is written but its checkpoint append
-    fails. Its partitions stay uncommitted, the resume rewrites their
+    """Crash point: a batch's output is written but its first commit
+    record fails. Its partitions stay uncommitted, the resume rewrites their
     output, and the result equals an uninterrupted run with exactly one
     checkpoint and one metrics row per partition."""
     from docling_nlp_api_spark.schema import CHECKPOINT_SCHEMA
@@ -283,16 +283,16 @@ def test_crash_after_output_before_commit_records(spark, tmp_path, input_df, mon
     ref.run(input_df)
 
     p = ExtractionPipeline(spark, str(tmp_path / "cp"), n_partitions=N_PARTS, batch_size=BATCH)
-    real_append = ExtractionPipeline._append_records
+    real_write = ExtractionPipeline._write_record
     calls = []
 
-    def failing_append(self, rows, schema, path):
+    def failing_write(self, fs, path, schema, row):
         calls.append(path)
         if len(calls) == 1:
             raise RuntimeError("append failed")
-        return real_append(self, rows, schema, path)
+        return real_write(self, fs, path, schema, row)
 
-    monkeypatch.setattr(ExtractionPipeline, "_append_records", failing_append)
+    monkeypatch.setattr(ExtractionPipeline, "_write_record", failing_write)
     with pytest.raises(RuntimeError, match="append failed"):
         p.run(input_df)
     first_batch = list(range(BATCH))
@@ -318,17 +318,156 @@ def test_crash_after_output_before_commit_records(spark, tmp_path, input_df, mon
         assert sorted(r["partition_id"] for r in rows) == list(range(N_PARTS))
 
 
+MX_PARTS = 6  # 3 commit batches of BATCH: the crash hits the second one
+# Crash points in the second batch, by name: the partitions committed at
+# the crash, and the 1-based record write of the run that fails (a batch
+# writes BATCH metrics files, then BATCH checkpoint files); None crashes
+# elsewhere.
+_CRASH_POINTS = {
+    "mid_output_write": ({0, 1}, None),
+    "after_output": ({0, 1}, 2 * BATCH + 1),
+    "after_some_metrics": ({0, 1}, 2 * BATCH + 2),
+    "after_all_metrics": ({0, 1}, 3 * BATCH + 1),
+    "after_some_checkpoints": ({0, 1, 2}, 3 * BATCH + 2),
+    "after_all_checkpoints": ({0, 1, 2, 3}, None),
+}
+
+
+def _final_state(p):
+    """(output content key, metrics rows less wall_sec, checkpoint rows
+    less timestamps, record files per directory) of a finished run."""
+    import os
+
+    from docling_nlp_api_spark.schema import CHECKPOINT_SCHEMA
+
+    out = p.read_output().withColumn("metadata", F.to_json("metadata"))
+    ck = p.spark.read.schema(CHECKPOINT_SCHEMA).parquet(p.ckpt_dir)
+    return (
+        ExtractionPipeline._content_key(out),
+        sorted(tuple(r) for r in p.read_metrics().drop("wall_sec").collect()),
+        sorted(tuple(r) for r in ck.drop("started_at", "committed_at").collect()),
+        {d: sorted(os.listdir(d)) for d in (p.metrics_dir, p.ckpt_dir)},
+    )
+
+
+@pytest.fixture(scope="module")
+def matrix_ref(spark, tmp_path_factory):
+    p = ExtractionPipeline(
+        spark, str(tmp_path_factory.mktemp("mx") / "ref"), n_partitions=MX_PARTS, batch_size=BATCH
+    )
+    p.run(spans_df(spark, N_DOCS))
+    return _final_state(p)
+
+
+@pytest.mark.parametrize("point", list(_CRASH_POINTS))
+def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, matrix_ref, point):
+    """A crash at each step of a commit batch: mid-output-write (a task of
+    the write job fails), after the output, after some and after all of
+    the batch's metrics files, after some and after all of its checkpoint
+    files. The crash leaves exactly the partitions with a checkpoint file
+    committed, the resume never rewrites their output, and the result
+    equals an uninterrupted run: the same output content, the same
+    metrics and checkpoint rows, and exactly one record file of each kind
+    per partition, with no temp file left."""
+    from docling_nlp_api_spark.plans import pipeline
+
+    committed, failing_write = _CRASH_POINTS[point]
+    p = ExtractionPipeline(spark, str(tmp_path / point), n_partitions=MX_PARTS, batch_size=BATCH)
+    writes, plans = [], []
+    real_write, plan_tasks = ExtractionPipeline._write_record, pipeline.plan_tasks
+
+    def counting_write(self, fs, path, schema, row):
+        writes.append(row)
+        if len(writes) == failing_write:
+            raise RuntimeError("injected record failure")
+        return real_write(self, fs, path, schema, row)
+
+    def plan_with_missing_file(files, *args):
+        plans.append(files)
+        tasks = plan_tasks(files, *args)
+        if point == "mid_output_write" and len(plans) == 2:
+            path, pid, _ = files[0]
+            tasks.append([(f"{path}.missing", pid)])
+        return tasks
+
+    monkeypatch.setattr(ExtractionPipeline, "_write_record", counting_write)
+    monkeypatch.setattr(pipeline, "plan_tasks", plan_with_missing_file)
+    with pytest.raises(Exception, match="missing|injected"):
+        p.run(input_df, fail_after_batches=2)
+    assert p.committed_partitions() == committed
+
+    extracted = tmp_path / point / "extracted"
+    kept = {f.relative_to(extracted) for k in committed for f in extracted.glob(f"part_id={k}/*")}
+    assert kept
+    summary = p.run(input_df)
+    assert summary["partitions_done"] == MX_PARTS
+    assert {f.relative_to(extracted) for k in committed for f in extracted.glob(f"part_id={k}/*")} == kept
+    assert _final_state(p)[:3] == matrix_ref[:3]
+    for d, names in _final_state(p)[3].items():
+        assert names == [f"run0-{k}.parquet" for k in range(MX_PARTS)], (d, names)
+
+
+def test_foreign_checkpoint_file_raises(spark, tmp_path):
+    """A parquet file in _checkpoints that is no
+    `<run_id>-<partition_id>.parquet`, such as a Spark part file of the
+    old append layout, raises a ValueError that names it, before any
+    job: passing over it would redo every partition."""
+    import datetime as dt
+    import re
+
+    from docling_nlp_api_spark.schema import CHECKPOINT_SCHEMA
+
+    p = ExtractionPipeline(spark, str(tmp_path / "ff"), n_partitions=2, batch_size=1)
+    t = dt.datetime(2024, 1, 1)
+    spark.createDataFrame([("run0", 0, "committed", 1, 1, t, t)], CHECKPOINT_SCHEMA).coalesce(
+        1
+    ).write.parquet(p.ckpt_dir)
+    (part,) = (tmp_path / "ff" / "_checkpoints").glob("part-*.parquet")
+    with pytest.raises(ValueError, match=re.escape(part.name)):
+        p.committed_partitions()
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "foreign-checkpoint")
+    try:
+        with pytest.raises(ValueError, match=re.escape(part.name)):
+            p.run(spans_df(spark, 3))
+        assert list(sc.statusTracker().getJobIdsForGroup("foreign-checkpoint")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_run_ids_sharing_a_directory_do_not_mix(spark, tmp_path):
+    """Run ids `a` and `a-1` share one _checkpoints directory: each sees
+    only its own partitions (`a-1-3.parquet` is run a-1's partition 3,
+    `a-10.parquet` is run a's partition 10), and a third run sees none."""
+    import datetime as dt
+
+    from docling_nlp_api_spark.schema import CHECKPOINT_SCHEMA
+    from docling_nlp_api_spark.session import arrow_fs
+
+    out = str(tmp_path / "ids")
+    t = dt.datetime(2024, 1, 1)
+    fs, path = arrow_fs(spark, f"{out}/_checkpoints")
+    writer = ExtractionPipeline(spark, out)
+    for run_id, pid in [("a", 2), ("a-1", 3), ("a-1", 0), ("a", 10)]:
+        writer._write_record(fs, path, CHECKPOINT_SCHEMA, (run_id, pid, "committed", 0, 0, t, t))
+    assert ExtractionPipeline(spark, out, run_id="a").committed_partitions() == {2, 10}
+    assert ExtractionPipeline(spark, out, run_id="a-1").committed_partitions() == {0, 3}
+    assert ExtractionPipeline(spark, out, run_id="1").committed_partitions() == set()
+
+
 def test_commit_records_match_tuple_path(spark, tmp_path):
-    """The Arrow-built commit records read back, through the table
-    schemas, to the same values as rows appended from Python tuples:
-    naive-UTC timestamps to the microsecond included, and with the same
-    parquet schema on disk."""
+    """The pyarrow-written commit records read back, through the table
+    schemas, to the same values as rows appended from Python tuples by
+    Spark: naive-UTC timestamps to the microsecond and a NULL committed_at
+    included, and with the same parquet schema and schema metadata on
+    disk. Each record is its own `<run_id>-<partition_id>.parquet`."""
     import datetime as dt
     import glob
 
     import pyarrow.parquet as pq
 
     from docling_nlp_api_spark.schema import CHECKPOINT_SCHEMA, METRICS_SCHEMA
+    from docling_nlp_api_spark.session import arrow_fs
 
     t0 = dt.datetime(2024, 3, 31, 1, 30, 5, 123456)
     t1 = dt.datetime(2024, 10, 27, 2, 59, 59, 999999)
@@ -341,7 +480,9 @@ def test_commit_records_match_tuple_path(spark, tmp_path):
     }
     for name, (schema, rows) in cases.items():
         arrow_dir, tuple_dir = str(tmp_path / f"{name}_arrow"), str(tmp_path / f"{name}_tuple")
-        p._append_records(rows, schema, arrow_dir)
+        fs, path = arrow_fs(spark, arrow_dir)
+        for row in rows:
+            p._write_record(fs, path, schema, row)
         spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(tuple_dir)
         got = [
             tuple(r) for r in spark.read.schema(schema).parquet(arrow_dir).orderBy("partition_id").collect()
@@ -350,9 +491,11 @@ def test_commit_records_match_tuple_path(spark, tmp_path):
             tuple(r) for r in spark.read.schema(schema).parquet(tuple_dir).orderBy("partition_id").collect()
         ]
         assert got == want == rows
-        arrow_file, tuple_file = (glob.glob(f"{d}/*.parquet") for d in (arrow_dir, tuple_dir))
-        assert len(arrow_file) == len(tuple_file) == 1
-        assert pq.read_schema(arrow_file[0]).equals(pq.read_schema(tuple_file[0]), check_metadata=True)
+        arrow_files, tuple_file = (sorted(glob.glob(f"{d}/*.parquet")) for d in (arrow_dir, tuple_dir))
+        assert [f.rsplit("/", 1)[1] for f in arrow_files] == ["r1-0.parquet", "r1-7.parquet"]
+        assert len(tuple_file) == 1
+        for f in arrow_files:
+            assert pq.read_schema(f).equals(pq.read_schema(tuple_file[0]), check_metadata=True)
 
 
 def _rows(df):
