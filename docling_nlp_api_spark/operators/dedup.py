@@ -549,11 +549,15 @@ def _embedding_near_dup_pairs(
     (pytest pins cap-inertness, forced-cap planted recall, and forced-cap
     PERTURBED-pair recall).
 
-    The vector and its L2 norm are computed once per row BELOW the join's
-    exchange (a shuffle materializes columns, so no re-evaluation can
-    leak past it); each surviving pair costs one dot product — an
-    Arrow-batch einsum by default, the interpreted zip_with fold under
-    SPARK_GRAFT_ANN_SCORER=sql (see vecmath.py) — and a scalar multiply.
+    The vector and its L2 norm are computed once per row BELOW the
+    grouping exchange (a shuffle materializes columns, so no
+    re-evaluation can leak past it). Scoring is one gram matmul per
+    bucket GROUP (vecmath.gram_pairs_kernel), each vector crossing Arrow
+    once per bucket: a pair join would ship both embeddings per
+    candidate PAIR, which is transfer-bound on the quadratic fan-out of
+    clustered buckets at the 100x tier (BENCH/ann_ab_sf10_kernel.json).
+    Kept-pair cosines are einsum-recomputed, bit-identical to the
+    delegate reconnect's pair_dot, then rounded and filtered JVM-side.
 
     Returns the PRE-distinct (id_a, id_b, cosine) stream: a pair
     matching both bands computes the same cosine twice and appears once
@@ -561,66 +565,30 @@ def _embedding_near_dup_pairs(
     contract); embedding_dup_clusters instead contracts edges in-kernel
     and feeds star edges into connected components."""
     from . import vecmath
-    from .similarity import _scorer
+    from .similarity import DIM
 
     salted = _near_dup_candidates(spark, sf_dir, max_bucket, audit)
-
-    if _scorer() == "kernel":
-        # gram kernel (default): one matmul per bucket GROUP, each vector
-        # crossing Arrow once per bucket — the pair join below ships both
-        # embeddings per candidate PAIR, which is transfer-bound on the
-        # quadratic fan-out of clustered buckets at the 100x tier
-        # (BENCH/ann_ab_sf10_kernel.json). Kept-pair cosines are einsum-
-        # recomputed so they are bit-identical to the pair tier's
-        # pair_dot; the JVM-side round + threshold filter tail is shared
-        # by all three tiers (the distinct, when wanted, lives in
-        # embedding_near_dup).
-        cand = salted.groupBy("label", "band", "bucket", "salt", "tsalt").applyInPandas(
-            vecmath.gram_pairs_kernel(threshold),
-            schema="id_a long, id_b long, cos double",
-        )
-        return (
-            cand.select("id_a", "id_b", F.round("cos", 4).alias("cosine"))
-            .filter(F.col("cosine") >= threshold)
-            .unionByName(_delegate_reconnect_pairs(salted, threshold))
-        )
-
-    a = salted.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"), F.col("nrm").alias("na"),
-        "label", "band", "bucket", "salt", "tsalt",
-    )
-    b = salted.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"), F.col("nrm").alias("nb"),
-        "label", "band", "bucket", "salt", "tsalt",
-    )
-    pairs = a.join(b, ["label", "band", "bucket", "salt", "tsalt"]).filter(
-        F.col("id_a") < F.col("id_b")
+    cand = salted.groupBy("label", "band", "bucket", "salt", "tsalt").applyInPandas(
+        vecmath.gram_pairs_kernel(threshold, DIM),
+        schema="id_a long, id_b long, cos double",
     )
     return (
-        pairs.select("id_a", "id_b", _pair_cosine().alias("cosine"))
+        cand.select("id_a", "id_b", F.round("cos", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
         .unionByName(_delegate_reconnect_pairs(salted, threshold))
     )
 
 
 def _pair_cosine() -> F.Column:
-    """The ONE copy of the pair cosine-scoring rule over a candidate
-    frame staged as (ea, na, eb, nb): tier-dispatched dot product
-    (einsum pair_dot by default, the interpreted SQL fold under
-    SPARK_GRAFT_ANN_SCORER=sql), divided by the precomputed norms and
-    rounded to 4 places. Both the main pair tier and the delegate
-    reconnect score through this helper, so the 3-tier bit-parity the
-    scorer suite pins rests on a single expression — a scorer-tier or
-    rounding change cannot desynchronize delegate-edge cosines from
-    main-path cosines."""
+    """The pair cosine-scoring rule of the delegate reconnect over a
+    candidate frame staged as (ea, na, eb, nb): the einsum pair_dot,
+    divided by the precomputed norms and rounded to 4 places — the same
+    reduction and rounding the gram kernels apply to the pairs they
+    keep."""
     from . import vecmath
-    from .similarity import DOT, _use_sql
+    from .similarity import DIM
 
-    dot = (
-        F.expr(DOT.format(a="ea", b="eb"))
-        if _use_sql()
-        else vecmath.pair_dot(F.col("ea"), F.col("eb"))
-    )
+    dot = vecmath.pair_dot(DIM)(F.col("ea"), F.col("eb"))
     return F.round(dot / (F.col("na") * F.col("nb")), 4)
 
 
@@ -651,9 +619,8 @@ def _delegate_reconnect_pairs(salted: DataFrame, threshold: float) -> DataFrame:
     zero-split case (and at oracle scale) the filter drops every row at
     the scan, so the agg shuffles nothing, the window sees nothing, and
     the result is provably empty: every oracle comparison is unaffected.
-    Scoring goes through _pair_cosine — the single shared copy of the
-    pair-tier rule the 3-tier parity suite pins bit-identical — so all
-    scorer tiers emit the same delegate pairs."""
+    Scoring goes through _pair_cosine, whose einsum is the reduction the
+    gram kernels recompute kept pairs with."""
     from pyspark.sql import Window
 
     deleg = salted.filter("split").groupBy(
@@ -714,38 +681,20 @@ def _near_dup_candidates(
     never-executed consumers should not pay that scan, which is why it
     is opt-in."""
     from . import vecmath
-    from .similarity import DOT, _use_sql, hyperplanes
+    from .similarity import DIM, hyperplanes
 
     emb = with_planted_vec_dups(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
     n_band_planes = NEAR_DUP_BANDS * PLANES_PER_BAND
     planes = hyperplanes(n_band_planes + N_SALT_PLANES)
 
     def sign_bits(lo: int, width: int) -> F.Column:
-        # arrow mode (default, round 4): one matmul per Arrow batch for
-        # the whole plane block; sql mode keeps the r3 interpreted folds
-        # (the A/B baseline — same sign rule, see vecmath.py).
-        if not _use_sql():
-            return vecmath.plane_bits_udf(planes[lo:lo + width])(
-                F.col("embedding")
-            )
-        acc = None
-        for p in range(lo, lo + width):
-            lit = "array(" + ",".join(f"CAST({v} AS DOUBLE)" for v in planes[p]) + ")"
-            bit = (
-                F.when(F.expr(DOT.format(a="embedding", b=lit)) > 0, F.lit(1 << (p - lo)))
-                .otherwise(F.lit(0))
-            )
-            acc = bit if acc is None else acc + bit
-        return acc
+        # one matmul per Arrow batch for the whole plane block
+        return vecmath.plane_bits_udf(planes[lo:lo + width])(F.col("embedding"))
 
     def band_of(lo: int) -> F.Column:
         return sign_bits(lo, PLANES_PER_BAND)
 
-    nrm_sql = (
-        "sqrt(aggregate(embedding, CAST(0 AS DOUBLE), "
-        "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    )
-    nrm = F.expr(nrm_sql) if _use_sql() else vecmath.vec_norm(F.col("embedding"))
+    nrm = vecmath.vec_norm(DIM)(F.col("embedding"))
     bands = F.array(
         *[
             F.struct(F.lit(bi).alias("band"), band_of(bi * PLANES_PER_BAND).alias("bucket"))
@@ -979,7 +928,7 @@ def embedding_dup_clusters(
        per-round min-label partial agg absorbs edge multiplicity at map
        side, and the job's output shrinks from O(|pairs|) (quadratic in
        cluster sizes) to O(|clustered vectors|) (linear in the corpus).
-    2. Under the default kernel scorer, IN-KERNEL STAR CONTRACTION
+    2. IN-KERNEL STAR CONTRACTION
        (vecmath.gram_star_kernel): each bucket group runs a local CC
        over its definite pairs (raw cosine >= threshold + 1e-4, all of
        which provably pass the exact ROUND(x,4) >= threshold test) and
@@ -989,9 +938,7 @@ def embedding_dup_clusters(
        as raw pairs for the exact JVM-side round + threshold filter, so
        the global CC input has the exact pair set's transitive closure
        (per-group star contraction preserves components; see the kernel
-       docstring for the margin proof). The sql/pair scorer tiers keep
-       the full verified pair stream — the A/B baseline that
-       test_vecmath_parity pins equal.
+       docstring for the margin proof).
 
     The per-round CC joins still shuffle the edge set, but star edges
     are O(vectors-per-bucket) rows of two longs — a vanishing fraction
@@ -1010,35 +957,27 @@ def _near_dup_cc_edges(
     audit: bool = False,
 ) -> DataFrame:
     """The (doc_a, doc_b) edge stream embedding_dup_clusters feeds into
-    connected_components — star-contracted in-kernel under the default
-    kernel scorer, the full verified pair stream under sql/pair (the A/B
-    baseline). Exposed separately so tools/dump_plans.py can audit the
-    edge subplan (the CC loop's eager localCheckpoints hide it from the
-    end plan)."""
+    connected_components, star-contracted in-kernel. Exposed separately
+    so tools/dump_plans.py can audit the edge subplan (the CC loop's
+    eager localCheckpoints hide it from the end plan)."""
     from . import vecmath
-    from .similarity import _scorer
+    from .similarity import DIM
 
-    if _scorer() == "kernel":
-        salted = _near_dup_candidates(spark, sf_dir, max_bucket, audit)
-        edges = salted.groupBy("label", "band", "bucket", "salt", "tsalt").applyInPandas(
-            vecmath.gram_star_kernel(threshold),
-            schema="id_a long, id_b long, kind int, cos double",
-        )
-        return (
-            edges.filter((F.col("kind") == 0) | (F.round("cos", 4) >= threshold))
-            .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-            .unionByName(
-                # capped-bucket reconnection edges (empty when no bucket
-                # splits — see _delegate_reconnect_pairs)
-                _delegate_reconnect_pairs(salted, threshold).select(
-                    F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-                )
+    salted = _near_dup_candidates(spark, sf_dir, max_bucket, audit)
+    edges = salted.groupBy("label", "band", "bucket", "salt", "tsalt").applyInPandas(
+        vecmath.gram_star_kernel(threshold, DIM),
+        schema="id_a long, id_b long, kind int, cos double",
+    )
+    return (
+        edges.filter((F.col("kind") == 0) | (F.round("cos", 4) >= threshold))
+        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+        .unionByName(
+            # capped-bucket reconnection edges (empty when no bucket
+            # splits — see _delegate_reconnect_pairs)
+            _delegate_reconnect_pairs(salted, threshold).select(
+                F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
             )
         )
-    return _embedding_near_dup_pairs(
-        spark, sf_dir, threshold, max_bucket, audit
-    ).select(
-        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
 
 
@@ -1726,20 +1665,23 @@ def semdedup_df(
     stage stays O(n * TARGET) instead of O(n^2 / k) with a frozen k (the
     sf10 dry-run pathology class). The count() this costs is one
     parquet-metadata job. The catalog entry pins n_clusters=8 on BOTH
-    sides (the DuckDB oracle unrolls a frozen k=8), so the oracle
-    comparison is tier-independent. Large adaptive k relies on the kernel-scorer
-    assignment path (numpy argmin); the SQL fallback would codegen one
-    struct per centroid and is only for small-k A/Bs. Measured at the
+    sides (the DuckDB oracle unrolls a frozen k=8). Large adaptive k
+    stays cheap because the assignment is one NumPy argmin per Arrow
+    batch (vecmath.assign_udf), not one SQL struct per centroid. The
+    within-cluster pairs are scored with the SQL DOT/NORM fold, the
+    expression the DuckDB oracle mirrors. Measured at the
     star_sf10 tier (200k vecs, 400x the oracle input, k = 3125): 28.7 s
     end-to-end on local[32] — the frozen-k form would have run ~3e9 pair
     cosines instead of ~n*TARGET."""
-    from .similarity import DOT, NORM, _assign, kmeans_fit
+    from . import vecmath
+    from .similarity import DOT, NORM, kmeans_fit
 
     if n_clusters is None:
         n_clusters = max(SEMDEDUP_MIN_K, emb.count() // SEMDEDUP_TARGET_CLUSTER)
     cents = kmeans_fit(emb, n_clusters=n_clusters, iters=iters)
     asg = emb.select(
-        "vec_id", "embedding", _assign(cents).cast("int").alias("cluster")
+        "vec_id", "embedding",
+        vecmath.assign_udf(cents)(F.col("embedding")).cast("int").alias("cluster"),
     )
     a = asg.select(
         F.col("vec_id").alias("lo"), F.col("embedding").alias("ae"),

@@ -1,89 +1,63 @@
-"""Arrow-batch vectorized vector math for the embedding plane.
+"""Arrow-batch vectorized vector math for the embedding plane: the one
+scoring engine of the ANN, LSH, IVF, k-means and near-dup operators.
 
-Round-4 optimization. Spark's array higher-order functions (`aggregate`,
-`zip_with`, `transform`) are CodegenFallback — every dot product runs as
-an interpreted Catalyst expression tree, ~20-30 us per 64-dim pair. At
-the sf10 dry run (BENCH/sf10.json) that interpreted constant was the
-shared bottleneck of the whole embedding family: ann_bruteforce 516 s,
+Spark's array higher-order functions (`aggregate`, `zip_with`,
+`transform`) are CodegenFallback — every dot product runs as an
+interpreted Catalyst expression tree, ~20-30 us per 64-dim pair. At the
+sf10 dry run (BENCH/sf10.json) that interpreted constant was the shared
+bottleneck of the whole embedding family: ann_bruteforce 516 s,
 ann_ivf_nprobe2 245 s, kmeans assignment 86 s, multiprobe 85 s. This
-module replaces the per-PAIR / per-VECTOR hot loops with scalar Pandas
-UDFs that stack each Arrow batch into an (n, dim) NumPy matrix and run
-one BLAS/einsum call — same float64 math, 1-2 orders of magnitude less
-per-row overhead — while keeping plan shape (joins, windows, filters)
-untouched.
+module stacks each Arrow batch (or bucket group) into an (n, dim) NumPy
+matrix and runs one BLAS/einsum call — same float64 math, 1-2 orders of
+magnitude less per-row overhead. The interpreted fold and the per-pair
+einsum join were kept for a while as A/B controls; their evidence stays
+frozen in BENCH/ann_ab*.json (12-66x at sf10).
+
+Every vector op takes its dimension from the geometry its caller holds
+(similarity.DIM, the hyperplanes, the centroids, the query matrix): a
+NULL row or a row of any other length is invalid, whatever Arrow batch
+or bucket group it arrives in, and scores as NULL or pairs with nothing.
 
 Cross-engine contract: results feed the same ROUND(x, 4) (cosine) /
-round 6 (centroids) quantization that already reconciles Spark's
-left-fold summation with DuckDB's `list_dot_product` order in the
-oracles. NumPy's pairwise summation is a third ordering inside the same
-tolerance; `tools/check_correctness.py` re-verifies every affected
-catalog entry (see test_vecmath_parity.py for the planted checks).
-
-The SQL-expression forms remain in similarity.py (`DOT`/`NORM`) as the
-oracle vocabulary and the A/B baseline (`SPARK_GRAFT_ANN_SCORER=sql`).
+round 6 (centroids) quantization that reconciles NumPy's summation
+order with DuckDB's `list_dot_product` order in the oracles;
+`tools/check_correctness.py` and tests/test_catalog_oracle_tail.py
+re-verify every embedding catalog entry against its DuckDB oracle.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _mat(s: pd.Series) -> np.ndarray:
-    """Stack an Arrow batch of array<float> into an (n, dim) float64
-    matrix. float32 -> float64 widening matches the SQL path's
-    CAST(x AS DOUBLE) before any arithmetic. Strict: assumes every row
-    is a non-NULL fixed-dim vector (use _mat_masked when the input may
-    carry NULL or ragged rows)."""
-    if len(s) == 0:
-        return np.zeros((0, 1), dtype=np.float64)
-    return np.stack(s.to_numpy()).astype(np.float64, copy=False)
-
-
-def _mat_masked(
-    s: pd.Series, expect_dim: int | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """(M, valid): stack with a per-row validity mask. A NULL row or a
-    row of the wrong length is invalid and zero-filled; callers emit
-    NULL for (or drop) those rows — the SQL scorer tier's
-    NULL-propagation semantics, where a bare np.stack would instead
-    abort the whole task on one corrupt row. NULL *elements* inside a
-    vector arrive as NaN from Arrow and stay NaN (same
-    contaminate-the-result behavior as the SQL fold). The all-valid fast
-    path is the plain _mat stack — zero overhead for clean batches.
-
-    expect_dim pins the valid dimension deterministically — every
-    factory UDF whose closure fixes the geometry (planes, centroids,
-    query matrices) passes it, so validity is a pure per-row function.
-    Without it the valid dim falls back to the batch's MODAL length:
-    with genuinely mixed-dim input the same row can then be valid in one
-    Arrow batch and NULL in another depending on partitioning/batch
-    boundaries (bincount.argmax ties resolve to the smaller dim) — the
-    generic pair_dot/vec_norm case keeps the heuristic only because it
-    has no declared geometry to pin against (round-5 advice)."""
+def _mat_masked(s: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(M, valid): stack an Arrow batch of array<float> into an (n, dim)
+    float64 matrix with a per-row validity mask. float32 -> float64
+    widening matches the oracle's CAST(x AS DOUBLE) before any
+    arithmetic. A NULL row or a row whose length is not `dim` is invalid
+    and zero-filled; callers emit NULL for (or drop) those rows, where a
+    bare np.stack would instead abort the whole task on one corrupt row.
+    NULL *elements* inside a vector arrive as NaN from Arrow and stay NaN
+    (they contaminate the result, as in the oracle's SQL fold). `dim` is
+    the caller's declared geometry, so validity is a pure per-row
+    function, independent of partitioning and batch boundaries. The
+    all-valid fast path is one plain stack."""
     n = len(s)
     if n == 0:
-        return np.zeros((0, expect_dim or 1), dtype=np.float64), np.zeros(0, dtype=bool)
+        return np.zeros((0, dim), dtype=np.float64), np.zeros(0, dtype=bool)
     arr = s.to_numpy()
     try:
         M = np.stack(arr).astype(np.float64, copy=False)
-        if expect_dim is None or M.shape[1] == expect_dim:
+        if M.shape[1] == dim:
             return M, np.ones(n, dtype=bool)
         # uniform batch of a foreign dim: every row invalid
-        return np.zeros((n, expect_dim), dtype=np.float64), np.zeros(n, dtype=bool)
+        return np.zeros((n, dim), dtype=np.float64), np.zeros(n, dtype=bool)
     except (ValueError, TypeError):
         pass  # NULL row or ragged dims: guarded slow path below
     lens = np.array([-1 if v is None else len(v) for v in arr], dtype=np.int64)
-    if expect_dim is not None:
-        dim = expect_dim
-    else:
-        pos = lens[lens > 0]
-        if pos.size == 0:
-            return np.zeros((n, 1), dtype=np.float64), np.zeros(n, dtype=bool)
-        dim = int(np.bincount(pos).argmax())
     valid = lens == dim
     M = np.zeros((n, dim), dtype=np.float64)
     idx = np.flatnonzero(valid)
@@ -104,38 +78,44 @@ def _nan_where_invalid(vals: np.ndarray, valid: np.ndarray) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(T.DoubleType())
-def pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Row-wise dot product of two array<float> columns (one einsum per
-    Arrow batch). The per-pair hot loop of every ANN / near-dup verify.
-    NULL/ragged rows on either side emit NULL (SQL-tier parity), never a
-    task abort."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    Ma, va = _mat_masked(a)
-    Mb, vb = _mat_masked(b)
-    if Ma.shape[1] != Mb.shape[1]:  # batch dims disagree: nothing matches
-        return pd.Series(np.full(len(a), np.nan))
-    return _nan_where_invalid(np.einsum("ij,ij->i", Ma, Mb), va & vb)
+def pair_dot(dim: int) -> "F.pandas_udf":
+    """Factory: row-wise dot product of two array<float> columns of
+    dimension `dim` (one einsum per Arrow batch) — the per-pair scoring
+    of the near-dup delegate reconnect. A NULL row, or a row of any other
+    length, on either side emits NULL, never a task abort."""
+
+    @F.pandas_udf(T.DoubleType())
+    def dot(a: pd.Series, b: pd.Series) -> pd.Series:
+        if len(a) == 0:
+            return pd.Series([], dtype="float64")
+        Ma, va = _mat_masked(a, dim)
+        Mb, vb = _mat_masked(b, dim)
+        return _nan_where_invalid(np.einsum("ij,ij->i", Ma, Mb), va & vb)
+
+    return dot
 
 
-@F.pandas_udf(T.DoubleType())
-def vec_norm(a: pd.Series) -> pd.Series:
-    """Row-wise L2 norm of an array<float> column. Computed once per
-    SIDE before the candidate join (n rows), never per pair. NULL/ragged
-    rows emit NULL (SQL-tier parity)."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    M, valid = _mat_masked(a)
-    return _nan_where_invalid(np.sqrt(np.einsum("ij,ij->i", M, M)), valid)
+def vec_norm(dim: int) -> "F.pandas_udf":
+    """Factory: row-wise L2 norm of an array<float> column of dimension
+    `dim`. Computed once per row before any candidate join, never per
+    pair. A NULL row, or a row of any other length, emits NULL."""
+
+    @F.pandas_udf(T.DoubleType())
+    def norm(a: pd.Series) -> pd.Series:
+        if len(a) == 0:
+            return pd.Series([], dtype="float64")
+        M, valid = _mat_masked(a, dim)
+        return _nan_where_invalid(np.sqrt(np.einsum("ij,ij->i", M, M)), valid)
+
+    return norm
 
 
 def plane_bits_udf(planes: list[list[float]]) -> "F.pandas_udf":
     """Factory: sign-bit bucket id against a fixed hyperplane set.
-    bit i = 1 << i when embedding . planes[i] > 0 — identical rule to
-    similarity._bucket_expr / dedup.band_of, one (n,dim)@(dim,k) matmul
-    per Arrow batch instead of k interpreted folds per row. The plane
-    matrix is captured in the closure and shipped once per task."""
+    bit i = 1 << i when embedding . planes[i] > 0 — the oracle's rule,
+    one (n,dim)@(dim,k) matmul per Arrow batch instead of k interpreted
+    folds per row. The plane matrix is captured in the closure and
+    shipped once per task."""
     P = np.asarray(planes, dtype=np.float64).T  # (dim, k)
     weights = (1 << np.arange(P.shape[1], dtype=np.int64))
 
@@ -164,7 +144,7 @@ def _dists_to(cents: np.ndarray, M: np.ndarray) -> np.ndarray:
 def assign_udf(centroids: list[list[float]]) -> "F.pandas_udf":
     """Factory: argmin cluster id over literal centroids, ties broken by
     lowest cluster id — np.argmin takes the FIRST minimum, matching the
-    (d, j) struct array_min tie rule of similarity._assign_col."""
+    oracle's (d, j) ordering."""
     C = np.asarray(centroids, dtype=np.float64)
 
     @F.pandas_udf(T.IntegerType())
@@ -180,49 +160,16 @@ def assign_udf(centroids: list[list[float]]) -> "F.pandas_udf":
     return assign
 
 
-def probe_list_udf(centroids: list[list[float]], nprobe: int) -> "F.pandas_udf":
-    """Factory: the nprobe nearest cluster ids, nearest first, ties by
-    cluster id (stable argsort over distance = (d, j) ordering, the same
-    rule as similarity._probe_list_col's struct array_sort)."""
-    C = np.asarray(centroids, dtype=np.float64)
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probes(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype="object")
-        M, valid = _mat_masked(col, C.shape[1])  # pinned geometry dim
-        if not valid.any():
-            return pd.Series([None] * len(col), dtype="object")
-        order = np.argsort(_dists_to(C, M), axis=1, kind="stable")
-        lists = list(order[:, :nprobe].astype(np.int32))
-        if valid.all():
-            return pd.Series(lists)
-        return pd.Series(
-            [v if ok else None for v, ok in zip(lists, valid)], dtype="object"
-        )
-
-    return probes
-
-
-def cosine4(a_col: str, b_col: str, na_col: str, nb_col: str) -> Column:
-    """round(cosine, 4) from precomputed per-side norms — the rounding
-    stays JVM-side (F.round, HALF_UP) so quantization semantics are
-    byte-identical to the SQL scorer it replaces."""
-    return F.round(
-        pair_dot(F.col(a_col), F.col(b_col)) / (F.col(na_col) * F.col(nb_col)), 4
-    )
-
-
 # ---------------------------------------------------------------------------
-# group top-k kernel (the `kernel` scorer tier)
+# group top-k kernel (the ANN scorer)
 #
 # Per-PAIR scoring — join first, score each (query, cand) row — ships BOTH
 # embeddings across the Arrow pipe once per pair: 2 x 64 x 4 B x |pairs|.
 # At the sf10 brute force (2k queries x 200k corpus = 400M pairs) that is
-# ~200 GB of transfer for 51 MB of distinct vectors; the pair-arrow A/B run
-# confirmed it transfer-bound (killed after 6 min; BENCH/ann_ab_sf10.json).
-# The group kernel inverts the dataflow: the QUERY matrix rides a
-# SparkContext broadcast keyed by probe bucket, the CORPUS crosses the
+# ~200 GB of transfer for 51 MB of distinct vectors; the measured per-pair
+# run was transfer-bound (killed after 6 min; BENCH/ann_ab_sf10.json).
+# The group kernel inverts the dataflow: the QUERY matrix rides the task
+# binary's broadcast keyed by probe bucket, the CORPUS crosses the
 # Arrow pipe exactly once, and each Arrow batch scores against its bucket's
 # query matrix with one BLAS matmul. Per-batch top-k pruning means only
 # O(|queries| x k) rows per batch return to the JVM.
@@ -289,8 +236,8 @@ def group_topk_kernel(groups, k: int, key_fn=None):
     how many Arrow batches it contains."""
 
     # the query matrices fix the geometry: corpus rows of any other dim
-    # are invalid deterministically (round-5 advice: never the batch mode)
-    exp_dim = next(iter(groups.values()))[1].shape[1] if groups else None
+    # are invalid, whatever batch they arrive in
+    dim = next(iter(groups.values()))[1].shape[1] if groups else 0
 
     def gen(batches):
         out_q: list[np.ndarray] = []
@@ -307,10 +254,10 @@ def group_topk_kernel(groups, k: int, key_fn=None):
             n_acc = q.shape[0]
 
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or not groups:
                 continue
             cids = pdf["cand_id"].to_numpy().astype(np.int64, copy=False)
-            C, cvalid = _mat_masked(pdf["embedding"], exp_dim)
+            C, cvalid = _mat_masked(pdf["embedding"], dim)
             if not cvalid.all():  # NULL/ragged corpus rows can never rank
                 cids, C = cids[cvalid], C[cvalid]
                 pdf = pdf.iloc[np.flatnonzero(cvalid)]
@@ -355,17 +302,18 @@ def group_topk_kernel(groups, k: int, key_fn=None):
     return gen
 
 
-def gram_pairs_kernel(threshold: float, margin: float = 1e-4):
-    """applyInPandas factory for bucketed near-dup SELF-join scoring: one
-    gram matmul per bucket group finds candidate (i, j) pairs with cosine
-    >= threshold - margin, then the kept pairs' cosines are RECOMPUTED
-    with the row-wise einsum — the exact reduction pair_dot uses — so the
-    emitted value is bit-identical to the pair tier regardless of BLAS
+def gram_pairs_kernel(threshold: float, dim: int, margin: float = 1e-4):
+    """applyInPandas factory for bucketed near-dup SELF-join scoring over
+    vectors of dimension `dim`: one gram matmul per bucket group finds
+    candidate (i, j) pairs with cosine >= threshold - margin, then the
+    kept pairs' cosines are RECOMPUTED with the row-wise einsum — the
+    exact reduction pair_dot uses — so the emitted value is bit-identical
+    to pair_dot's (the delegate reconnect's scorer) regardless of BLAS
     blocking in the (group-size-dependent) gram matmul. The matmul is
     only the candidate FILTER; margin (1e-4) dwarfs any summation-order
     noise (~1e-15), so no true pair can be lost at the boundary. Each
     vector crosses Arrow once per bucket it belongs to — never per pair
-    (the pair tier ships 2 x dim floats per candidate pair, which is
+    (a pair join ships 2 x dim floats per candidate pair, which is
     transfer-bound on quadratic bucket fan-outs at the 100x tier)."""
 
     def gram(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -378,12 +326,8 @@ def gram_pairs_kernel(threshold: float, margin: float = 1e-4):
                     "cos": np.array([], dtype=np.float64),
                 }
             )
-        # modal-dim fallback is deterministic HERE (unlike a scalar-UDF
-        # Arrow batch): applyInPandas delivers the WHOLE bucket group as
-        # one pdf, so validity is a function of group content only, never
-        # of partition/batch boundaries
-        V, gvalid = _mat_masked(pdf["embedding"])
-        if not gvalid.all():  # NULL/ragged rows pair with nothing (SQL parity)
+        V, gvalid = _mat_masked(pdf["embedding"], dim)
+        if not gvalid.all():  # NULL/ragged rows pair with nothing
             ids, V = ids[gvalid], V[gvalid]
             if ids.shape[0] < 2:
                 return pd.DataFrame(
@@ -427,10 +371,11 @@ def _local_components(n: int, i: np.ndarray, j: np.ndarray) -> np.ndarray:
         labels = new
 
 
-def gram_star_kernel(threshold: float, margin: float = 1e-4):
-    """applyInPandas factory for FUSED near-dup resolution: per-group
-    gram matmul -> in-kernel union-find -> O(group) star edges, instead
-    of the O(group^2) pair list of gram_pairs_kernel.
+def gram_star_kernel(threshold: float, dim: int, margin: float = 1e-4):
+    """applyInPandas factory for FUSED near-dup resolution over vectors
+    of dimension `dim`: per-group gram matmul -> in-kernel union-find ->
+    O(group) star edges, instead of the O(group^2) pair list of
+    gram_pairs_kernel.
 
     Emits two edge kinds:
     - kind=0 (star): (member, local-root) edges of the group's DEFINITE
@@ -466,10 +411,8 @@ def gram_star_kernel(threshold: float, margin: float = 1e-4):
         n = ids.shape[0]
         if n < 2:
             return empty
-        # whole-group pdf: modal-dim fallback is deterministic (see
-        # gram_pairs_kernel note)
-        V, svalid = _mat_masked(pdf["embedding"])
-        if not svalid.all():  # NULL/ragged rows pair with nothing (SQL parity)
+        V, svalid = _mat_masked(pdf["embedding"], dim)
+        if not svalid.all():  # NULL/ragged rows pair with nothing
             ids, V = ids[svalid], V[svalid]
             n = ids.shape[0]
             if n < 2:
@@ -525,9 +468,9 @@ def plane_bits_np(M: np.ndarray, planes: list[list[float]]) -> np.ndarray:
 
 
 def probe_list_np(centroids: list[list[float]], M: np.ndarray, nprobe: int) -> np.ndarray:
-    """(m, nprobe) nearest cluster ids, nearest first — the NumPy form of
-    probe_list_udf (stable argsort over distance == the (d, j) tie rule),
-    used driver-side on the collected query matrix in kernel mode."""
+    """(m, nprobe) nearest cluster ids, nearest first (stable argsort
+    over distance == the oracle's (d, j) tie rule), computed driver-side
+    on the collected query matrix."""
     C = np.asarray(centroids, dtype=np.float64)
     order = np.argsort(_dists_to(C, M), axis=1, kind="stable")
     return order[:, :nprobe].astype(np.int64)
@@ -544,7 +487,7 @@ def lsh_key_fn(planes: list[list[float]]):
 
 def assign_key_fn(centroids: list[list[float]]):
     """Corpus bucket key_fn: argmin-distance cluster id (first minimum on
-    ties — the (d, j) contract of assign_udf / similarity._assign_col)."""
+    ties — the (d, j) contract of assign_udf)."""
     Cn = np.asarray(centroids, dtype=np.float64)
 
     def key(C: np.ndarray, pdf: pd.DataFrame) -> np.ndarray:

@@ -26,10 +26,12 @@ a tiny `spark.range`; its `mapInArrow` reads the task's files with
 pyarrow and feeds them straight to the kernel. Span data never crosses
 from the JVM to Python, and nothing is shuffled: a batch is one write
 job of one stage. The driver lists the staged files and the checkpoint
-files and writes the commit records, and the tasks read the staged
-files, with pyarrow at the URI Spark writes to (session.qualified_uri),
-so the output root must be on a filesystem pyarrow opens (a local path
-or file://); run() rejects any other before its first job.
+files, reads and writes the staging marker, wipes a dead staging
+attempt and writes the commit records, and the tasks read the staged
+files: all of it with pyarrow at the URI Spark writes to
+(session.qualified_uri), so the output root must be on a filesystem
+pyarrow opens (a local path or file://); run() rejects any other before
+its first job. run() leaves the session's configuration as it found it.
 
 Commit protocol (mirrors Iceberg MERGE semantics with plain files):
 1. pending = all partition ids minus those with a checkpoint file of this
@@ -65,6 +67,7 @@ import os
 import re
 import time
 import uuid
+from collections.abc import Callable
 from datetime import datetime, timezone
 from functools import partial
 
@@ -80,12 +83,7 @@ from pyspark.sql.types import StructType
 from ..operators.extract import assemble, check_input_schema
 from ..operators.extract_arrow import OUT_SCHEMA, _bounded_slices, extract_record_batch
 from ..schema import CHECKPOINT_SCHEMA, METRICS_SCHEMA
-from ..session import (
-    arrow_fs,
-    fs_delete,
-    read_text_file,
-    write_text_file,
-)
+from ..session import arrow_fs
 
 # the kernel's output, plus each doc's part_id and input span count
 _INGEST_SCHEMA = OUT_SCHEMA.append(pa.field("part_id", pa.int32())).append(
@@ -94,6 +92,8 @@ _INGEST_SCHEMA = OUT_SCHEMA.append(pa.field("part_id", pa.int32())).append(
 _INGEST_SPARK_SCHEMA = from_arrow_schema(_INGEST_SCHEMA)
 # a commit record's file name: <run_id>-<partition_id>.parquet
 _RECORD_NAME = re.compile(r"(?P<run_id>.+)-(?P<pid>[0-9]+)\.parquet")
+# the staging marker: "<n_partitions> <input identity>" of a committed staging
+_STAGED_LAYOUT = "_STAGED_LAYOUT"
 
 
 class ExtractionPipeline:
@@ -157,7 +157,6 @@ class ExtractionPipeline:
         # commit records, where Spark writes
         fs, root = arrow_fs(spark, self.out_dir)
         committed = self.committed_partitions()
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         self._stage(input_df)
         batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
@@ -188,6 +187,8 @@ class ExtractionPipeline:
                     result.drop("n_spans_in")
                     .withColumn("n_spans_out", F.size("spans"))
                     .write.mode("overwrite")
+                    # replaces only the batch's part_id dirs
+                    .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("part_id")
                     .parquet(self.extracted_dir)
                 )
@@ -261,9 +262,7 @@ class ExtractionPipeline:
         and partition_id, as the parquet file `<run_id>-<partition_id>.parquet`
         under `path` on `fs`. The file is what Spark writes for the row:
         the same parquet schema (INT96 timestamps, required columns) and
-        Spark's schema metadata. It is written under a hidden temp name,
-        which Spark's reader skips, and moved onto its own name, so a file
-        under that name is whole and a redo replaces it."""
+        Spark's schema metadata, published whole by _publish."""
         fields = [
             f.with_type(pa.timestamp("ns")) if pa.types.is_timestamp(f.type) else f
             for f in to_arrow_schema(schema)
@@ -277,13 +276,10 @@ class ExtractionPipeline:
         table = pa.Table.from_pylist(
             [dict(zip(schema.names, row))], schema=pa.schema(fields, metadata=meta)
         )
-        name = f"{row[0]}-{row[1]}.parquet"
-        fs.create_dir(path)
-        pq.write_table(
-            table, f"{path}/.{name}.tmp", filesystem=fs,
-            use_deprecated_int96_timestamps=True,
+        _publish(
+            fs, path, f"{row[0]}-{row[1]}.parquet",
+            lambda f: pq.write_table(table, f, use_deprecated_int96_timestamps=True),
         )
-        fs.move(f"{path}/.{name}.tmp", f"{path}/{name}")
 
     @staticmethod
     def _content_key(df: DataFrame) -> str:
@@ -304,17 +300,19 @@ class ExtractionPipeline:
         doc_id). After staging, a commit batch reads only its own
         partitions' files, and a resume at 90% complete reads only the
         pending 10% of input bytes. Total input read: 1 full scan
-        (staging), then each staged file once.
+        (staging), then each staged file once. The marker is read, the
+        dir wiped and the marker published through the pyarrow
+        filesystem of the staging dir (session.arrow_fs).
 
         Crash-safe: the staging write is atomic-by-marker — the marker
-        is written only after the parquet job commits, so a crash
-        mid-staging restages from scratch. A missing marker WIPES the
-        staging dir first: run() sets partitionOverwriteMode=dynamic
-        (for the output tables), under which mode("overwrite") replaces
-        only the part_id dirs present in the NEW data — without the
-        wipe, a retry with a different bucket count (or an input that
-        leaves some part_id empty) would union dead-attempt orphan
-        dirs into every later scan. Staging is
+        is published (_publish) only after the parquet job commits, so a
+        crash mid-staging restages from scratch. A missing marker WIPES
+        the staging dir first: under partitionOverwriteMode=dynamic (a
+        session may set it), mode("overwrite") replaces only the part_id
+        dirs present in the NEW data — without the wipe, a retry with a
+        different bucket count (or an input that leaves some part_id
+        empty) would union dead-attempt orphan dirs into every later
+        scan. Staging is
         keyed by n_partitions AND the input's identity — the sorted
         source-file set for file-backed inputs, an order-independent
         content fingerprint for in-memory inputs (whose inputFiles() is
@@ -323,7 +321,6 @@ class ExtractionPipeline:
         than silently reused (an in-place
         rewrite of the same file paths is the one change this cannot
         see — delete _staged/ when rewriting a source in place)."""
-        marker = os.path.join(self.staged_dir, "_STAGED_LAYOUT")
         files = input_df.inputFiles()
         if files:
             src_key = hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()
@@ -343,15 +340,13 @@ class ExtractionPipeline:
             # would need a to_json pre-hash; the pipeline's input
             # contract is (doc_id, spans), which xxhash64 supports.)
             src_key = self._content_key(input_df)
-        # marker + wipe go through the Hadoop FS so staging works under
-        # any --output scheme (open()/shutil only resolve local paths;
-        # on hdfs://s3a:// they would either fail or silently restage)
         layout = f"{self.n_partitions} {src_key}"
-        staged_layout = read_text_file(self.spark, marker)
-        if staged_layout is None:
+        fs, staged_path = arrow_fs(self.spark, self.staged_dir)
+        marker = f"{staged_path}/{_STAGED_LAYOUT}"
+        if fs.get_file_info(marker).type == pafs.FileType.NotFound:
             # no marker = no committed staging: clear any half-written
             # attempt so dynamic partition overwrite cannot leave orphans
-            fs_delete(self.spark, self.staged_dir)
+            fs.delete_dir_contents(staged_path, missing_dir_ok=True)
             (
                 input_df.withColumn(
                     "part_id",
@@ -361,9 +356,9 @@ class ExtractionPipeline:
                 .partitionBy("part_id")
                 .parquet(self.staged_dir)
             )
-            write_text_file(self.spark, marker, layout)
-            staged_layout = layout
-        staged_layout = staged_layout.strip()
+            _publish(fs, staged_path, _STAGED_LAYOUT, lambda f: f.write(layout.encode()))
+        with fs.open_input_stream(marker) as f:
+            staged_layout = f.read().decode().strip()
         if staged_layout != layout:
             raise ValueError(
                 f"staged layout at {self.staged_dir} was bucketed for "
@@ -451,6 +446,21 @@ def _observed(df: DataFrame, batch: list[int]) -> tuple[DataFrame, Observation]:
         ]
     obs = Observation()
     return df.observe(obs, F.expr(f"struct({', '.join(exprs)}) AS counts")), obs
+
+
+def _publish(
+    fs: pafs.FileSystem, path: str, name: str, write: Callable[[pa.NativeFile], object]
+) -> None:
+    """Publish the file `name` under the directory `path` on `fs` whole:
+    `write(f)` writes its bytes to an output stream on the hidden temp
+    name `.<name>.tmp`, which Spark's reader skips, and the temp file is
+    moved onto `name`. A file under that name is therefore whole, and a
+    redo replaces it."""
+    fs.create_dir(path)
+    tmp = f"{path}/.{name}.tmp"
+    with fs.open_output_stream(tmp) as f:
+        write(f)
+    fs.move(tmp, f"{path}/{name}")
 
 
 def new_run_id() -> str:

@@ -73,17 +73,16 @@ def write_text_file(spark: SparkSession, path: str, content: str) -> None:
     raise AFTER the job's expensive work succeeded, failing the run on
     its very last (and cheapest) step.
 
-    Marker semantics: content lands in a sibling temp file that is
-    renamed over the destination, so a crash mid-write leaves either the
-    old marker or none — never an empty/truncated one that would strand
-    a fully-committed staging behind a layout-check error. On HDFS and
-    local filesystems the rename step is atomic; on object stores (S3A
-    renames are copy+delete) the delete→rename window can briefly expose
-    a missing marker, which degrades to a restage on resume — never a
-    torn marker, because the content is fully durable before the swap.
+    Content lands in a sibling temp file that is renamed over the
+    destination, so a crash mid-write leaves either the old file or
+    none — never an empty/truncated one. On HDFS and local filesystems
+    the rename step is atomic; on object stores (S3A renames are
+    copy+delete) the delete→rename window can briefly expose a missing
+    file — never a torn one, because the content is fully durable
+    before the swap.
     FileSystem.rename reports failure by RETURNING FALSE rather than
     raising, so the return value is checked and raised here — a silent
-    false would otherwise commit a job with no marker at all."""
+    false would otherwise finish a job without its file."""
     P = spark._jvm.org.apache.hadoop.fs.Path
     dst = P(path)
     tmp = P(path + "._tmp")
@@ -97,38 +96,6 @@ def write_text_file(spark: SparkSession, path: str, content: str) -> None:
         fs.delete(dst, False)
     if not fs.rename(tmp, dst):
         raise IOError(f"write_text_file: rename {path}._tmp -> {path} failed")
-
-
-def read_text_file(spark: SparkSession, path: str) -> str | None:
-    """Read a small driver-side text file through the Hadoop FileSystem
-    (any scheme); None if it does not exist. Counterpart of
-    write_text_file for markers the pipeline must re-read on resume.
-
-    Reads bytes via commons-io (faithful to content, trailing newlines
-    included); checksum verification is disabled on a PRIVATE
-    FileSystem.newInstance — never on the process-wide cached instance,
-    which every executor read shares in local mode — because a marker
-    legitimately rewritten by a non-Hadoop writer (plain open(), older
-    runs) leaves a stale .crc sidecar that a verified read would refuse."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.newInstance(jpath.toUri(), conf)
-    try:
-        if not fs.exists(jpath):
-            return None
-        fs.setVerifyChecksum(False)  # scoped to this private instance
-        stream = fs.open(jpath)
-        try:
-            # commons-io ships on Spark's classpath; returns a JVM string
-            # (py4j copies strings faithfully, unlike byte arrays)
-            return jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-    finally:
-        fs.close()
 
 
 def fs_exists(spark: SparkSession, path: str) -> bool:
@@ -167,12 +134,3 @@ def arrow_fs(spark: SparkSession, path: str) -> tuple[pafs.FileSystem, str]:
     except (pa.ArrowException, OSError) as exc:
         scheme = urlsplit(uri).scheme
         raise ValueError(f"pyarrow cannot open '{scheme}://' paths such as {uri}: {exc}") from exc
-
-
-def fs_delete(spark: SparkSession, path: str) -> None:
-    """Recursive Hadoop-FS delete (any scheme); no-op if absent. The
-    portable shutil.rmtree(..., ignore_errors=True)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        fs.delete(jpath, True)

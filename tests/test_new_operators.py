@@ -2217,7 +2217,7 @@ def test_embedding_neardup_cap_preserves_perturbed_pairs(spark, tmp_path):
     assert recall >= 0.9, f"perturbed-pair recall under forced cap: {recall}"
 
 
-def test_embedding_clusters_delegate_reconnect_tight_cluster(spark, tmp_path, monkeypatch):
+def test_embedding_clusters_delegate_reconnect_tight_cluster(spark, tmp_path):
     """An angularly TIGHT cluster larger than max_bucket defeats the
     sign-bit split (every member on the same side of every salt plane),
     so the residual direction-hash split parts it — by any bounded
@@ -2225,8 +2225,7 @@ def test_embedding_clusters_delegate_reconnect_tight_cluster(spark, tmp_path, mo
     RESOLUTION contract must still unify it: one delegate per sub-bucket
     is cross-scored (rsplit^2 tiny join) and in a tight cluster the
     delegates are themselves near pairs, so the components re-merge.
-    Asserts a single canonical for the whole cluster under a forced cap,
-    identically across all three scorer tiers."""
+    Asserts a single canonical for the whole cluster under a forced cap."""
     import numpy as np
 
     from docling_nlp_api_spark.operators.dedup import embedding_dup_clusters
@@ -2240,17 +2239,9 @@ def test_embedding_clusters_delegate_reconnect_tight_cluster(spark, tmp_path, mo
         rows, "vec_id long, embedding array<float>, label int"
     ).write.parquet(f"{d}/embeddings.parquet")
 
-    outs = {}
-    for tier in ("kernel", "pair", "sql"):
-        monkeypatch.setenv("SPARK_GRAFT_ANN_SCORER", tier)
-        rows_out = sorted(
-            map(tuple, embedding_dup_clusters(spark, d, max_bucket=8).collect())
-        )
-        outs[tier] = rows_out
-    assert outs["kernel"] == outs["pair"] == outs["sql"]
-
-    members = {r[0] for r in outs["kernel"]}
-    canons = {r[1] for r in outs["kernel"]}
+    rows_out = embedding_dup_clusters(spark, d, max_bucket=8).collect()
+    members = {r[0] for r in rows_out}
+    canons = {r[1] for r in rows_out}
     # every vector (incl. the with_planted_vec_dups copies) in ONE component
     assert {i for i in range(100)} <= members
     assert canons == {0}, f"cluster fragmented into canonicals {canons}"
@@ -2271,7 +2262,7 @@ def test_neardup_salt_window_depth():
     assert N_SALT_PLANES // NEAR_DUP_BANDS >= 12
 
 
-def test_embedding_identical_direction_group_stays_bounded(spark, tmp_path, monkeypatch):
+def test_embedding_identical_direction_group_stays_bounded(spark, tmp_path):
     """N IDENTICAL-direction vectors defeat both locality-preserving
     split levels: they share every salt-plane sign bit AND the same
     quantized unit direction, so before the third (row-uniform tsalt)
@@ -2281,7 +2272,7 @@ def test_embedding_identical_direction_group_stays_bounded(spark, tmp_path, monk
     boilerplate docs). Asserts (a) the staging bound actually holds for
     such a group under a forced cap, and (b) the resolution contract
     still unifies it into one component via the (salt, tsalt)-ordered
-    delegate chain, identically across scorer tiers."""
+    delegate chain."""
     import numpy as np
 
     from docling_nlp_api_spark.operators.dedup import (
@@ -2310,15 +2301,9 @@ def test_embedding_identical_direction_group_stays_bounded(spark, tmp_path, monk
     assert sizes["groups"] >= 4, f"identical-direction group never split: {sizes}"
     assert sizes["mx"] <= 3 * cap, f"bound violated: largest group {sizes['mx']}"
 
-    outs = {}
-    for tier in ("kernel", "pair", "sql"):
-        monkeypatch.setenv("SPARK_GRAFT_ANN_SCORER", tier)
-        outs[tier] = sorted(
-            map(tuple, embedding_dup_clusters(spark, d, max_bucket=cap).collect())
-        )
-    assert outs["kernel"] == outs["pair"] == outs["sql"]
-    members = {r[0] for r in outs["kernel"]}
-    canons = {r[1] for r in outs["kernel"]}
+    rows_out = embedding_dup_clusters(spark, d, max_bucket=cap).collect()
+    members = {r[0] for r in rows_out}
+    canons = {r[1] for r in rows_out}
     assert {i for i in range(60)} <= members
     assert canons == {0}, f"identical-direction cluster fragmented: {canons}"
 

@@ -104,11 +104,11 @@ def test_staged_crash_resume_identical(spark, tmp_path, input_df):
 
 def test_staged_restage_wipes_dead_attempt_orphans(spark, tmp_path, input_df):
     """A crash BETWEEN the staging parquet commit and the marker write
-    must not leak dead-attempt part_id dirs into the retry: run() sets
-    partitionOverwriteMode=dynamic, under which mode("overwrite") only
-    replaces partitions present in the NEW data, so a retry with a
-    smaller bucket count would otherwise read the union of both layouts.
-    _stage wipes the dir whenever the marker is absent."""
+    must not leak dead-attempt part_id dirs into the retry: in a session
+    with partitionOverwriteMode=dynamic, mode("overwrite") only replaces
+    partitions present in the NEW data, so a retry with a smaller bucket
+    count would otherwise read the union of both layouts. _stage wipes
+    the dir whenever the marker is absent."""
     dead = ExtractionPipeline(
         spark, str(tmp_path / "wo"), n_partitions=N_PARTS * 2, batch_size=BATCH,
     )
@@ -122,12 +122,20 @@ def test_staged_restage_wipes_dead_attempt_orphans(spark, tmp_path, input_df):
     }
     assert len(orphan_dirs) == N_PARTS * 2  # dead attempt's 16 part_id dirs
 
-    # retry at half the bucket count: dynamic overwrite alone would leave
-    # part_id=8..15 orphans; the wipe must remove them
+    # retry at half the bucket count in a dynamic-overwrite session:
+    # dynamic overwrite alone would leave part_id=8..15 orphans; the wipe
+    # must remove them (run() itself leaves the session mode alone, and a
+    # static overwrite would clear the dir without the wipe)
     p = ExtractionPipeline(
         spark, str(tmp_path / "wo"), n_partitions=N_PARTS, batch_size=BATCH,
     )
-    p.run(input_df)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        p.run(input_df)
+    finally:
+        spark.conf.set(key, mode)
     staged_dirs = {
         d.name for d in (tmp_path / "wo" / "_staged").iterdir() if d.is_dir()
     }
@@ -137,6 +145,19 @@ def test_staged_restage_wipes_dead_attempt_orphans(spark, tmp_path, input_df):
     )
     ref.run(input_df)
     assert _signature(p.read_output()) == _signature(ref.read_output())
+    assert p.read_metrics().agg(F.sum("docs_in")).collect()[0][0] == N_DOCS
+
+
+def test_run_leaves_session_overwrite_mode(spark, tmp_path, input_df):
+    """run() overwrites only its batches' output dirs through a write
+    option: the session's partitionOverwriteMode is the same after a run
+    as before it, so a later partitioned overwrite in the same session
+    keeps its own semantics."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    p = ExtractionPipeline(spark, str(tmp_path / "conf"), n_partitions=N_PARTS, batch_size=BATCH)
+    p.run(input_df)
+    assert spark.conf.get(key) == before
     assert p.read_metrics().agg(F.sum("docs_in")).collect()[0][0] == N_DOCS
 
 

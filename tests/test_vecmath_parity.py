@@ -1,19 +1,18 @@
-"""Arrow-scorer <-> SQL-scorer parity for the embedding family.
+"""Checks of the Arrow-batch NumPy kernels (vecmath.py) that score the
+embedding family.
 
-vecmath.py (round 4) replaces the interpreted aggregate/zip_with hot
-loops with Arrow-batch NumPy kernels. The cross-engine contract is the
-ROUND(x, 4) quantization, so the two scorers must agree EXACTLY on every
-emitted row — these tests pin that on the real sf tables, row-for-row,
-including bucket ids (sign bits), kmeans assignments/probe lists
-(tie rule: first minimum), and final cosines. A planted-vector check
-guards against shared-wrong-logic: the analytic cosine of a known pair
-is asserted against both scorers.
+Every embedding catalog entry equals its DuckDB oracle row for row in
+tests/test_catalog_oracle_tail.py::test_tail_oracle_exact; the tests
+here pin what the oracle comparison cannot see: non-empty results on the
+sf tables, cluster invariants, the (d, j) tie rule of the k-means
+assignment and probe list, the round-4 tie rule of the top-k kernel,
+NULL/ragged-row degradation, the pinned vector dimension, loud k-means
+overflow, and the analytic cosine of a known pair.
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 import pytest
 
@@ -22,14 +21,6 @@ from docling_nlp_api_spark.operators import similarity as S
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def _all_tiers(monkeypatch, build, tiers=("sql", "pair", "kernel")):
-    out = {}
-    for tier in tiers:
-        monkeypatch.setenv("SPARK_GRAFT_ANN_SCORER", tier)
-        out[tier] = _rows(build())
-    return out
 
 
 @pytest.mark.parametrize(
@@ -42,40 +33,32 @@ def _all_tiers(monkeypatch, build, tiers=("sql", "pair", "kernel")):
         (S.ivf_kmeans_topk, {"nprobe": 2}),
     ],
 )
-def test_scorers_agree_row_for_row(spark, sf_dir, monkeypatch, fn, kw):
-    got = _all_tiers(monkeypatch, lambda: fn(spark, sf_dir, **kw))
-    assert got["sql"] == got["pair"] == got["kernel"]
-    assert len(got["sql"]) > 0
+def test_scorers_agree_row_for_row(spark, sf_dir, fn, kw):
+    """Each ANN/LSH operator emits rows on the sf tables (its rows equal
+    the DuckDB oracle's in test_tail_oracle_exact)."""
+    assert len(_rows(fn(spark, sf_dir, **kw))) > 0
 
 
-def test_scorers_agree_embedding_near_dup(spark, sf_dir, monkeypatch):
+def test_scorers_agree_embedding_near_dup(spark, sf_dir):
+    """The gram-kernel near-dup pair list is non-empty on the sf tables
+    (it equals the DuckDB oracle's in test_tail_oracle_exact)."""
     from docling_nlp_api_spark.operators.dedup import embedding_near_dup
 
-    # near-dup is a banded self-join with three distinct scoring paths:
-    # sql = interpreted zip_with fold over the pair join, pair = the
-    # einsum pair_dot over the same join, kernel = gram_pairs_kernel
-    # (applyInPandas gram matmul per bucket group — a different code
-    # path entirely). All three must emit the identical pair set.
-    got = _all_tiers(monkeypatch, lambda: embedding_near_dup(spark, sf_dir))
-    assert got["sql"] == got["pair"] == got["kernel"]
-    assert len(got["sql"]) > 0
+    assert len(_rows(embedding_near_dup(spark, sf_dir))) > 0
 
 
-def test_scorers_agree_embedding_dup_clusters(spark, sf_dir, monkeypatch):
-    """The fused pairs->CC operator: all three tiers produce identical
-    cluster labelings, every planted dup (vec_id + 1,000,000) lands in
-    its base vector's component with the base as canonical, and labels
-    obey the transitive-closure invariant (canonical_id is itself a
-    member with is_canonical=True)."""
+def test_scorers_agree_embedding_dup_clusters(spark, sf_dir):
+    """The fused pairs->CC operator: every planted dup (vec_id +
+    PLANT_OFFSET) lands in its base vector's component, and labels obey
+    the transitive-closure invariant (canonical_id is itself a member
+    with is_canonical=True)."""
     from docling_nlp_api_spark.operators.dedup import (
         PLANT_OFFSET,
         VEC_PLANT_EVERY,
         embedding_dup_clusters,
     )
 
-    got = _all_tiers(monkeypatch, lambda: embedding_dup_clusters(spark, sf_dir))
-    assert got["sql"] == got["pair"] == got["kernel"]
-    rows = got["kernel"]
+    rows = _rows(embedding_dup_clusters(spark, sf_dir))
     assert len(rows) > 0
     label = {vec_id: canon for vec_id, canon, _ in rows}
     canonical = {vec_id for vec_id, _, is_c in rows if is_c}
@@ -91,11 +74,10 @@ def test_scorers_agree_embedding_dup_clusters(spark, sf_dir, monkeypatch):
     assert all(base % VEC_PLANT_EVERY == 0 for base, _ in plants)
 
 
-def test_pair_dot_and_norm_analytic(spark, monkeypatch):
-    """Ground truth independent of BOTH scorers: hand-computed cosine of
-    two fixed vectors (padded to dim 4 for brevity; the kernels are
-    dim-agnostic)."""
-    monkeypatch.setenv("SPARK_GRAFT_ANN_SCORER", "arrow")
+def test_pair_dot_and_norm_analytic(spark):
+    """Ground truth independent of the kernels: hand-computed cosine of
+    two fixed vectors (dim 4 for brevity; the kernels take any pinned
+    dim), rounded JVM-side the way _pair_cosine rounds it."""
     from pyspark.sql import functions as F
 
     from docling_nlp_api_spark.operators import vecmath
@@ -104,13 +86,11 @@ def test_pair_dot_and_norm_analytic(spark, monkeypatch):
     df = (
         spark.createDataFrame([(a, b)], "a array<float>, b array<float>")
         .select(
-            "a",
-            "b",
-            vecmath.pair_dot(F.col("a"), F.col("b")).alias("dot"),
-            vecmath.vec_norm(F.col("a")).alias("na"),
-            vecmath.vec_norm(F.col("b")).alias("nb"),
+            vecmath.pair_dot(4)(F.col("a"), F.col("b")).alias("dot"),
+            vecmath.vec_norm(4)(F.col("a")).alias("na"),
+            vecmath.vec_norm(4)(F.col("b")).alias("nb"),
         )
-        .select("dot", "na", "nb", vecmath.cosine4("a", "b", "na", "nb").alias("cos4"))
+        .withColumn("cos4", F.round(F.col("dot") / (F.col("na") * F.col("nb")), 4))
     )
     r = df.first()
     dot = sum(x * y for x, y in zip(a, b))
@@ -122,7 +102,7 @@ def test_pair_dot_and_norm_analytic(spark, monkeypatch):
     assert r["cos4"] == round(dot / (na * nb), 4)
 
 
-def test_plane_bits_analytic(spark, monkeypatch):
+def test_plane_bits_analytic(spark):
     """Sign-bit bucket vs hand computation for two planes where the signs
     are unambiguous (|dot| >> 0)."""
     from pyspark.sql import functions as F
@@ -157,7 +137,7 @@ def test_per_query_topk_numpy():
     assert got == [(7, 1, 0.9), (7, 3, 0.89995), (9, 1, 0.3)]
 
 
-def test_kernel_band_keeps_round4_ties(spark, monkeypatch):
+def test_kernel_band_keeps_round4_ties(spark):
     """Two candidates whose RAW cosines differ by < 1e-4 but round to the
     SAME 4-decimal value must BOTH survive kernel pruning (KEEP_BAND), so
     the JVM window can break the rounded tie by cand_id ASC — here the
@@ -189,27 +169,29 @@ def test_kernel_band_keeps_round4_ties(spark, monkeypatch):
     assert len(got) == 2  # k=2: vec 3 pruned, query 0 never self-matched
 
 
-def test_assign_and_probe_tie_rule(spark, monkeypatch):
+def test_assign_and_probe_tie_rule(spark):
     """A vector EXACTLY equidistant from two centroids must pick the
-    lower cluster id in both scorers (the (d, j) contract)."""
+    lower cluster id, in the k-means assignment (assign_udf), the IVF
+    corpus key (assign_key_fn) and the driver-side query probe list
+    (probe_list_np): the (d, j) contract."""
+    import numpy as np
     from pyspark.sql import functions as F
+
+    from docling_nlp_api_spark.operators import vecmath
 
     cents = [[1.0, 0.0], [-1.0, 0.0], [0.0, 10.0]]
     df = spark.createDataFrame([([0.0, 0.0],)], "embedding array<float>")
-    for scorer in ("sql", "arrow"):
-        monkeypatch.setenv("SPARK_GRAFT_ANN_SCORER", scorer)
-        r = df.select(
-            S._assign(cents).alias("cl"),
-            S._probe_list(cents, 2).alias("probes"),
-        ).first()
-        assert r["cl"] == 0, scorer
-        assert list(r["probes"]) == [0, 1], scorer
+    r = df.select(vecmath.assign_udf(cents)(F.col("embedding")).alias("cl")).first()
+    assert r["cl"] == 0
+    assert vecmath.assign_key_fn(cents)(np.zeros((1, 2)), None).tolist() == [0]
+    probes = vecmath.probe_list_np(cents, np.zeros((1, 2)), 2)
+    assert probes.tolist() == [[0, 1]]
 
 
 def test_null_and_ragged_rows_degrade_to_null(spark):
     """A NULL embedding row (or one with a foreign dim) must emit NULL
-    from every Arrow-kernel vector op — the SQL tier's NULL-propagation
-    semantics — never abort the Python worker. Valid neighbors in the
+    from every Arrow-kernel vector op — the oracle's SQL NULL
+    propagation — never abort the Python worker. Valid neighbors in the
     same Arrow batch keep their exact values (the guarded slow path
     zero-fills invalid rows without disturbing the rest)."""
     from pyspark.sql import functions as F
@@ -227,8 +209,8 @@ def test_null_and_ragged_rows_degrade_to_null(spark):
         r["vec_id"]: (r["n"], r["d"], r["b"])
         for r in df.select(
             "vec_id",
-            vecmath.vec_norm(F.col("v")).alias("n"),
-            vecmath.pair_dot(F.col("v"), F.col("v")).alias("d"),
+            vecmath.vec_norm(2)(F.col("v")).alias("n"),
+            vecmath.pair_dot(2)(F.col("v"), F.col("v")).alias("d"),
             vecmath.plane_bits_udf([[1.0, 0.0], [0.0, -1.0]])(F.col("v")).alias("b"),
         ).collect()
     }
@@ -239,20 +221,52 @@ def test_null_and_ragged_rows_degrade_to_null(spark):
 
     cents = [[1.0, 0.0], [0.0, 1.0]]
     got2 = {
-        r["vec_id"]: (r["cl"], r["pr"])
+        r["vec_id"]: r["cl"]
         for r in df.select(
-            "vec_id",
-            vecmath.assign_udf(cents)(F.col("v")).alias("cl"),
-            vecmath.probe_list_udf(cents, 2)(F.col("v")).alias("pr"),
+            "vec_id", vecmath.assign_udf(cents)(F.col("v")).alias("cl")
         ).collect()
     }
-    assert got2[0] == (1, [1, 0])
-    assert got2[1] == (None, None)
-    assert got2[2] == (None, None)
-    assert got2[3] == (1, [1, 0])
+    assert got2 == {0: 1, 1: None, 2: None, 3: 1}
 
 
-def test_kernel_tiers_skip_invalid_rows_end_to_end(spark, monkeypatch):
+def test_vector_dim_is_pinned_not_batch_modal(spark):
+    """Validity is a per-row function of the declared dimension: rows of
+    a foreign dimension are NULL, and every row gets the same value
+    whether the input is one partition (where the foreign dimension is
+    the batch majority) or spread over several (where some batches hold
+    only one dimension). A batch-modal dimension made the dim-2 rows
+    NULL in the single batch and valid in batches of their own."""
+    from pyspark.sql import functions as F
+
+    from docling_nlp_api_spark.operators import vecmath
+
+    rows = [(i, [1.0, float(i), 2.0]) for i in range(6)]  # dim 3: majority
+    rows += [(10 + i, [3.0, float(i)]) for i in range(3)]  # dim 2: pinned
+
+    def run(df):
+        return {
+            r["vec_id"]: (r["n"], r["d"], r["b"])
+            for r in df.select(
+                "vec_id",
+                vecmath.vec_norm(2)(F.col("v")).alias("n"),
+                vecmath.pair_dot(2)(F.col("v"), F.col("v")).alias("d"),
+                vecmath.plane_bits_udf([[1.0, 0.0], [0.0, -1.0]])(F.col("v")).alias("b"),
+            ).collect()
+        }
+
+    src = spark.createDataFrame(rows, "vec_id long, v array<float>")
+    one = run(src.coalesce(1))
+    spread = run(src.repartition(4, "vec_id"))
+    assert one == spread
+    assert all(one[i] == (None, None, None) for i in range(6))
+    for i in range(3):
+        n, d, b = one[10 + i]
+        assert d == pytest.approx(9.0 + i * i)
+        assert n == pytest.approx(math.sqrt(9.0 + i * i))
+        assert b == 1  # 3 > 0 sets bit 0; -i <= 0 never sets bit 1
+
+
+def test_kernel_tiers_skip_invalid_rows_end_to_end(spark):
     """The mapInPandas/applyInPandas kernels (group top-k, gram pairs)
     must DROP NULL/ragged corpus rows — they can never rank or pair —
     and still emit the exact results for the valid rows. Before the
@@ -274,7 +288,7 @@ def test_kernel_tiers_skip_invalid_rows_end_to_end(spark, monkeypatch):
             ],
         }
     )
-    out = vecmath.gram_pairs_kernel(0.9)(pdf)
+    out = vecmath.gram_pairs_kernel(0.9, 2)(pdf)
     assert list(out["id_a"]) == [1] and list(out["id_b"]) == [2]
 
     # group top-k kernel: NULL corpus row inside the only batch
@@ -324,21 +338,37 @@ def test_plant_offset_blocks_are_disjoint():
         assert hi <= (1 << 63) - 1  # stays inside signed int64
 
 
-def test_kmeans_fit_survives_ragged_row(spark, monkeypatch):
+def test_kmeans_fit_survives_ragged_row(spark):
     """kmeans_fit's assignment pass must apply the same validity gate as
     its init: a ragged (wrong-dim) vector previously assigned to a NULL
     cluster whose posexplode rows survived to the driver, and new[cl]
     raised TypeError on the None key — one corrupt row killed the fit
     and everything built on it (ivf_kmeans_topk, semdedup)."""
-    from docling_nlp_api_spark.operators import similarity as S
+    rows = [(i, [float(i), float(i % 3)] + [0.0] * (S.DIM - 2)) for i in range(12)]
+    rows.append((90, None))
+    rows.append((91, [1.0, 2.0, 3.0]))  # ragged: dim 3, not DIM
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cents = S.kmeans_fit(emb, n_clusters=2, iters=2)
+    clean = spark.createDataFrame(rows[:12], "vec_id long, embedding array<float>")
+    assert cents == S.kmeans_fit(clean, n_clusters=2, iters=2)
 
-    for tier in ("kernel", "sql"):
-        monkeypatch.setenv("SPARK_GRAFT_ANN_SCORER", tier)
-        rows = [(i, [float(i), float(i % 3)] + [0.0] * (S.DIM - 2))
-                for i in range(12)]
-        rows.append((90, None))
-        rows.append((91, [1.0, 2.0, 3.0]))  # ragged: dim 3, not DIM
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        cents = S.kmeans_fit(emb, n_clusters=2, iters=2)
-        clean = spark.createDataFrame(rows[:12], "vec_id long, embedding array<float>")
-        assert cents == S.kmeans_fit(clean, n_clusters=2, iters=2), tier
+
+@pytest.mark.parametrize(
+    "component,n_rows",
+    [
+        (1.0e7, 1),  # one pico-unit value past 2^63: the cast overflows
+        (5.0e6, 2),  # each value fits a long, their sum does not
+    ],
+)
+def test_kmeans_fit_overflow_raises(spark, component, n_rows):
+    """The fixed-point mean never wraps silently: a cluster whose
+    pico-unit sum (v * 1e12 per component) exceeds 2^63 fails the fit.
+    The session runs with ANSI mode on (the Spark 4 default), under
+    which the long cast and the long SUM raise on overflow."""
+    from pyspark.errors import ArithmeticException
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    rows = [(i, [component] * 2) for i in range(n_rows)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ArithmeticException, match="OVERFLOW"):
+        S.kmeans_fit(emb, n_clusters=1, iters=1)

@@ -309,12 +309,12 @@ AUDITS: dict[str, tuple[list[str], list[str]]] = {
         ["Generate"],
         ["Exchange", "Join", r"(regexp_extract_all\(lower[\s\S]*){2,}"],
     ),
-    # multi-probe LSH (kernel scorer default since r4): the probe
-    # fan-out lives in the broadcast query-group map — the corpus
-    # crosses Arrow ONCE through MapInPandas keyed by its single bucket,
-    # no join materializes candidates at all, and ranking is a per-query
-    # window (WindowGroupLimit). The sql tier's Generate-explode +
-    # equi-join shape remains the A/B baseline (BENCH/ann_ab*.json).
+    # multi-probe LSH (kernel scorer): the probe fan-out lives in the
+    # broadcast query-group map — the corpus crosses Arrow ONCE through
+    # MapInPandas keyed by its single bucket, no join materializes
+    # candidates at all, and ranking is a per-query window
+    # (WindowGroupLimit). The Generate-explode + equi-join shape it
+    # replaced is measured in BENCH/ann_ab*.json.
     "ann_lsh_multiprobe_topk": (
         ["MapInPandas", "Window"],
         ["CartesianProduct", "BroadcastNestedLoopJoin", "Join"],
