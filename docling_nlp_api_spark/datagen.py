@@ -20,7 +20,7 @@ from .spec import MEDIA_KINDS  # noqa: F401  (vocabulary sanity)
 SEED = 42
 # sf0.5 is the scaling-bench tier: large enough that per-trial compute
 # dominates fixed job overhead at 32 cores (Amdahl-honest measurement).
-# sf5/sf10 are the round-4 100x stress tiers (tools/extract_scale.py):
+# sf5/sf10 are the round-4 100x stress tiers (BENCH/extract_sf*.json):
 # 100x the sf0.1 headline corpus, ~5k mega-docs, ~420M spans at sf10.
 TIER_DOCS = {
     "sf0.001": 500, "sf0.01": 5000, "sf0.1": 50000, "sf0.5": 250000,

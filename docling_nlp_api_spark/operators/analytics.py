@@ -24,10 +24,6 @@ ANCHOR_DATE = "2024-01-30"
 SPINE_START, SPINE_END = "2024-01-01", "2024-01-30"
 
 
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
 def with_date_hour(events: DataFrame) -> DataFrame:
     """X8: derived ISO date + hour columns (analytics_service.py:78-79)."""
     return events.withColumn("date", F.date_format("ts", "yyyy-MM-dd")).withColumn(

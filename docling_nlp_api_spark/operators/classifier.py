@@ -218,11 +218,6 @@ def _lr_fit(
     return w, feat
 
 
-def lr_train(docs: DataFrame, **kw) -> list[float]:
-    """The fitted weight vector (see _lr_fit)."""
-    return _lr_fit(docs, **kw)[0]
-
-
 def lr_weights_df(spark: SparkSession, docs: DataFrame, dim: int = LR_DIM) -> DataFrame:
     """The trained model as a table: (bucket, weight) — dim rows. This is
     the catalog's evidence that distributed TRAINING (not just inference)

@@ -13,10 +13,6 @@ from pyspark.sql import functions as F
 from ..spec import STOPWORDS_40, TOKEN_RE, TOP_K_KEYWORDS
 
 
-def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def tokens_col(text=None):
     """X3: regex word tokenizer (lowercased, >=3 latin letters)."""
     text = F.col("text") if text is None else text

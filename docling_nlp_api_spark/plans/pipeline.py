@@ -66,7 +66,6 @@ import json
 import os
 import re
 import time
-import uuid
 from collections.abc import Callable
 from datetime import datetime, timezone
 from functools import partial
@@ -461,7 +460,3 @@ def _publish(
     with fs.open_output_stream(tmp) as f:
         write(f)
     fs.move(tmp, f"{path}/{name}")
-
-
-def new_run_id() -> str:
-    return uuid.uuid4().hex[:12]

@@ -17,6 +17,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """A local[cores] session with this package's defaults; `extra_conf`
+    entries are applied last and override them. The streaming state
+    store keeps Spark's default provider: a deployment whose per-key
+    state must spill to disk picks RocksDB here or with `spark-submit
+    --conf`, as `spark.sql.streaming.stateStore.providerClass=
+    org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
+    (tests/test_streaming_rocksdb.py pins that results do not change)."""
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
@@ -48,16 +55,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        # production default for the stateful streaming plane (T5/T7):
-        # at 10^12-doc scale the per-key state must spill to disk, which
-        # the HDFS-backed in-memory provider cannot. rocksdbjni ships
-        # with Spark 4; results are provider-independent
-        # (tests/test_streaming_rocksdb.py pins parity)
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

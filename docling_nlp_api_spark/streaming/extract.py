@@ -98,21 +98,28 @@ def run_extract_stream(
     applies it per micro-batch with no semantic delta vs batch.
     max_files_per_trigger=1 (default) exercises per-file commit
     granularity (tests); None drains everything in one micro-batch —
-    the throughput configuration measured by tools/stream_bench.py."""
+    the throughput configuration measured in BENCH/stream_bench.json.
+    The session's configuration is left as it was found."""
     # recentProgress is a ring buffer capped at
     # spark.sql.streaming.numRecentProgressUpdates (default 100) — a drop
     # of >100 files would silently undercount; raise the cap for the
-    # drain so the returned batch count stays exact
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
-    stream = extract(read_span_stream(spark, src_dir, max_files_per_trigger))
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    progress = q.recentProgress
+    # drain so the returned batch count stays exact, and restore the
+    # caller's value once the progress has been read
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        stream = extract(read_span_stream(spark, src_dir, max_files_per_trigger))
+        q = (
+            stream.writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        progress = q.recentProgress
+    finally:
+        spark.conf.set(key, prev)
     return len([p for p in progress if p["numInputRows"] > 0])

@@ -74,7 +74,7 @@ def run_dedup(
     )
 
     # 8x4 banding is the production default per the measured recall/cost
-    # sweep (BENCH/lsh_curve.md, tools/lsh_curve.py): 0.948 recall of the
+    # sweep (BENCH/lsh_curve.md): 0.948 recall of the
     # planted truth at near-1.0 candidate precision — loose 16x2 buys
     # recall 1.0 only at 4.3x the candidate volume (the verify-join input
     # at 100 TB), tight 16x8 drops recall to 0.90 and doubles minhash cost

@@ -226,8 +226,12 @@ def test_extract_stream_matches_batch_and_resumes(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     stage_span_chunks(spark, src, n_docs=90, n_chunks=3)
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    spark.conf.unset(key)  # start from the default, whatever ran before
+    before = spark.conf.get(key)
     n1 = run_extract_stream(spark, src, out, ckpt)
     assert n1 == 3  # one micro-batch per staged file
+    assert spark.conf.get(key) == before  # the caller's conf is restored
 
     def canon(df):
         return {

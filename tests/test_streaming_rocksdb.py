@@ -3,8 +3,9 @@ first-seen dedup and T5 user-totals state operators produce IDENTICAL
 results under the RocksDB state store provider — the production backend
 at 10^12-key scale (per-key state must spill to disk; the default
 HDFS-backed provider holds it in executor memory). rocksdbjni ships with
-Spark 4, so this runs in-sandbox; `SPARK_GRAFT_STATE_STORE=rocksdb`
-flips the session factory to it (session.py)."""
+Spark 4, so this runs in-sandbox. The tests set the provider on the
+session conf; a deployment passes the same key to `get_spark(extra_conf=...)`
+or `spark-submit --conf`."""
 
 from __future__ import annotations
 
