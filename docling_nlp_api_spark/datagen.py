@@ -11,6 +11,7 @@ Tiers (FIXTURES.md §2): sf0.001 -> 500 docs, sf0.01 -> 5,000, sf0.1 ->
 from __future__ import annotations
 
 import hashlib
+from pathlib import Path
 from typing import Iterator
 
 import numpy as np
@@ -260,7 +261,11 @@ def spans_df(spark, n_docs: int, partitions: int | None = None, start: int = 0):
     )
 
 
-def ensure_spans_parquet(spark, tier: str, base_dir: str = "/root/repo/.data") -> str:
+# generated tiers live in the checkout this package is imported from
+DATA_DIR = str(Path(__file__).resolve().parents[1] / ".data")
+
+
+def ensure_spans_parquet(spark, tier: str, base_dir: str = DATA_DIR) -> str:
     """Materialize a tier to parquet once; reuse across runs. The path is
     versioned on fixture-schema changes (v2 = per-span bbox) so stale
     caches regenerate instead of being misread; pre-bbox caches are

@@ -8,9 +8,11 @@ Design (SPEC.md §7):
 - The kernel flattens each batch to ONE columnar span table and runs
   every rule of SPEC.md as numpy / pyarrow.compute column ops: no
   per-document Python in the hot path.
-- The kernel returns field-wise arrays; ``arrays_zip`` reassembles the
-  output span structs JVM-side (`assemble`, shared with the pipeline,
-  which feeds the kernel from its staged files instead).
+- The kernel returns field-wise arrays; `output_batch` builds the final
+  rows from them in Arrow, in the same task: the span structs over the
+  kernel's shared list offsets and the metadata map. The rows cross
+  back to the JVM once, already in extract()'s type; the pipeline runs
+  the same `output_batch` and writes its rows to parquet in the task.
 
 This module also holds the kernel's word counter, `_count_words`; the
 kernel looks it up here at call time, so it can be swapped at module
@@ -27,10 +29,12 @@ import threading
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import ArrayType, StructType
 
-from .extract_arrow import OUT_SPARK_SCHEMA, extract_map_in_arrow, utf8_buffers
+from .extract_arrow import extract_map_in_arrow, utf8_buffers
 
 
 # Bytes per block of the whitespace scan: the block and its three scratch
@@ -217,43 +221,82 @@ def check_input_schema(schema: StructType) -> None:
         raise ValueError(f"extract(): spans struct missing fields {sorted(missing)}")
 
 
-# extract()'s output columns as SQL strings: a projection costs one call
-# into the JVM however many expressions it holds. arrays_zip names its
-# struct fields after its arguments, hence the renaming projection first.
-# span_pages / span_bboxes are PARALLEL arrays (page number / layout bbox
-# of spans[i]) rather than fields inside the span struct: the north-rule
-# equality invariant is pinned on (kind, text, media_ref, order) and must
-# not change shape
-_SPAN_FIELDS = ("kinds AS kind", "texts AS text", "media_refs AS media_ref", "orders AS `order`")
-_ASSEMBLE_SQL = (
-    "doc_id",
-    "arrays_zip(kind, text, media_ref, `order`) AS spans",
-    "status",
-    "CASE WHEN status = 'failed' THEN map('error', error) ELSE map("
-    "'word_count', CAST(word_count AS STRING), "
-    "'char_count', CAST(char_count AS STRING), "
-    "'page_count', CAST(page_count AS STRING), "
-    "'has_images', CASE WHEN has_images THEN 'true' ELSE 'false' END, "
-    "'has_tables', CASE WHEN has_tables THEN 'true' ELSE 'false' END) END AS metadata",
-    "page_nos AS span_pages",
-    "bboxes AS span_bboxes",
+# extract()'s output type, nullability included. span_pages / span_bboxes
+# are PARALLEL arrays (page number / layout bbox of spans[i]) rather than
+# fields inside the span struct: the north-rule equality invariant is
+# pinned on (kind, text, media_ref, order) and must not change shape
+_SPAN_STRUCT = pa.struct(
+    [*((k, pa.string()) for k in ("kind", "text", "media_ref")), ("order", pa.int32())]
 )
+EXTRACT_SCHEMA = pa.schema(
+    [
+        ("doc_id", pa.string()),
+        ("spans", pa.list_(pa.field("element", _SPAN_STRUCT, nullable=False))),
+        ("status", pa.string()),
+        pa.field("metadata", pa.map_(pa.string(), pa.string()), nullable=False),
+        ("span_pages", pa.list_(pa.field("element", pa.int32()))),
+        ("span_bboxes", pa.list_(pa.field("element", pa.list_(pa.field("element", pa.float64()))))),
+    ]
+)
+EXTRACT_SPARK_SCHEMA = from_arrow_schema(EXTRACT_SCHEMA)
+
+# metadata keys of a completed doc, in map order, then a failed doc's key;
+# a tuple, as pa.array() at import would import pandas with this module
+_META_KEYS = ("word_count", "char_count", "page_count", "has_images", "has_tables", "error")
 
 
-def assemble(kernel_out: DataFrame, *keep: str) -> DataFrame:
-    """extract()'s output rows from the kernel's field-wise columns
-    (OUT_SPARK_SCHEMA), followed by the `keep` columns of `kernel_out`."""
-    return kernel_out.selectExpr("*", *_SPAN_FIELDS).selectExpr(*_ASSEMBLE_SQL, *keep)
+def output_batch(out: pa.RecordBatch) -> pa.RecordBatch:
+    """extract()'s rows (EXTRACT_SCHEMA) from a kernel batch (OUT_SCHEMA),
+    built in Arrow: `spans` is one list over the kernel's shared list
+    offsets with a struct of kind, text, media_ref and order as values;
+    `metadata` maps a completed doc's five counters, in that key order, to
+    strings ('true'/'false' for the flags, a null flag reading 'false'),
+    and a failed doc's 'error' to its message."""
+    n, col = out.num_rows, out.column
+    span_t = EXTRACT_SCHEMA.field("spans").type
+    spans = pa.ListArray.from_arrays(
+        col("kinds").offsets,
+        pa.StructArray.from_arrays(
+            [col(c).values for c in ("kinds", "texts", "media_refs", "orders")],
+            fields=list(span_t.value_type),
+        ),
+        type=span_t,
+    )
+    failed = np.asarray(pc.equal(col("status"), "failed"), dtype=bool)
+    per_doc = np.where(failed, 1, 5)
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(per_doc, out=offsets[1:])
+    doc = np.repeat(np.arange(n), per_doc)
+    # slot of each entry: its key's index in _META_KEYS
+    slot = np.arange(offsets[-1]) - offsets[:-1][doc]
+    slot[failed[doc]] = 5
+    values = pa.concat_arrays(
+        [col(c).cast(pa.string()) for c in ("word_count", "char_count", "page_count")]
+        + [pc.if_else(col(c).fill_null(False), "true", "false")
+           for c in ("has_images", "has_tables")]
+        + [col("error")]
+    )
+    keys = pa.array(_META_KEYS).take(slot)
+    metadata = pa.MapArray.from_arrays(offsets, keys, values.take(slot * n + doc))
+    return pa.RecordBatch.from_arrays(
+        [col("doc_id"), spans, col("status"), metadata, col("page_nos"), col("bboxes")],
+        schema=EXTRACT_SCHEMA,
+    )
+
+
+def _extract_batches(batches):
+    """mapInArrow body of extract(): the kernel, then `output_batch`."""
+    return map(output_batch, extract_map_in_arrow(batches))
 
 
 def extract(df: DataFrame) -> DataFrame:
-    """documents_spans -> extracted (EXTRACTED_SCHEMA shape).
+    """documents_spans -> extracted (EXTRACTED_SCHEMA shape): one
+    `mapInArrow` of the kernel and `output_batch`.
 
     Input: (doc_id string, spans array<struct<kind,text,media_ref,offset>>).
-    Output: (doc_id, spans array<struct<kind,text,media_ref,order>>, status,
-    metadata map<string,string>).
+    Output (EXTRACT_SPARK_SCHEMA): (doc_id, spans
+    array<struct<kind,text,media_ref,order>>, status, metadata
+    map<string,string>, span_pages, span_bboxes).
     """
     check_input_schema(df.schema)
-    return assemble(
-        df.select("doc_id", "spans").mapInArrow(extract_map_in_arrow, schema=OUT_SPARK_SCHEMA)
-    )
+    return df.select("doc_id", "spans").mapInArrow(_extract_batches, schema=EXTRACT_SPARK_SCHEMA)

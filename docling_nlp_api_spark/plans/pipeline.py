@@ -10,6 +10,7 @@ sandbox — same commit protocol):
                                             stand-in; _STAGED_LAYOUT marks
                                             a committed staging)
     <out>/extracted/part_id=K/*.parquet     output, hash-partitioned by doc_id
+                                            (part-<uuid>.c000.snappy.parquet)
     <out>/_metrics/<run_id>-<pid>.parquet   one file per committed partition:
                                             docs/spans in and out, wall_sec
     <out>/_checkpoints/<run_id>-<pid>.parquet
@@ -19,34 +20,42 @@ sandbox — same commit protocol):
                                              committed_at); the file is the
                                             commit
 
-Ingest: a commit batch reads only its pending partitions' staged files.
-The driver lists them and packs them into tasks by bytes, with Spark's
-own split size, in part_id order (`plan_tasks`). Each task is one row of
-a tiny `spark.range`; its `mapInArrow` reads the task's files with
-pyarrow and feeds them straight to the kernel. Span data never crosses
-from the JVM to Python, and nothing is shuffled: a batch is one write
-job of one stage. The driver lists the staged files and the checkpoint
-files, reads and writes the staging marker, wipes a dead staging
-attempt and writes the commit records, and the tasks read the staged
-files: all of it with pyarrow at the URI Spark writes to
-(session.qualified_uri), so the output root must be on a filesystem
-pyarrow opens (a local path or file://); run() rejects any other before
-its first job. run() leaves the session's configuration as it found it.
+Ingest and output: a commit batch reads only its pending partitions'
+staged files. The driver lists them and packs them into tasks by bytes,
+with Spark's own split size, in part_id order (`plan_tasks`). Each task
+is one row of a tiny `spark.range`; its `mapInArrow` reads the task's
+files with pyarrow, runs the kernel and extract.output_batch on
+them, and writes each part_id's rows as one parquet
+file in Spark's parquet schema and metadata. It returns one small row
+per file: part_id, path, docs, failed, spans in and out, measured
+seconds. Neither spans nor output rows cross between the JVM and Python,
+and a batch is one job of one stage with no shuffle. The driver and the
+tasks do all file work with pyarrow at the URI Spark writes to
+(session.qualified_uri), resolved once per run(), so the output root
+must be on a filesystem pyarrow opens (a local path or file://); run()
+rejects any other before its first job and leaves the session's
+configuration as it found it.
 
 Commit protocol (mirrors Iceberg MERGE semantics with plain files):
 1. pending = all partition ids minus those with a checkpoint file of this
    run_id, found by listing _checkpoints (no Spark job).
-2. per batch: (a) one write job overwrites the batch's output dirs
-   (dynamic partition overwrite, idempotent on re-run) and observes the
-   docs/spans in and out per partition; (b) the driver writes each
-   partition's metrics file, then each partition's checkpoint file, with
-   pyarrow, each under a hidden temp name moved onto its own name. No
-   Spark job commits anything.
+2. per batch: (a) one job writes hidden attempt files,
+   `extracted/part_id=K/.<uuid>.attempt` (Spark's reader skips the
+   leading '.', and the name is no *.parquet), and collects their rows;
+   (b) the driver sums the rows into per-partition counts; (c) in each
+   part_id dir of the batch it deletes every file that is not a
+   collected one (an earlier attempt's visible files, failed or retried
+   tasks' attempt files); (d) it moves each collected file onto a
+   visible part-<uuid>.c000.snappy.parquet; (e) it writes each
+   partition's metrics file, then each checkpoint file, each under a
+   hidden temp name moved onto its own name.
 3. a crash anywhere before a partition's checkpoint file exists leaves
-   that partition pending: the resume rewrites its output dirs and its
-   metrics file under the same name, so no record is ever doubled. A
-   checkpoint file is written only after the batch's metrics files, so a
-   committed partition has its metrics and is never touched again.
+   that partition pending, with its dir holding old, hidden or moved
+   files in any mix: the redo's step (c) deletes all but its own
+   attempt files, and its metrics file replaces the old one under the
+   same name, so no row and no record is ever doubled. A checkpoint
+   file is written only after the batch's metrics files, so a committed
+   partition has its metrics and is never touched again.
 
 Skew (mega-docs): hashing doc_id spreads mega-docs over the part_ids, and
 no doc is ever split. A staged file larger than the split size is a task
@@ -66,29 +75,50 @@ import json
 import os
 import re
 import time
+import uuid
 from collections.abc import Callable
 from datetime import datetime, timezone
 from functools import partial
+from itertools import groupby
 
-import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..operators.extract import assemble, check_input_schema
-from ..operators.extract_arrow import OUT_SCHEMA, _bounded_slices, extract_record_batch
+from ..operators.extract import EXTRACT_SPARK_SCHEMA, check_input_schema, output_batch
+from ..operators.extract_arrow import extract_map_in_arrow
 from ..schema import CHECKPOINT_SCHEMA, METRICS_SCHEMA
 from ..session import arrow_fs
 
-# the kernel's output, plus each doc's part_id and input span count
-_INGEST_SCHEMA = OUT_SCHEMA.append(pa.field("part_id", pa.int32())).append(
-    pa.field("n_spans_in", pa.int32())
+# an output file's columns: extract()'s rows and their span count
+_FILE_SPARK_SCHEMA = StructType(
+    [*EXTRACT_SPARK_SCHEMA.fields, StructField("n_spans_out", IntegerType())]
 )
-_INGEST_SPARK_SCHEMA = from_arrow_schema(_INGEST_SCHEMA)
+# a task's result: one row per output file it wrote
+_COUNTS = ("docs", "failed", "spans_in", "spans_out", "seconds")
+_RESULT_SCHEMA = pa.schema(
+    [("part_id", pa.int32()), ("path", pa.string())]
+    + [(k, pa.float64() if k == "seconds" else pa.int64()) for k in _COUNTS]
+)
+_RESULT_SPARK_SCHEMA = from_arrow_schema(_RESULT_SCHEMA)
+# Spark's parquet.block.size: a row group is flushed past this many bytes
+_ROW_GROUP_BYTES = 128 << 20
+# parquet writer settings of an output file: dictionaries on the
+# low-cardinality columns only, which keeps the files as small as Spark's
+_WRITER_OPTIONS = dict(
+    compression="snappy",
+    use_dictionary=[
+        "spans.list.element.kind", "spans.list.element.media_ref", "status",
+        "metadata.key_value.key", "metadata.key_value.value", "span_pages.list.element",
+        "span_bboxes.list.element.list.element", "n_spans_out",
+    ],
+    column_encoding={"spans.list.element.order": "DELTA_BINARY_PACKED"},
+)
 # a commit record's file name: <run_id>-<partition_id>.parquet
 _RECORD_NAME = re.compile(r"(?P<run_id>.+)-(?P<pid>[0-9]+)\.parquet")
 # the staging marker: "<n_partitions> <input identity>" of a committed staging
@@ -152,12 +182,19 @@ class ExtractionPipeline:
         spark = self.spark
         check_input_schema(input_df.schema)
         # before any job: a scheme pyarrow cannot open fails here, not in a
-        # task; tasks read the staged files, and the driver writes the
-        # commit records, where Spark writes
+        # task; tasks read the staged files and write the output, and the
+        # driver publishes the output and writes the commit records, where
+        # Spark writes
         fs, root = arrow_fs(spark, self.out_dir)
         committed = self.committed_partitions()
         self._stage(input_df)
-        batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        write = partial(
+            _extract_files,
+            fs=fs,
+            out_path=f"{root}/extracted",
+            batch_rows=int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
+            schema=self._file_schema(_FILE_SPARK_SCHEMA),
+        )
 
         pending = sorted(set(range(self.n_partitions)) - committed)
         batches = [
@@ -167,48 +204,36 @@ class ExtractionPipeline:
         total_docs = 0
         write_s: list[float] = []
         commit_s: list[float] = []
+        n_tasks: list[int] = []
         for batch in batches:
             t0 = time.time()
             started_at = datetime.now(timezone.utc).replace(tzinfo=None)
             tasks = self._plan_batch(batch, fs, f"{root}/_staged")
-            counts: dict[str, int] = {}
+            results = []
             if tasks:
-                # The per-partition counts are observed DURING the output
-                # write. The write is one stage with no exchange, and Spark
-                # merges each task's accumulator of that result stage once
-                # per output partition: a retried task does not count twice.
-                kernel_out = spark.range(len(tasks), numPartitions=len(tasks)).mapInArrow(
-                    partial(_extract_files, fs=fs, tasks=tasks, batch_rows=batch_rows),
-                    schema=_INGEST_SPARK_SCHEMA,
+                # one job: each task writes its own hidden attempt files and
+                # returns a row per file; only a collected row's file is
+                # published, so a failed or retried attempt's file never is
+                results = (
+                    spark.range(len(tasks), numPartitions=len(tasks))
+                    .mapInArrow(partial(write, tasks=tasks), schema=_RESULT_SPARK_SCHEMA)
+                    .collect()
                 )
-                result, obs = _observed(assemble(kernel_out, "part_id", "n_spans_in"), batch)
-                (
-                    result.drop("n_spans_in")
-                    .withColumn("n_spans_out", F.size("spans"))
-                    .write.mode("overwrite")
-                    # replaces only the batch's part_id dirs
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("part_id")
-                    .parquet(self.extracted_dir)
-                )
-                counts = obs.get["counts"].asDict()
+            _publish_output(fs, f"{root}/extracted", batch, results)
 
-            wall = time.time() - t0
-            write_s.append(wall)
+            write_s.append(time.time() - t0)
+            n_tasks.append(len(tasks))
             committed_at = datetime.now(timezone.utc).replace(tzinfo=None)
             ck_rows, mt_rows = [], []
             for pid in batch:
-                docs, failed, spans_in, spans_out = (
-                    counts.get(f"{k}_{pid}", 0) for k in ("docs", "failed", "spans_in", "spans_out")
+                docs, failed, spans_in, spans_out, secs = (
+                    sum(r[k] for r in results if r["part_id"] == pid) for k in _COUNTS
                 )
                 ck_rows.append(
                     (self.run_id, pid, "committed", docs, docs, started_at, committed_at)
                 )
                 mt_rows.append(
-                    (
-                        self.run_id, pid, docs, docs, failed, spans_in, spans_out,
-                        wall / max(len(batch), 1),
-                    )
+                    (self.run_id, pid, docs, docs, failed, spans_in, spans_out, float(secs))
                 )
                 total_docs += docs
             # every metrics file before any checkpoint file: a partition
@@ -231,6 +256,7 @@ class ExtractionPipeline:
             "docs_out": total_docs,
             "write_s": write_s,
             "commit_s": commit_s,
+            "tasks": n_tasks,
         }
 
     def _plan_batch(
@@ -256,24 +282,29 @@ class ExtractionPipeline:
             self.spark.sparkContext.defaultParallelism,
         )
 
+    def _file_schema(self, schema: StructType) -> pa.Schema:
+        """The Arrow schema of a parquet file Spark writes for rows of
+        `schema`, with Spark's version and schema JSON as file metadata."""
+        return to_arrow_schema(schema).with_metadata({
+            "org.apache.spark.version": self.spark.version,
+            "org.apache.spark.sql.parquet.row.metadata": json.dumps(
+                schema.jsonValue(), separators=(",", ":")
+            ),
+        })
+
     def _write_record(self, fs: pafs.FileSystem, path: str, schema: StructType, row: tuple) -> None:
         """Write one commit record, `row` in `schema` order led by run_id
         and partition_id, as the parquet file `<run_id>-<partition_id>.parquet`
         under `path` on `fs`. The file is what Spark writes for the row:
         the same parquet schema (INT96 timestamps, required columns) and
         Spark's schema metadata, published whole by _publish."""
+        arrow_schema = self._file_schema(schema)
         fields = [
             f.with_type(pa.timestamp("ns")) if pa.types.is_timestamp(f.type) else f
-            for f in to_arrow_schema(schema)
+            for f in arrow_schema
         ]
-        meta = {
-            "org.apache.spark.version": self.spark.version,
-            "org.apache.spark.sql.parquet.row.metadata": json.dumps(
-                schema.jsonValue(), separators=(",", ":")
-            ),
-        }
         table = pa.Table.from_pylist(
-            [dict(zip(schema.names, row))], schema=pa.schema(fields, metadata=meta)
+            [dict(zip(schema.names, row))], schema=pa.schema(fields, metadata=arrow_schema.metadata)
         )
         _publish(
             fs, path, f"{row[0]}-{row[1]}.parquet",
@@ -404,47 +435,76 @@ def plan_tasks(
     return tasks
 
 
-def _extract_files(batches, fs, tasks: list[list[tuple[str, int]]], batch_rows: int):
-    """mapInArrow body of a batch's write: for each task index in
-    `batches`, read the task's staged files from `fs` with pyarrow,
-    `batch_rows` docs at a time, and run the kernel on span-bounded
-    slices. Each output row carries its doc's part_id and input span
-    count (_INGEST_SCHEMA)."""
+def _extract_files(batches, fs, tasks: list[list[tuple[str, int]]], **part):
+    """mapInArrow body of a batch's job: for each task index in `batches`,
+    write each part_id's staged files of the task as one output file
+    (_write_part, with the `part` arguments) and yield one _RESULT_SCHEMA
+    row per file."""
     for ids in batches:
         for t in ids.column(0).to_pylist():
-            for path, pid in tasks[t]:
-                with fs.open_input_file(path) as f:
-                    reader = pq.ParquetFile(f)
-                    for batch in reader.iter_batches(batch_rows, columns=["doc_id", "spans"]):
-                        for piece in _bounded_slices(batch):
-                            out = extract_record_batch(piece)
-                            yield pa.RecordBatch.from_arrays(
-                                [
-                                    *out.columns,
-                                    pa.array(np.full(out.num_rows, pid, dtype=np.int32)),
-                                    piece.column(1).value_lengths().fill_null(0),
-                                ],
-                                schema=_INGEST_SCHEMA,
-                            )
+            rows = [
+                _write_part(fs, [path for path, _ in files], pid, **part)
+                for pid, files in groupby(tasks[t], key=lambda f: f[1])
+            ]
+            yield pa.RecordBatch.from_pylist(rows, schema=_RESULT_SCHEMA)
 
 
-def _observed(df: DataFrame, batch: list[int]) -> tuple[DataFrame, Observation]:
-    """`df` with per-partition counts observed on it, for each part_id p
-    in `batch`: `docs_{p}`, `failed_{p}` (status = 'failed'), `spans_in_{p}`
-    (total n_spans_in) and `spans_out_{p}` (total size(spans)). sum()
-    over no rows is NULL, hence the coalesce: a partition may hold no doc
-    at all. The aggregates are the fields of one SQL struct, `counts`, so
-    building them costs one call into the JVM."""
-    exprs = []
-    for p in batch:
-        exprs += [
-            f"count_if(part_id = {p}) AS docs_{p}",
-            f"count_if(part_id = {p} AND status = 'failed') AS failed_{p}",
-            f"coalesce(sum(if(part_id = {p}, n_spans_in, NULL)), 0) AS spans_in_{p}",
-            f"coalesce(sum(if(part_id = {p}, size(spans), NULL)), 0) AS spans_out_{p}",
-        ]
-    obs = Observation()
-    return df.observe(obs, F.expr(f"struct({', '.join(exprs)}) AS counts")), obs
+def _write_part(fs, paths: list[str], pid: int, out_path: str, batch_rows: int, schema) -> dict:
+    """Read the staged files `paths` of part_id `pid` from `fs`,
+    `batch_rows` docs at a time, run the kernel and extract.output_batch
+    on them, and write the rows in `schema` as the hidden attempt file
+    `out_path/part_id=<pid>/.<uuid>.attempt`: one row group, or another
+    past _ROW_GROUP_BYTES. Returns the file's result row, with the
+    measured seconds of its read, kernel and write."""
+    t0 = time.perf_counter()
+    path = f"{out_path}/part_id={pid}/.{uuid.uuid4().hex}.attempt"
+    row = dict(part_id=pid, path=path, docs=0, failed=0, spans_in=0, spans_out=0)
+    fs.create_dir(f"{out_path}/part_id={pid}")
+    with pq.ParquetWriter(path, schema, filesystem=fs, **_WRITER_OPTIONS) as w:
+        buf, buf_bytes = [], 0
+        for p in paths:
+            with pq.ParquetFile(p, filesystem=fs) as f:
+                for batch in f.iter_batches(batch_rows, columns=["doc_id", "spans"]):
+                    row["spans_in"] += pc.sum(batch.column(1).value_lengths()).as_py() or 0
+                    for out in map(output_batch, extract_map_in_arrow([batch])):
+                        n_out = out.column(1).value_lengths()
+                        row["docs"] += out.num_rows
+                        row["failed"] += pc.sum(pc.equal(out.column(2), "failed")).as_py() or 0
+                        row["spans_out"] += pc.sum(n_out).as_py() or 0
+                        buf.append(pa.RecordBatch.from_arrays([*out.columns, n_out], schema=schema))
+                        buf_bytes += buf[-1].nbytes
+                        if buf_bytes > _ROW_GROUP_BYTES:
+                            _write_row_group(w, buf)
+                            buf, buf_bytes = [], 0
+        if buf:
+            _write_row_group(w, buf)
+    row["seconds"] = time.perf_counter() - t0
+    return row
+
+
+def _write_row_group(writer: pq.ParquetWriter, batches: list[pa.RecordBatch]) -> None:
+    table = pa.Table.from_batches(batches)
+    writer.write_table(table, row_group_size=table.num_rows)
+
+
+def _publish_output(fs: pafs.FileSystem, out_path: str, part_ids: list[int], results) -> None:
+    """Publish a batch's output: in each `out_path/part_id=K` directory of
+    `part_ids`, delete every file that is not one of the collected
+    `results` (the visible files of an earlier attempt at the partition,
+    and the hidden files of dead or retried tasks), then move each
+    collected file onto a visible name of Spark's form."""
+    winners = {r["path"] for r in results}
+    for pid in part_ids:
+        part_dir = pafs.FileSelector(f"{out_path}/part_id={pid}", allow_not_found=True)
+        for info in fs.get_file_info(part_dir):
+            if info.path not in winners:
+                fs.delete_file(info.path)
+    for path in sorted(winners):
+        fs.move(path, f"{path.rsplit('/', 1)[0]}/{_visible_name()}")
+
+
+def _visible_name() -> str:
+    return f"part-{uuid.uuid4()}.c000.snappy.parquet"
 
 
 def _publish(

@@ -16,9 +16,11 @@ Cluster usage (ships the package to executors via --py-files):
 
     The pipeline restages --input once under <output>/_staged/ by
     hash(doc_id); every commit batch then reads only its own partitions'
-    staged files, with pyarrow, inside the extraction tasks. The output
-    root must be on a filesystem pyarrow opens; local paths and file://
-    are tested. A root that pyarrow cannot open (Hadoop-only schemes
+    staged files, with pyarrow, inside the extraction tasks, and those
+    tasks write the output parquet files themselves; the driver
+    publishes them and writes the commit records. The output root must
+    be on a filesystem pyarrow opens; local paths and file:// are
+    tested. A root that pyarrow cannot open (Hadoop-only schemes
     such as s3a://, abfs://, viewfs://) is rejected before any job runs.
 
     NOTE: memory MUST be sized on the submit line (--driver-memory /
@@ -38,8 +40,8 @@ partition granularity.
 
 Prints one JSON summary line: batches, partitions_done, docs_out, the job
 phase wall_sec, and per commit batch the measured seconds of the output
-write (`write_s`) and of writing its metrics and checkpoint files
-(`commit_s`).
+write and publish (`write_s`), of writing its metrics and checkpoint
+files (`commit_s`), and its Python task count (`tasks`).
 """
 
 from __future__ import annotations

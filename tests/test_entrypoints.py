@@ -26,3 +26,16 @@ def test_entrypoint_imports_and_has_main(path):
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     assert callable(getattr(mod, "main", None))
+
+
+def test_tier_data_defaults_to_the_package_checkout():
+    """Generated tiers default to `.data` next to the imported package, so
+    bench.py and `extract_job --tier` write into their own checkout."""
+    import inspect
+
+    import docling_nlp_api_spark
+    from docling_nlp_api_spark.datagen import ensure_spans_parquet
+
+    default = inspect.signature(ensure_spans_parquet).parameters["base_dir"].default
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.realpath(docling_nlp_api_spark.__file__)))
+    assert default == os.path.join(pkg_parent, ".data")

@@ -72,3 +72,68 @@ def test_status_and_metadata_equality(engine_rows):
         got = engine_rows[did]
         assert got["status"] == exp.status, did
         assert dict(got["metadata"]) == exp.metadata, (did, dict(got["metadata"]), exp.metadata)
+
+
+def test_extract_schema_is_pinned(spark):
+    """extract() declares the row type the JVM-side struct assembly gave
+    before the output was built in Arrow, nullability included: spans
+    hold no null struct, metadata is never null, its values may be. A
+    completed doc's metadata keeps that assembly's key order, which
+    to_json-based hashes of the map see."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        IntegerType,
+        MapType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    pinned = StructType(
+        [
+            StructField("doc_id", StringType(), True),
+            StructField(
+                "spans",
+                ArrayType(
+                    StructType(
+                        [
+                            StructField("kind", StringType(), True),
+                            StructField("text", StringType(), True),
+                            StructField("media_ref", StringType(), True),
+                            StructField("order", IntegerType(), True),
+                        ]
+                    ),
+                    False,
+                ),
+                True,
+            ),
+            StructField("status", StringType(), True),
+            StructField("metadata", MapType(StringType(), StringType(), True), False),
+            StructField("span_pages", ArrayType(IntegerType(), True), True),
+            StructField("span_bboxes", ArrayType(ArrayType(DoubleType(), True), True), True),
+        ]
+    )
+    out = extract(datagen.spans_df(spark, 3))
+    assert out.schema == pinned
+    for (keys,) in out.select(F.map_keys("metadata")).collect():
+        assert keys == ["word_count", "char_count", "page_count", "has_images", "has_tables"]
+
+
+def test_extract_empty_and_all_failed_input(spark):
+    """An empty input gives no rows under the same schema; an input whose
+    docs all fail gives one failed row per doc, no spans and only the
+    'error' metadata key."""
+    from docling_nlp_api_spark.schema import DOCUMENTS_SPANS_SCHEMA
+
+    want = extract(datagen.spans_df(spark, 1)).schema
+    empty = extract(spark.createDataFrame([], DOCUMENTS_SPANS_SCHEMA))
+    assert empty.schema == want and empty.count() == 0
+
+    bad = [(f"bad-{i}", [("blink", "x", "", 0, None)] * (i + 1)) for i in range(3)]
+    rows = extract(spark.createDataFrame(bad, DOCUMENTS_SPANS_SCHEMA)).collect()
+    assert sorted(r["doc_id"] for r in rows) == [d for d, _ in bad]
+    for r in rows:
+        assert r["status"] == "failed" and r["spans"] == [] and r["span_pages"] == []
+        assert r["metadata"] == {"error": "unknown kind: blink"}

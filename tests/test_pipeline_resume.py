@@ -351,6 +351,11 @@ _CRASH_POINTS = {
     "after_all_metrics": ({0, 1}, 3 * BATCH + 1),
     "after_some_checkpoints": ({0, 1, 2}, 3 * BATCH + 2),
     "after_all_checkpoints": ({0, 1, 2, 3}, None),
+    # the output of the crashed batch is published, then a dead attempt's
+    # hidden file and a stale visible file land in a pending partition
+    "dead_attempt_beside_stale_file": ({0, 1}, 2 * BATCH + 1),
+    "mid_move": ({0, 1}, None),
+    "after_moves": ({0, 1}, None),
 }
 
 
@@ -380,22 +385,38 @@ def matrix_ref(spark, tmp_path_factory):
     return _final_state(p)
 
 
+def _files(root, part_ids):
+    """{path relative to root: mtime_ns} of every file, hidden ones
+    included, in the part_id dirs `part_ids` under root."""
+    return {
+        f.relative_to(root): f.stat().st_mtime_ns
+        for k in part_ids
+        for f in (root / f"part_id={k}").glob("*")
+    }
+
+
 @pytest.mark.parametrize("point", list(_CRASH_POINTS))
 def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, matrix_ref, point):
     """A crash at each step of a commit batch: mid-output-write (a task of
-    the write job fails), after the output, after some and after all of
-    the batch's metrics files, after some and after all of its checkpoint
-    files. The crash leaves exactly the partitions with a checkpoint file
-    committed, the resume never rewrites their output, and the result
-    equals an uninterrupted run: the same output content, the same
-    metrics and checkpoint rows, and exactly one record file of each kind
-    per partition, with no temp file left."""
+    the write job fails), mid-move (some of the batch's output files are
+    visible, some still hidden attempt files), after the moves, after the
+    output with a dead attempt's file and a stale visible file left in a
+    pending partition, after some and after all of the batch's metrics
+    files, after some and after all of its checkpoint files. The crash
+    leaves exactly the partitions with a checkpoint file committed, the
+    resume never touches their output files, and the result equals an
+    uninterrupted run: the same output content, the same metrics and
+    checkpoint rows, and exactly one record file of each kind per
+    partition, with no hidden or temp file left anywhere."""
+    import shutil
+
     from docling_nlp_api_spark.plans import pipeline
 
     committed, failing_write = _CRASH_POINTS[point]
     p = ExtractionPipeline(spark, str(tmp_path / point), n_partitions=MX_PARTS, batch_size=BATCH)
-    writes, plans = [], []
+    writes, plans, names = [], [], []
     real_write, plan_tasks = ExtractionPipeline._write_record, pipeline.plan_tasks
+    real_name, real_publish = pipeline._visible_name, pipeline._publish_output
 
     def counting_write(self, fs, path, schema, row):
         writes.append(row)
@@ -411,21 +432,47 @@ def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, ma
             tasks.append([(f"{path}.missing", pid)])
         return tasks
 
+    def failing_name():
+        if point == "mid_move" and len(plans) == 2:
+            names.append(1)
+            if len(names) == 2:
+                raise RuntimeError("injected move failure")
+        return real_name()
+
+    def failing_publish(*args):
+        real_publish(*args)
+        if point == "after_moves" and len(plans) == 2:
+            raise RuntimeError("injected failure after the moves")
+
     monkeypatch.setattr(ExtractionPipeline, "_write_record", counting_write)
     monkeypatch.setattr(pipeline, "plan_tasks", plan_with_missing_file)
+    monkeypatch.setattr(pipeline, "_visible_name", failing_name)
+    monkeypatch.setattr(pipeline, "_publish_output", failing_publish)
     with pytest.raises(Exception, match="missing|injected"):
         p.run(input_df, fail_after_batches=2)
     assert p.committed_partitions() == committed
 
     extracted = tmp_path / point / "extracted"
-    kept = {f.relative_to(extracted) for k in committed for f in extracted.glob(f"part_id={k}/*")}
+    crashed = [f.name for f in _files(extracted, [2, 3])]
+    hidden = [n for n in crashed if n.startswith(".")]
+    if point == "mid_move":
+        assert hidden and len(hidden) < len(crashed)
+    if point == "after_moves":
+        assert crashed and not hidden
+    if point == "dead_attempt_beside_stale_file":
+        stale = next((extracted / "part_id=0").glob("*.parquet"))
+        shutil.copy(stale, extracted / "part_id=2" / f"part-stale{stale.name[4:]}")
+        shutil.copy(stale, extracted / "part_id=2" / ".dead.attempt")
+    kept = _files(extracted, committed)
     assert kept
     summary = p.run(input_df)
     assert summary["partitions_done"] == MX_PARTS
-    assert {f.relative_to(extracted) for k in committed for f in extracted.glob(f"part_id={k}/*")} == kept
+    assert _files(extracted, committed) == kept
     assert _final_state(p)[:3] == matrix_ref[:3]
     for d, names in _final_state(p)[3].items():
         assert names == [f"run0-{k}.parquet" for k in range(MX_PARTS)], (d, names)
+    left = [f for f in (tmp_path / point).rglob(".*") if "_staged" not in f.parts]
+    assert not left, left
 
 
 def test_foreign_checkpoint_file_raises(spark, tmp_path):
@@ -603,7 +650,12 @@ def test_output_independent_of_input_layout(spark, tmp_path, recorded_plans):
 
 def test_pipeline_output_equals_extract(spark, tmp_path):
     """Pipeline output on the kernel-parity adversarial docs and mega-doc
-    997 equals extract() on the same input, column for column."""
+    997 equals extract() on the same input, column for column, and its
+    files hold what a Spark write of extract() holds: the same rows
+    (content key with the metadata map as JSON) and, file for file, the
+    same parquet schema and schema metadata, in one row group."""
+    import pyarrow.parquet as pq
+
     from docling_nlp_api_spark.datagen import gen_doc
     from docling_nlp_api_spark.operators.extract import extract
     from docling_nlp_api_spark.schema import DOCUMENTS_SPANS_SCHEMA
@@ -636,6 +688,21 @@ def test_pipeline_output_equals_extract(spark, tmp_path):
     want = _rows(extract(df))
     assert len(want) == 10
     assert _rows(out) == want
+
+    ref = str(tmp_path / "spark")
+    extract(df).withColumn("n_spans_out", F.size("spans")).write.parquet(ref)
+
+    def key(d):
+        rows = spark.read.parquet(d).withColumn("metadata", F.to_json("metadata"))
+        return ExtractionPipeline._content_key(rows.select(*extract(df).columns, "n_spans_out"))
+
+    assert key(p.extracted_dir) == key(ref)
+    spark_file = pq.read_schema(next((tmp_path / "spark").glob("*.parquet")))
+    files = sorted((tmp_path / "out" / "extracted").rglob("*.parquet"))
+    assert files
+    for f in files:
+        assert pq.read_schema(f).equals(spark_file, check_metadata=True), f
+        assert pq.ParquetFile(f).metadata.num_row_groups == 1
 
 
 def test_plan_tasks_packs_every_file_once():
@@ -739,3 +806,52 @@ def test_qualified_uri_follows_default_fs(spark, tmp_path):
     assert rel.startswith("viewfs://cluster/") and rel.endswith("/out/_staged"), rel
     assert qualified_uri(spark, "s3a://bucket/out", conf) == "s3a://bucket/out"
     assert qualified_uri(spark, f"{tmp_path}/x") == f"file://{tmp_path}/x"
+
+
+def test_empty_and_all_failed_inputs(spark, tmp_path):
+    """An empty input commits zero counts and writes no output file; an
+    input whose docs all fail commits them as failed, in files of the
+    same schema as any other output."""
+    import pyarrow.parquet as pq
+
+    from docling_nlp_api_spark.schema import DOCUMENTS_SPANS_SCHEMA
+
+    p = ExtractionPipeline(spark, str(tmp_path / "empty"), n_partitions=2, batch_size=1)
+    summary = p.run(spark.createDataFrame([], DOCUMENTS_SPANS_SCHEMA))
+    assert summary["docs_out"] == 0 and summary["tasks"] == [0, 0]
+    assert [tuple(r)[2:7] for r in p.read_metrics().collect()] == [(0, 0, 0, 0, 0)] * 2
+    assert not list((tmp_path / "empty").glob("extracted/**/*.parquet"))
+
+    bad = spark.createDataFrame(
+        [(f"bad-{i}", [("blink", "x", "", 0, None)] * (i + 1)) for i in range(5)],
+        DOCUMENTS_SPANS_SCHEMA,
+    )
+    p = ExtractionPipeline(spark, str(tmp_path / "failed"), n_partitions=2, batch_size=2)
+    assert p.run(bad)["docs_out"] == 5
+    m = p.read_metrics().collect()
+    assert sum(r["docs_failed"] for r in m) == 5 and sum(r["spans_in"] for r in m) == 15
+    assert all(r["docs_failed"] == r["docs_out"] and r["spans_out"] == 0 for r in m)
+    out = p.read_output()
+    assert out.filter("status = 'failed' AND size(spans) = 0").count() == 5
+    good = ExtractionPipeline(spark, str(tmp_path / "good"), n_partitions=2, batch_size=2)
+    good.run(spans_df(spark, 4))
+    want = pq.read_schema(next((tmp_path / "good" / "extracted").rglob("*.parquet")))
+    for f in (tmp_path / "failed" / "extracted").rglob("*.parquet"):
+        assert pq.read_schema(f).equals(want, check_metadata=True)
+
+
+def test_wall_sec_is_measured_per_partition(spark, tmp_path, recorded_plans):
+    """A partition's wall_sec is the measured read, kernel and write time
+    of its own files: above 0 for a partition with docs, 0.0 for one
+    without, and never more than its batch's write time. The summary
+    carries each batch's Python task count."""
+    p = ExtractionPipeline(spark, str(tmp_path / "w"), n_partitions=8, batch_size=4)
+    summary = p.run(spans_df(spark, 5, start=990))
+    assert summary["tasks"] == [len(plan) for plan in recorded_plans]
+    metrics = {r["partition_id"]: r for r in p.read_metrics().collect()}
+    assert any(m["docs_in"] == 0 for m in metrics.values())
+    for pid, m in metrics.items():
+        if m["docs_in"]:
+            assert 0 < m["wall_sec"] <= summary["write_s"][pid // 4], m
+        else:
+            assert m["wall_sec"] == 0.0, m
