@@ -836,8 +836,6 @@ def length_buckets(docs: DataFrame, step: int = BUCKET_STEP, cap: int = BUCKET_C
     )
 
 
-PPL_BUCKETS = ("head", "middle", "tail")  # CCNet's tercile names
-
 # Driver-side guard for the histogram collects below: the round-4 score
 # quantization bounds distinct values by score-range × 1e4 (≈1e5 at any
 # corpus size), but if a future score column stops being quantized the

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 # Java ∩ RE2 subset; keep in sync with the SQL strings in catalog.py
 SCHEME_HOST_RE = r"^[a-zA-Z]+://[^/?#]*"      # scheme + authority (case-folded)
 HOST_RE = r"^[a-z]+://([^/:?#]+)"             # host w/o port
-PATH_RE = r"^[a-z]+://[^/?#]*(/[^?#]*)"       # path component
 TRACKING_RE = r"[?&](utm_[a-z0-9]+|fbclid|ref)=[^&#]*"
 DANGLING_AMP_RE = r"^([^?&]*)&"  # first param lost its '?' -> repair
 FRAGMENT_RE = r"#.*$"

@@ -11,10 +11,11 @@ which reject row-level commands at analysis). What CAN be pinned here:
    ttl_delete_sql) — parse-validated in tests so the syntax is tested
    code, not prose;
 2. the same semantics executed through the sandbox fallback
-   (apply_merge_to_state): read state, full-outer merge on the key,
-   write-new-then-swap commit — the identical protocol the checkpoint
-   pipeline uses (plans/pipeline.py), and byte-equivalent to what the
-   MERGE would leave in the table.
+   (apply_merge_to_state): read state, full-outer merge on the key, write
+   the whole new state to `_staged/`, then swap it in as `current/` by
+   two directory renames (_commit_swap; _recover_state completes or rolls
+   back a swap that a crash cut short), byte-equivalent to what the MERGE
+   would leave in the table.
 
 FINAL ADJUDICATION (round 3, VERDICT r2 #7): an offline install channel
 for Delta/Iceberg jars was searched for again this round — none exists
@@ -137,9 +138,9 @@ def apply_merge_to_state(
     batch_marker: int | None = None,
 ) -> DataFrame:
     """Sandbox-executable MERGE: full-outer join state with batch on the
-    keys, sum the measures, commit by write-new-then-atomic-swap (the same
-    idempotent protocol as the pipeline's partition overwrite). Returns the
-    new state DataFrame (re-read from the committed files).
+    keys, sum the measures, write the new state to `_staged/` and commit
+    it by _commit_swap's renames of `_staged/` onto `current/`. Returns
+    the new state DataFrame (re-read from the committed files).
 
     batch_marker: streaming callers pass their micro-batch id; it is
     staged next to the data (underscore-prefixed, so parquet readers

@@ -20,46 +20,49 @@ sandbox — same commit protocol):
                                              committed_at); the file is the
                                             commit
 
-Ingest and output: a commit batch reads only its pending partitions'
-staged files. The driver lists them and packs them into tasks by bytes,
-with Spark's own split size, in part_id order (`plan_tasks`). Each task
-is one row of a tiny `spark.range`; its `mapInArrow` reads the task's
-files with pyarrow, runs the kernel and extract.output_batch on
-them, and writes each part_id's rows as one parquet
-file in Spark's parquet schema and metadata. It returns one small row
-per file: part_id, path, docs, failed, spans in and out, measured
-seconds. Neither spans nor output rows cross between the JVM and Python,
-and a batch is one job of one stage with no shuffle. The driver and the
-tasks do all file work with pyarrow at the URI Spark writes to
-(session.qualified_uri), resolved once per run(), so the output root
-must be on a filesystem pyarrow opens (a local path or file://); run()
-rejects any other before its first job and leaves the session's
-configuration as it found it.
+Ingest and output: a commit partition is the unit of work. A commit
+batch reads only its pending partitions' staged files: the driver lists
+them per part_id (`_staged_parts`), and the batch runs one Python task for
+each partition that has any. Each task is one row of a tiny `spark.range`;
+its `mapInArrow` reads all of its partition's staged files with pyarrow,
+runs the kernel and extract.output_batch on them, and writes the
+partition's rows as one parquet file in Spark's parquet schema and
+metadata. It returns one small row: part_id, path, docs, failed, spans in
+and out, measured seconds. Neither spans nor output rows cross between the
+JVM and Python, and a batch is one job of one stage with no shuffle. A
+batch runs at most batch_size Python tasks, each with a fixed set-up cost,
+so batch_size should be at least the executor core count. The driver and
+the tasks do all file work with pyarrow at the URI Spark writes to
+(session.qualified_uri), resolved once per run(), so the output root must
+be on a filesystem pyarrow opens (a local path or file://); run() rejects
+any other before its first job and leaves the session's configuration as
+it found it.
 
 Commit protocol (mirrors Iceberg MERGE semantics with plain files):
 1. pending = all partition ids minus those with a checkpoint file of this
    run_id, found by listing _checkpoints (no Spark job).
-2. per batch: (a) one job writes hidden attempt files,
-   `extracted/part_id=K/.<uuid>.attempt` (Spark's reader skips the
-   leading '.', and the name is no *.parquet), and collects their rows;
-   (b) the driver sums the rows into per-partition counts; (c) in each
-   part_id dir of the batch it deletes every file that is not a
-   collected one (an earlier attempt's visible files, failed or retried
-   tasks' attempt files); (d) it moves each collected file onto a
-   visible part-<uuid>.c000.snappy.parquet; (e) it writes each
+2. per batch: (a) one job writes one hidden attempt file per partition
+   with staged files, `extracted/part_id=K/.<uuid>.attempt` (Spark's
+   reader skips the leading '.', and the name is no *.parquet), and
+   collects their rows, at most one per partition; (b) in each part_id
+   dir of the batch the driver deletes every file that is not a
+   collected one (an earlier attempt's visible file, failed or retried
+   tasks' attempt files); (c) it moves each collected file onto a
+   visible part-<uuid>.c000.snappy.parquet; (d) it writes each
    partition's metrics file, then each checkpoint file, each under a
    hidden temp name moved onto its own name.
 3. a crash anywhere before a partition's checkpoint file exists leaves
    that partition pending, with its dir holding old, hidden or moved
-   files in any mix: the redo's step (c) deletes all but its own
-   attempt files, and its metrics file replaces the old one under the
+   files in any mix: the redo's step (b) deletes all but its own
+   attempt file, and its metrics file replaces the old one under the
    same name, so no row and no record is ever doubled. A checkpoint
    file is written only after the batch's metrics files, so a committed
    partition has its metrics and is never touched again.
 
 Skew (mega-docs): hashing doc_id spreads mega-docs over the part_ids, and
-no doc is ever split. A staged file larger than the split size is a task
-of its own, and extract_arrow._bounded_slices cuts every batch the kernel
+no doc is ever split. A partition's staged files are one task, so
+n_partitions must scale with the input: a partition's bytes bound its
+task's time. extract_arrow._bounded_slices cuts every batch the kernel
 sees to a span budget, so a mega-doc bounds kernel memory by its own size
 and needs no path of its own.
 
@@ -79,7 +82,6 @@ import uuid
 from collections.abc import Callable
 from datetime import datetime, timezone
 from functools import partial
-from itertools import groupby
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -99,7 +101,7 @@ from ..session import arrow_fs
 _FILE_SPARK_SCHEMA = StructType(
     [*EXTRACT_SPARK_SCHEMA.fields, StructField("n_spans_out", IntegerType())]
 )
-# a task's result: one row per output file it wrote
+# a task's result: the one output file it wrote
 _COUNTS = ("docs", "failed", "spans_in", "spans_out", "seconds")
 _RESULT_SCHEMA = pa.schema(
     [("part_id", pa.int32()), ("path", pa.string())]
@@ -208,26 +210,29 @@ class ExtractionPipeline:
         for batch in batches:
             t0 = time.time()
             started_at = datetime.now(timezone.utc).replace(tzinfo=None)
-            tasks = self._plan_batch(batch, fs, f"{root}/_staged")
-            results = []
-            if tasks:
-                # one job: each task writes its own hidden attempt files and
-                # returns a row per file; only a collected row's file is
-                # published, so a failed or retried attempt's file never is
-                results = (
-                    spark.range(len(tasks), numPartitions=len(tasks))
-                    .mapInArrow(partial(write, tasks=tasks), schema=_RESULT_SPARK_SCHEMA)
+            parts = _staged_parts(fs, f"{root}/_staged", batch)
+            results = {}
+            if parts:
+                # one job, one task per partition: each task writes its
+                # partition's hidden attempt file and returns its row; only
+                # a collected row's file is published, so a failed or
+                # retried attempt's file never is
+                rows = (
+                    spark.range(len(parts), numPartitions=len(parts))
+                    .mapInArrow(partial(write, parts=parts), schema=_RESULT_SPARK_SCHEMA)
                     .collect()
                 )
-            _publish_output(fs, f"{root}/extracted", batch, results)
+                results = {r["part_id"]: r for r in rows}
+            _publish_output(fs, f"{root}/extracted", batch, results.values())
 
             write_s.append(time.time() - t0)
-            n_tasks.append(len(tasks))
+            n_tasks.append(len(parts))
             committed_at = datetime.now(timezone.utc).replace(tzinfo=None)
             ck_rows, mt_rows = [], []
             for pid in batch:
+                r = results.get(pid)
                 docs, failed, spans_in, spans_out, secs = (
-                    sum(r[k] for r in results if r["part_id"] == pid) for k in _COUNTS
+                    (r[k] for k in _COUNTS) if r else (0, 0, 0, 0, 0.0)
                 )
                 ck_rows.append(
                     (self.run_id, pid, "committed", docs, docs, started_at, committed_at)
@@ -258,29 +263,6 @@ class ExtractionPipeline:
             "commit_s": commit_s,
             "tasks": n_tasks,
         }
-
-    def _plan_batch(
-        self, part_ids: list[int], fs: pafs.FileSystem, staged_path: str
-    ) -> list[list[tuple[str, int]]]:
-        """The staged files of `part_ids`, listed on `fs`, the filesystem
-        the tasks read them from, and packed into tasks of (path, part_id)
-        with the session's file-scan settings. `staged_path` is the staging
-        dir as session.arrow_fs resolves it."""
-        files = [
-            (info.path, k, info.size)
-            for k in part_ids
-            for info in fs.get_file_info(
-                pafs.FileSelector(f"{staged_path}/part_id={k}", allow_not_found=True)
-            )
-            if info.base_name.endswith(".parquet") and not info.base_name.startswith(("_", "."))
-        ]
-        conf = self.spark._jsparkSession.sessionState().conf()
-        return plan_tasks(
-            files,
-            conf.filesMaxPartitionBytes(),
-            conf.filesOpenCostInBytes(),
-            self.spark.sparkContext.defaultParallelism,
-        )
 
     def _file_schema(self, schema: StructType) -> pa.Schema:
         """The Arrow schema of a parquet file Spark writes for rows of
@@ -406,47 +388,36 @@ class ExtractionPipeline:
         return self.spark.read.schema(METRICS_SCHEMA).parquet(self.metrics_dir)
 
 
-def plan_tasks(
-    files: list[tuple[str, int, int]], max_bytes: int, open_cost: int, parallelism: int
-) -> list[list[tuple[str, int]]]:
-    """Pack `files`, (path, part_id, bytes) tuples, into tasks of
-    (path, part_id) with the split size of Spark's file scan
-    (FilePartition), min(max_bytes, max(open_cost, total / parallelism)),
-    where the total counts `open_cost` once per file; a task closes when
-    the next file would take it past the split size. Files go by part_id,
-    largest first within one, so a task covers a run of part_ids and the
-    partitioned write makes about one output file per part_id (Spark's
-    largest-first order over all files mixes part_ids in every task).
-    A file is never split, so one larger than the split size is a task
-    of its own. No files plan no tasks."""
-    total = sum(size + open_cost for *_, size in files)
-    split = min(max_bytes, max(open_cost, total // parallelism))
-    tasks: list[list[tuple[str, int]]] = []
-    cur: list[tuple[str, int]] = []
-    cur_bytes = 0
-    for path, pid, size in sorted(files, key=lambda f: (f[1], -f[2])):
-        if cur and cur_bytes + size > split:
-            tasks.append(cur)
-            cur, cur_bytes = [], 0
-        cur.append((path, pid))
-        cur_bytes += size + open_cost
-    if cur:
-        tasks.append(cur)
-    return tasks
+def _staged_parts(
+    fs: pafs.FileSystem, staged_path: str, part_ids: list[int]
+) -> list[tuple[int, list[str]]]:
+    """(part_id, its staged file paths) for each of `part_ids` that has
+    staged files, listed on `fs`, the filesystem the tasks read them
+    from; `staged_path` is the staging dir as session.arrow_fs resolves
+    it. No staged files give no parts, and the batch runs no job."""
+    parts = []
+    for k in part_ids:
+        selector = pafs.FileSelector(f"{staged_path}/part_id={k}", allow_not_found=True)
+        paths = sorted(
+            info.path
+            for info in fs.get_file_info(selector)
+            if info.base_name.endswith(".parquet") and not info.base_name.startswith(("_", "."))
+        )
+        if paths:
+            parts.append((k, paths))
+    return parts
 
 
-def _extract_files(batches, fs, tasks: list[list[tuple[str, int]]], **part):
-    """mapInArrow body of a batch's job: for each task index in `batches`,
-    write each part_id's staged files of the task as one output file
-    (_write_part, with the `part` arguments) and yield one _RESULT_SCHEMA
-    row per file."""
+def _extract_files(batches, fs, parts: list[tuple[int, list[str]]], **out):
+    """mapInArrow body of a batch's job: for each index i in `batches`,
+    write all staged files of partition parts[i] as its one output file
+    (_write_part, with the `out` arguments) and yield its _RESULT_SCHEMA
+    row."""
     for ids in batches:
-        for t in ids.column(0).to_pylist():
-            rows = [
-                _write_part(fs, [path for path, _ in files], pid, **part)
-                for pid, files in groupby(tasks[t], key=lambda f: f[1])
-            ]
-            yield pa.RecordBatch.from_pylist(rows, schema=_RESULT_SCHEMA)
+        for i in ids.column(0).to_pylist():
+            pid, paths = parts[i]
+            row = _write_part(fs, paths, pid, **out)
+            yield pa.RecordBatch.from_pylist([row], schema=_RESULT_SCHEMA)
 
 
 def _write_part(fs, paths: list[str], pid: int, out_path: str, batch_rows: int, schema) -> dict:

@@ -40,8 +40,6 @@ STOPWORDS_40 = (
     "she", "some", "than", "that", "the", "their", "them", "they", "this",
     "was", "were", "with", "you",
 )
-STOPWORDS_SET = frozenset(STOPWORDS_40)
 
 TOKEN_RE = r"\b[a-zA-Z]{3,}\b"   # X3
-SENTENCE_SPLIT_RE = r"[.!?]+"    # X2
 TOP_K_KEYWORDS = 20              # W2

@@ -12,16 +12,22 @@ Cluster usage (ships the package to executors via --py-files):
         --input  <spans parquet/iceberg path> \
         --output <output root> \
         --run-id prod-2026-08-16 \
-        --partitions 4096 --batch-size 64
+        --partitions 32768 --batch-size 512
 
     The pipeline restages --input once under <output>/_staged/ by
-    hash(doc_id); every commit batch then reads only its own partitions'
-    staged files, with pyarrow, inside the extraction tasks, and those
-    tasks write the output parquet files themselves; the driver
-    publishes them and writes the commit records. The output root must
-    be on a filesystem pyarrow opens; local paths and file:// are
-    tested. A root that pyarrow cannot open (Hadoop-only schemes
-    such as s3a://, abfs://, viewfs://) is rejected before any job runs.
+    hash(doc_id); every commit batch then runs one extraction task per
+    partition, which reads all of the partition's staged files with
+    pyarrow and writes its one output parquet file itself; the driver
+    publishes the files and writes the commit records. A partition is
+    one task, so --partitions scales with the input: the example's
+    32768 partitions put about 300 MB of a 10 TB input in each task.
+    A batch runs at most --batch-size tasks, so --batch-size is at
+    least the executor core count: 512 fills 512 cores. This sizing was
+    measured at 4 local cores only (BENCH/pipeline_tasks_sf0.1.json).
+    The output root must be on a filesystem pyarrow opens; local paths
+    and file:// are tested. A root that pyarrow cannot open (Hadoop-only
+    schemes such as s3a://, abfs://, viewfs://) is rejected before any
+    job runs.
 
     NOTE: memory MUST be sized on the submit line (--driver-memory /
     --executor-memory): under spark-submit the JVM exists before the
@@ -41,7 +47,8 @@ partition granularity.
 Prints one JSON summary line: batches, partitions_done, docs_out, the job
 phase wall_sec, and per commit batch the measured seconds of the output
 write and publish (`write_s`), of writing its metrics and checkpoint
-files (`commit_s`), and its Python task count (`tasks`).
+files (`commit_s`), and its Python task count (`tasks`): one per
+partition of the batch that has staged input.
 """
 
 from __future__ import annotations

@@ -385,6 +385,17 @@ def matrix_ref(spark, tmp_path_factory):
     return _final_state(p)
 
 
+def _assert_one_file_per_partition(p):
+    """Each partition with docs has exactly one visible output file, and
+    a partition without docs has none."""
+    from pathlib import Path
+
+    extracted = Path(p.extracted_dir)
+    docs = {r["partition_id"]: r["docs_out"] for r in p.read_metrics().collect()}
+    n_files = {k: len(list(extracted.glob(f"part_id={k}/*.parquet"))) for k in docs}
+    assert n_files == {k: int(n > 0) for k, n in docs.items()}, n_files
+
+
 def _files(root, part_ids):
     """{path relative to root: mtime_ns} of every file, hidden ones
     included, in the part_id dirs `part_ids` under root."""
@@ -414,8 +425,8 @@ def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, ma
 
     committed, failing_write = _CRASH_POINTS[point]
     p = ExtractionPipeline(spark, str(tmp_path / point), n_partitions=MX_PARTS, batch_size=BATCH)
-    writes, plans, names = [], [], []
-    real_write, plan_tasks = ExtractionPipeline._write_record, pipeline.plan_tasks
+    writes, listings, names = [], [], []
+    real_write, staged_parts = ExtractionPipeline._write_record, pipeline._staged_parts
     real_name, real_publish = pipeline._visible_name, pipeline._publish_output
 
     def counting_write(self, fs, path, schema, row):
@@ -424,16 +435,16 @@ def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, ma
             raise RuntimeError("injected record failure")
         return real_write(self, fs, path, schema, row)
 
-    def plan_with_missing_file(files, *args):
-        plans.append(files)
-        tasks = plan_tasks(files, *args)
-        if point == "mid_output_write" and len(plans) == 2:
-            path, pid, _ = files[0]
-            tasks.append([(f"{path}.missing", pid)])
-        return tasks
+    def parts_with_missing_file(*args):
+        parts = staged_parts(*args)
+        listings.append(parts)
+        if point == "mid_output_write" and len(listings) == 2:
+            paths = parts[0][1]
+            paths.append(f"{paths[0]}.missing")
+        return parts
 
     def failing_name():
-        if point == "mid_move" and len(plans) == 2:
+        if point == "mid_move" and len(listings) == 2:
             names.append(1)
             if len(names) == 2:
                 raise RuntimeError("injected move failure")
@@ -441,11 +452,11 @@ def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, ma
 
     def failing_publish(*args):
         real_publish(*args)
-        if point == "after_moves" and len(plans) == 2:
+        if point == "after_moves" and len(listings) == 2:
             raise RuntimeError("injected failure after the moves")
 
     monkeypatch.setattr(ExtractionPipeline, "_write_record", counting_write)
-    monkeypatch.setattr(pipeline, "plan_tasks", plan_with_missing_file)
+    monkeypatch.setattr(pipeline, "_staged_parts", parts_with_missing_file)
     monkeypatch.setattr(pipeline, "_visible_name", failing_name)
     monkeypatch.setattr(pipeline, "_publish_output", failing_publish)
     with pytest.raises(Exception, match="missing|injected"):
@@ -471,6 +482,7 @@ def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, ma
     assert _final_state(p)[:3] == matrix_ref[:3]
     for d, names in _final_state(p)[3].items():
         assert names == [f"run0-{k}.parquet" for k in range(MX_PARTS)], (d, names)
+    _assert_one_file_per_partition(p)
     left = [f for f in (tmp_path / point).rglob(".*") if "_staged" not in f.parts]
     assert not left, left
 
@@ -580,29 +592,28 @@ def _rows(df):
 
 
 @pytest.fixture()
-def recorded_plans(monkeypatch):
-    """Every task plan the pipeline makes, in order."""
+def recorded_parts(monkeypatch):
+    """Every batch's listing of (part_id, staged files), in order."""
     from docling_nlp_api_spark.plans import pipeline
 
-    plans = []
-    plan_tasks = pipeline.plan_tasks
+    listings = []
+    staged_parts = pipeline._staged_parts
 
-    def recording_plan_tasks(*args):
-        plans.append(plan_tasks(*args))
-        return plans[-1]
+    def recording_staged_parts(*args):
+        listings.append(staged_parts(*args))
+        return listings[-1]
 
-    monkeypatch.setattr(pipeline, "plan_tasks", recording_plan_tasks)
-    return plans
+    monkeypatch.setattr(pipeline, "_staged_parts", recording_staged_parts)
+    return listings
 
 
-def test_output_independent_of_input_layout(spark, tmp_path, recorded_plans):
+def test_output_independent_of_input_layout(spark, tmp_path, recorded_parts):
     """The same docs (with mega-doc 997 and two unknown-kind docs) written
     as 1 file, as 7 files, and as 1 file restaged into row groups of a
     few rows read back in 2-doc Arrow batches: every run gives the same
-    output content and the same _metrics rows. The 7-file run plans with
-    a 1 KiB open cost, so the split size follows the files' bytes and
-    some task packs several files (at the default 4 MiB, a batch of a
-    few small files plans one task per file)."""
+    output content and the same _metrics rows, and each partition with
+    docs has exactly one output file. In the 7-file run some partition's
+    file is built from several staged files."""
     import pyarrow.parquet as pq
 
     from docling_nlp_api_spark.schema import DOCUMENTS_SPANS_SCHEMA
@@ -618,10 +629,10 @@ def test_output_independent_of_input_layout(spark, tmp_path, recorded_plans):
     }
     layouts = {
         "one_file": (1, {}),
-        "seven_files": (7, {"spark.sql.files.openCostInBytes": "1024"}),
+        "seven_files": (7, {}),
         "small_row_groups": (1, small_groups),
     }
-    keys, metrics, n_tasks = {}, {}, {}
+    keys, metrics, n_staged = {}, {}, {}
     for name, (n_files, conf) in layouts.items():
         src = str(tmp_path / f"in_{name}")
         df.repartition(n_files).write.parquet(src)
@@ -630,7 +641,7 @@ def test_output_independent_of_input_layout(spark, tmp_path, recorded_plans):
             spark.conf.set(k, v)
         try:
             p = ExtractionPipeline(spark, str(tmp_path / name), n_partitions=4, batch_size=2)
-            n_plans = len(recorded_plans)
+            n_listed = len(recorded_parts)
             p.run(spark.read.parquet(src))
         finally:
             for k, v in old.items():
@@ -638,11 +649,12 @@ def test_output_independent_of_input_layout(spark, tmp_path, recorded_plans):
         staged = sorted((tmp_path / name / "_staged").glob("part_id=*/*.parquet"))
         if name == "small_row_groups":
             assert max(pq.ParquetFile(f).num_row_groups for f in staged) > 1
-        n_tasks[name] = [len(t) for plan in recorded_plans[n_plans:] for t in plan]
+        n_staged[name] = [len(paths) for parts in recorded_parts[n_listed:] for _, paths in parts]
+        _assert_one_file_per_partition(p)
         out = p.read_output().withColumn("metadata", F.to_json("metadata"))
         keys[name] = ExtractionPipeline._content_key(out)
         metrics[name] = sorted(tuple(r) for r in p.read_metrics().drop("wall_sec").collect())
-    assert max(n_tasks["seven_files"]) > 1  # some task packs several files
+    assert max(n_staged["seven_files"]) > 1  # some partition reads several files
     assert len(set(keys.values())) == 1, keys
     assert len({tuple(m) for m in metrics.values()}) == 1, metrics
     assert sum(r[2] for r in metrics["one_file"]) == 12
@@ -705,50 +717,20 @@ def test_pipeline_output_equals_extract(spark, tmp_path):
         assert pq.ParquetFile(f).metadata.num_row_groups == 1
 
 
-def test_plan_tasks_packs_every_file_once():
-    """Every file lands in exactly one task; a task holding more than one
-    file stays within the split size, counting the open cost of each file
-    but the last (Spark's FilePartition rule); files go in part_id order,
-    largest first within one, so the (task, part_id) pairs that become
-    output files number at most tasks + part_ids - 1; an empty batch
-    plans no tasks."""
-    import random
-
-    from docling_nlp_api_spark.plans.pipeline import plan_tasks
-
-    rng = random.Random(7)
-    files = [(f"f{i}", i % 5, rng.choice([1, 10, 100, 1_000, 30_000])) for i in range(60)]
-    size = {f[0]: f[2] for f in files}
-    for max_bytes, open_cost, parallelism in [(16_000, 400, 4), (10**9, 1, 3), (100, 400, 8)]:
-        tasks = plan_tasks(files, max_bytes, open_cost, parallelism)
-        split = min(max_bytes, max(open_cost, sum(s + open_cost for *_, s in files) // parallelism))
-        placed = sorted(path for t in tasks for path, _ in t)
-        assert placed == sorted(size)
-        assert all(pid == int(path[1:]) % 5 for t in tasks for path, pid in t)
-        for t in tasks:
-            packed = sum(size[path] for path, _ in t) + open_cost * (len(t) - 1)
-            assert len(t) == 1 or packed <= split, (t, split)
-        order = [(pid, -size[path]) for t in tasks for path, pid in t]
-        assert order == sorted(order)
-        pairs = {(i, pid) for i, t in enumerate(tasks) for _, pid in t}
-        assert len(pairs) <= len(tasks) + 5 - 1
-    assert plan_tasks([], 16_000, 400, 4) == []
-
-
-def test_empty_batches_commit_zero_counts(spark, tmp_path, recorded_plans):
-    """Batches whose partitions hold no doc plan no task and run no
-    write, yet commit one zero-count checkpoint and metrics row each."""
+def test_empty_batches_commit_zero_counts(spark, tmp_path, recorded_parts):
+    """Batches whose partitions hold no doc list no staged file and run
+    no write, yet commit one zero-count checkpoint and metrics row each."""
     from docling_nlp_api_spark.schema import CHECKPOINT_SCHEMA
 
     p = ExtractionPipeline(spark, str(tmp_path / "e"), n_partitions=8, batch_size=1)
     p.run(spans_df(spark, 2))
-    assert [] in recorded_plans and len(recorded_plans) == 8
+    assert [] in recorded_parts and len(recorded_parts) == 8
     metrics = {r["partition_id"]: r for r in p.read_metrics().collect()}
     ck = {r["partition_id"]: r for r in spark.read.schema(CHECKPOINT_SCHEMA).parquet(p.ckpt_dir).collect()}
     assert sorted(metrics) == sorted(ck) == list(range(8))
-    for i, plan in enumerate(recorded_plans):
+    for i, parts in enumerate(recorded_parts):
         m = metrics[i]
-        if not plan:
+        if not parts:
             assert (m["docs_in"], m["docs_out"], m["spans_in"], m["spans_out"]) == (0, 0, 0, 0)
             assert (ck[i]["status"], ck[i]["rows_in"], ck[i]["rows_out"]) == ("committed", 0, 0)
     assert sum(m["docs_in"] for m in metrics.values()) == 2
@@ -840,14 +822,15 @@ def test_empty_and_all_failed_inputs(spark, tmp_path):
         assert pq.read_schema(f).equals(want, check_metadata=True)
 
 
-def test_wall_sec_is_measured_per_partition(spark, tmp_path, recorded_plans):
+def test_wall_sec_is_measured_per_partition(spark, tmp_path, recorded_parts):
     """A partition's wall_sec is the measured read, kernel and write time
     of its own files: above 0 for a partition with docs, 0.0 for one
     without, and never more than its batch's write time. The summary
-    carries each batch's Python task count."""
+    carries each batch's Python task count: one per partition with
+    staged files."""
     p = ExtractionPipeline(spark, str(tmp_path / "w"), n_partitions=8, batch_size=4)
     summary = p.run(spans_df(spark, 5, start=990))
-    assert summary["tasks"] == [len(plan) for plan in recorded_plans]
+    assert summary["tasks"] == [len(parts) for parts in recorded_parts]
     metrics = {r["partition_id"]: r for r in p.read_metrics().collect()}
     assert any(m["docs_in"] == 0 for m in metrics.values())
     for pid, m in metrics.items():
