@@ -479,31 +479,9 @@ def embedding_near_dup(
     sf_dir: str,
     threshold: float = 0.40,
     max_bucket: int = 1024,
-    audit: bool = False,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pair LIST — the raw pair stream of
-    _embedding_near_dup_pairs collapsed by a global distinct (a pair
-    matching both LSH bands appears once per band pre-distinct). At the
-    100x tier this operator is OUTPUT-bound, not scoring-bound (191.6M
-    distinct pairs at threshold 0.40 on the clustered corpus,
-    BENCH/BASELINE.md) — when the downstream consumer is dedup
-    RESOLUTION rather than the pair list itself, use
-    embedding_dup_clusters, which skips this distinct exchange
-    entirely."""
-    return _embedding_near_dup_pairs(
-        spark, sf_dir, threshold, max_bucket, audit
-    ).distinct()
-
-
-def _embedding_near_dup_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.40,
-    max_bucket: int = 1024,
-    audit: bool = False,
-) -> DataFrame:
-    """Embedding-cosine near-dup: pairs above threshold from candidates
-    sharing (label, band, bucket) — the coarse cluster AND a 4-bit
+    """Embedding-cosine near-dup pair LIST: pairs above threshold from
+    candidates sharing (label, band, bucket) — the coarse cluster AND a 4-bit
     hyperplane-LSH bucket in either of 2 bands (OR-construction: near-
     identical vectors agree on a whole 4-bit band with high probability,
     and two independent bands make a double miss rare).
@@ -540,11 +518,7 @@ def _embedding_near_dup_pairs(
     loses NOTHING there — capped component structure is bit-identical
     to uncapped (10/10 components, same member set) at 5-10x less cost.
     The cap bounds candidates at ~max_bucket * n/2 (linear in corpus,
-    tunable). Under audit=True (the
-    scale-bench mode — construction stays lazy by default) both split
-    tiers are logged driver-side from the bucket-count tables
-    (metadata-scale, one row per bucket) — no silent truncation. At the
-    oracle tier (sf0.01, ~200 vectors) no bucket reaches the cap, so the
+    tunable). At the oracle tier (sf0.01, ~200 vectors) no bucket reaches the cap, so the
     DuckDB value-hash comparison runs the identical uncapped plan
     (pytest pins cap-inertness, forced-cap planted recall, and forced-cap
     PERTURBED-pair recall).
@@ -559,15 +533,19 @@ def _embedding_near_dup_pairs(
     Kept-pair cosines are einsum-recomputed, bit-identical to the
     delegate reconnect's pair_dot, then rounded and filtered JVM-side.
 
-    Returns the PRE-distinct (id_a, id_b, cosine) stream: a pair
-    matching both bands computes the same cosine twice and appears once
-    per band. embedding_near_dup adds the global distinct (the pair-list
-    contract); embedding_dup_clusters instead contracts edges in-kernel
-    and feeds star edges into connected components."""
+    Returns the distinct (id_a, id_b, cosine) pairs: a pair matching
+    both bands computes the same cosine twice and appears once per band
+    before the global distinct. At the 100x tier this operator is
+    OUTPUT-bound, not scoring-bound (191.6M distinct pairs at threshold
+    0.40 on the clustered corpus, BENCH/BASELINE.md) — when the
+    downstream consumer is dedup RESOLUTION rather than the pair list
+    itself, use embedding_dup_clusters, which skips the distinct
+    exchange, contracts edges in-kernel and feeds star edges into
+    connected components."""
     from . import vecmath
     from .similarity import DIM
 
-    salted = _near_dup_candidates(spark, sf_dir, max_bucket, audit)
+    salted = _near_dup_candidates(spark, sf_dir, max_bucket)
     cand = salted.groupBy("label", "band", "bucket", "salt", "tsalt").applyInPandas(
         vecmath.gram_pairs_kernel(threshold, DIM),
         schema="id_a long, id_b long, cos double",
@@ -576,6 +554,7 @@ def _embedding_near_dup_pairs(
         cand.select("id_a", "id_b", F.round("cos", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
         .unionByName(_delegate_reconnect_pairs(salted, threshold))
+        .distinct()
     )
 
 
@@ -656,7 +635,6 @@ def _near_dup_candidates(
     spark: SparkSession,
     sf_dir: str,
     max_bucket: int = 1024,
-    audit: bool = False,
 ) -> DataFrame:
     """Shared candidate staging for the embedding near-dup family: the
     (vec_id, label, embedding, nrm, band, bucket, salt, tsalt, split)
@@ -671,15 +649,11 @@ def _near_dup_candidates(
     (3) a row-uniform vec_id hash (tsalt) for identical-direction
     groups the direction hash cannot bound — the one input class where
     no content-keyed split can hold the cap (review finding, round 4).
-    See _embedding_near_dup_pairs for the full scale rationale.
+    See embedding_near_dup for the full scale rationale.
 
-    audit=False (default) keeps construction LAZY: the bucket-count
-    table is an agg subtree the broadcast join computes at execution.
-    audit=True eagerly materializes the counts (one corpus scan at BUILD
-    time) and prints the oversized-bucket report driver-side — the mode
-    the scale benches ran (BENCH/neardup_fused.json); plan-only and
-    never-executed consumers should not pay that scan, which is why it
-    is opt-in."""
+    Construction is LAZY: the bucket-count table is an agg subtree the
+    broadcast join computes at execution, so plan-only and
+    never-executed consumers pay no corpus scan."""
     from . import vecmath
     from .similarity import DIM, hyperplanes
 
@@ -724,23 +698,6 @@ def _near_dup_candidates(
             F.greatest(F.lit(1), F.ceil(F.col("bsz") / max_bucket)).cast("int"),
         )
     )
-    if audit:
-        # eager mode: localCheckpoint pins the tiny count table (one
-        # corpus scan now) so the audit read and the join share it
-        counts = counts.localCheckpoint(eager=True)
-        over = counts.filter(F.col("nsplit") > 1).agg(
-            F.count("*").alias("n_over"), F.max("bsz").alias("max_bsz"),
-            F.sum("bsz").alias("rows_over"),
-        ).first()
-        if over["n_over"]:
-            print(
-                f"embedding_near_dup: {over['n_over']} bucket(s) over "
-                f"max_bucket={max_bucket} (largest {over['max_bsz']} rows, "
-                f"{over['rows_over']} rows total) split by extra LSH sign "
-                "bits; near-identical pairs survive the split with "
-                "probability ~(1 - angle/pi)^bits",
-                flush=True,
-            )
     # Locality-preserving split: ceil(log2(nsplit)) of the salt planes'
     # sign bits key the sub-bucket, so a pair at angle theta is separated
     # only when one of those planes falls between the two directions
@@ -850,32 +807,6 @@ def _near_dup_candidates(
             F.max("bsz3").alias("max_bsz3"),
         )
     )
-    if audit:
-        splitmeta = splitmeta.localCheckpoint(eager=True)
-        res = splitmeta.agg(
-            F.count("*").alias("n_res"), F.max("bsz2").alias("max_bsz2"),
-        ).first()
-        if res["n_res"]:
-            print(
-                f"embedding_near_dup: {res['n_res']} sub-bucket(s) still over "
-                f"max_bucket={max_bucket} after sign-bit split (largest "
-                f"{res['max_bsz2']} rows — tight mega-cluster); residual "
-                "direction-hash split bounds the join, cross-split pairs "
-                "within those clusters are not compared",
-                flush=True,
-            )
-        res3 = splitmeta.filter(F.size("tmap") > 0).agg(
-            F.sum(F.size("tmap")).alias("n_t"), F.max("max_bsz3").alias("max_bsz3"),
-        ).first()
-        if res3["n_t"]:
-            print(
-                f"embedding_near_dup: {res3['n_t']} residual slot(s) over "
-                f"2x max_bucket={max_bucket} (largest {res3['max_bsz3']} "
-                "rows — identical-direction group); row-uniform vec_id-hash "
-                "split bounds the join, delegate chaining re-merges the "
-                "components",
-                flush=True,
-            )
     return (
         staged.join(
             F.broadcast(
@@ -909,11 +840,10 @@ def embedding_dup_clusters(
     threshold: float = 0.40,
     max_bucket: int = 1024,
     max_iter: int = 25,
-    audit: bool = False,
 ) -> DataFrame:
     """Embedding near-dup RESOLUTION, fused: the verified pair stream of
-    _embedding_near_dup_pairs feeds connected components directly and the
-    operator returns (vec_id, canonical_id, is_canonical) — one row per
+    embedding_near_dup, before its distinct, feeds connected components
+    directly and the operator returns (vec_id, canonical_id, is_canonical) — one row per
     vector that appears in at least one verified pair.
 
     Scale rationale (the sf10 profile that motivated this operator,
@@ -944,7 +874,7 @@ def embedding_dup_clusters(
     are O(vectors-per-bucket) rows of two longs — a vanishing fraction
     of the 191.6M-pair materialization plus its distinct exchange — and
     nothing quadratic ever reaches the JVM, the driver, or the sink."""
-    pairs = _near_dup_cc_edges(spark, sf_dir, threshold, max_bucket, audit)
+    pairs = _near_dup_cc_edges(spark, sf_dir, threshold, max_bucket)
     cc = connected_components(pairs, max_iter=max_iter)
     return cc.select(F.col("doc_id").alias("vec_id"), "canonical_id", "is_canonical")
 
@@ -954,7 +884,6 @@ def _near_dup_cc_edges(
     sf_dir: str,
     threshold: float = 0.40,
     max_bucket: int = 1024,
-    audit: bool = False,
 ) -> DataFrame:
     """The (doc_a, doc_b) edge stream embedding_dup_clusters feeds into
     connected_components, star-contracted in-kernel. Exposed separately
@@ -963,7 +892,7 @@ def _near_dup_cc_edges(
     from . import vecmath
     from .similarity import DIM
 
-    salted = _near_dup_candidates(spark, sf_dir, max_bucket, audit)
+    salted = _near_dup_candidates(spark, sf_dir, max_bucket)
     edges = salted.groupBy("label", "band", "bucket", "salt", "tsalt").applyInPandas(
         vecmath.gram_star_kernel(threshold, DIM),
         schema="id_a long, id_b long, kind int, cos double",
@@ -1639,7 +1568,7 @@ def semdedup(
     pass, and the pairwise stage is an equi-join on the learned cluster id
     — O(sum c_i^2) where the paper's own recipe bounds c_i by growing k
     with the corpus (k ~ n/1000). A runaway cluster (the label-clustered
-    fixture pathology) is the same skew class _embedding_near_dup_pairs
+    fixture pathology) is the same skew class embedding_near_dup
     bounds with max_bucket sign-bit splits; at production scale this
     operator composes with that splitter by clustering WITHIN the split
     buckets. Only (vec_id, cluster) longs and the flagged dup rows cross

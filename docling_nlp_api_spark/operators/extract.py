@@ -12,7 +12,8 @@ Design (SPEC.md §7):
   rows from them in Arrow, in the same task: the span structs over the
   kernel's shared list offsets and the metadata map. The rows cross
   back to the JVM once, already in extract()'s type; the pipeline runs
-  the same `output_batch` and writes its rows to parquet in the task.
+  the same `output_batch` in its tasks and writes exactly these rows,
+  with no column added, to parquet.
 
 This module also holds the kernel's word counter, `_count_words`; the
 kernel looks it up here at call time, so it can be swapped at module
@@ -290,7 +291,7 @@ def _extract_batches(batches):
 
 
 def extract(df: DataFrame) -> DataFrame:
-    """documents_spans -> extracted (EXTRACTED_SCHEMA shape): one
+    """documents_spans -> extracted (EXTRACT_SPARK_SCHEMA): one
     `mapInArrow` of the kernel and `output_batch`.
 
     Input: (doc_id string, spans array<struct<kind,text,media_ref,offset>>).

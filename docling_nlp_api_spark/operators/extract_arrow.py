@@ -193,52 +193,16 @@ def _nearest_decided(lab: np.ndarray, decided: np.ndarray, d: np.ndarray):
     return prev_dec, next_dec
 
 
-def _empty_output(doc_id: pa.Array) -> pa.RecordBatch:
-    n = len(doc_id)
-    empty_str = pa.ListArray.from_arrays(
-        pa.array(np.zeros(n + 1, dtype=np.int32)), pa.array([], type=pa.string())
-    )
-    empty_i32 = pa.ListArray.from_arrays(
-        pa.array(np.zeros(n + 1, dtype=np.int32)), pa.array([], type=pa.int32())
-    )
-    empty_bb = pa.ListArray.from_arrays(
-        pa.array(np.zeros(n + 1, dtype=np.int32)), pa.array([], type=_BBOX_T)
-    )
-    return pa.RecordBatch.from_arrays(
-        [
-            doc_id,
-            empty_str,
-            empty_str,
-            empty_str,
-            empty_i32,
-            empty_i32,
-            empty_bb,
-            pa.array(["completed"] * n),
-            pa.array([None] * n, type=pa.string()),
-            pa.array(np.zeros(n, dtype=np.int64)),
-            pa.array(np.zeros(n, dtype=np.int64)),
-            pa.array(np.zeros(n, dtype=np.int64)),
-            pa.array(np.zeros(n, dtype=bool)),
-            pa.array(np.zeros(n, dtype=bool)),
-        ],
-        schema=OUT_SCHEMA,
-    )
-
-
 def extract_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     # looked up per call so the counter can be swapped at module level
     from .extract import _count_words
 
     n = batch.num_rows
     doc_id = batch.column(0)
-    if n == 0:
-        return _empty_output(doc_id)
     spans = batch.column(1)
 
     lens = np.asarray(spans.value_lengths().fill_null(0), dtype=np.int64)
     total = int(lens.sum())
-    if total == 0:
-        return _empty_output(doc_id)
 
     struct = spans.flatten()
     karr = struct.field("kind")
@@ -304,7 +268,7 @@ def extract_record_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     cp = np.cumsum(is_pgn)
     row_pos = np.arange(total, dtype=np.int64)
     first_of_doc = np.empty(total, dtype=bool)
-    first_of_doc[0] = True
+    first_of_doc[:1] = True
     first_of_doc[1:] = d[1:] != d[:-1]
     doc_start_idx = np.maximum.accumulate(np.where(first_of_doc, row_pos, -1))
     pg = np.maximum(cp - (cp[doc_start_idx] - is_pgn[doc_start_idx]), 1).astype(np.int32)

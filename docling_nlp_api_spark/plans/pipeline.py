@@ -9,7 +9,8 @@ sandbox — same commit protocol):
                                             (Iceberg bucket(N, doc_id)
                                             stand-in; _STAGED_LAYOUT marks
                                             a committed staging)
-    <out>/extracted/part_id=K/*.parquet     output, hash-partitioned by doc_id
+    <out>/extracted/part_id=K/*.parquet     extract()'s rows, hash-partitioned
+                                            by doc_id, in extract()'s columns
                                             (part-<uuid>.c000.snappy.parquet)
     <out>/_metrics/<run_id>-<pid>.parquet   one file per committed partition:
                                             docs/spans in and out, wall_sec
@@ -26,9 +27,10 @@ them per part_id (`_staged_parts`), and the batch runs one Python task for
 each partition that has any. Each task is one row of a tiny `spark.range`;
 its `mapInArrow` reads all of its partition's staged files with pyarrow,
 runs the kernel and extract.output_batch on them, and writes the
-partition's rows as one parquet file in Spark's parquet schema and
-metadata. It returns one small row: part_id, path, docs, failed, spans in
-and out, measured seconds. Neither spans nor output rows cross between the
+partition's rows, exactly extract()'s, as one parquet file with the
+parquet schema and metadata a Spark write of extract() gives. It
+returns one small row: part_id, path, docs, failed, spans in and out,
+measured seconds. Neither spans nor output rows cross between the
 JVM and Python, and a batch is one job of one stage with no shuffle. A
 batch runs at most batch_size Python tasks, each with a fixed set-up cost,
 so batch_size should be at least the executor core count. The driver and
@@ -90,17 +92,13 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from ..operators.extract import EXTRACT_SPARK_SCHEMA, check_input_schema, output_batch
 from ..operators.extract_arrow import extract_map_in_arrow
 from ..schema import CHECKPOINT_SCHEMA, METRICS_SCHEMA
 from ..session import arrow_fs
 
-# an output file's columns: extract()'s rows and their span count
-_FILE_SPARK_SCHEMA = StructType(
-    [*EXTRACT_SPARK_SCHEMA.fields, StructField("n_spans_out", IntegerType())]
-)
 # a task's result: the one output file it wrote
 _COUNTS = ("docs", "failed", "spans_in", "spans_out", "seconds")
 _RESULT_SCHEMA = pa.schema(
@@ -117,7 +115,7 @@ _WRITER_OPTIONS = dict(
     use_dictionary=[
         "spans.list.element.kind", "spans.list.element.media_ref", "status",
         "metadata.key_value.key", "metadata.key_value.value", "span_pages.list.element",
-        "span_bboxes.list.element.list.element", "n_spans_out",
+        "span_bboxes.list.element.list.element",
     ],
     column_encoding={"spans.list.element.order": "DELTA_BINARY_PACKED"},
 )
@@ -195,7 +193,7 @@ class ExtractionPipeline:
             fs=fs,
             out_path=f"{root}/extracted",
             batch_rows=int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
-            schema=self._file_schema(_FILE_SPARK_SCHEMA),
+            schema=self._file_schema(EXTRACT_SPARK_SCHEMA),
         )
 
         pending = sorted(set(range(self.n_partitions)) - committed)
@@ -423,7 +421,8 @@ def _extract_files(batches, fs, parts: list[tuple[int, list[str]]], **out):
 def _write_part(fs, paths: list[str], pid: int, out_path: str, batch_rows: int, schema) -> dict:
     """Read the staged files `paths` of part_id `pid` from `fs`,
     `batch_rows` docs at a time, run the kernel and extract.output_batch
-    on them, and write the rows in `schema` as the hidden attempt file
+    on them, and write output_batch's batches, as they come, in `schema`
+    as the hidden attempt file
     `out_path/part_id=<pid>/.<uuid>.attempt`: one row group, or another
     past _ROW_GROUP_BYTES. Returns the file's result row, with the
     measured seconds of its read, kernel and write."""
@@ -438,12 +437,11 @@ def _write_part(fs, paths: list[str], pid: int, out_path: str, batch_rows: int, 
                 for batch in f.iter_batches(batch_rows, columns=["doc_id", "spans"]):
                     row["spans_in"] += pc.sum(batch.column(1).value_lengths()).as_py() or 0
                     for out in map(output_batch, extract_map_in_arrow([batch])):
-                        n_out = out.column(1).value_lengths()
                         row["docs"] += out.num_rows
                         row["failed"] += pc.sum(pc.equal(out.column(2), "failed")).as_py() or 0
-                        row["spans_out"] += pc.sum(n_out).as_py() or 0
-                        buf.append(pa.RecordBatch.from_arrays([*out.columns, n_out], schema=schema))
-                        buf_bytes += buf[-1].nbytes
+                        row["spans_out"] += pc.sum(out.column(1).value_lengths()).as_py() or 0
+                        buf.append(out)
+                        buf_bytes += out.nbytes
                         if buf_bytes > _ROW_GROUP_BYTES:
                             _write_row_group(w, buf)
                             buf, buf_bytes = [], 0

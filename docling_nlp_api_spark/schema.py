@@ -1,4 +1,6 @@
-"""Spark schemas for the engine (SURVEY.md §1.4, SPEC.md §1/§4)."""
+"""Spark schemas of the engine's input (SURVEY.md §1.4, SPEC.md §1) and
+of the pipeline's commit records. extract()'s output schema (SPEC.md §4)
+is operators/extract.py's EXTRACT_SCHEMA / EXTRACT_SPARK_SCHEMA."""
 
 from __future__ import annotations
 
@@ -22,34 +24,6 @@ DOCUMENTS_SPANS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("spans", T.ArrayType(SPAN_STRUCT, containsNull=False), False),
-    ]
-)
-
-OUT_SPAN_STRUCT = T.StructType(
-    [
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("order", T.IntegerType(), False),
-    ]
-)
-
-EXTRACTED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT, containsNull=False), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), False),
-        # page number of spans[i] — parallel array, NOT a span-struct field:
-        # the north-rule span equality is pinned on (kind,text,media_ref,order)
-        T.StructField("span_pages", T.ArrayType(T.IntegerType(), False), False),
-        # layout bbox of spans[i] (null when the source had none) — parallel
-        # array for the same reason as span_pages
-        T.StructField(
-            "span_bboxes",
-            T.ArrayType(T.ArrayType(T.DoubleType(), containsNull=False), containsNull=True),
-            False,
-        ),
     ]
 )
 

@@ -184,7 +184,6 @@ def main(argv: list[str] | None = None) -> int:
             spark.read.parquet(os.path.join(tier_dir, args.tier, "documents.parquet"))
         )
 
-    os.makedirs(args.output, exist_ok=True)
     metrics = run_dedup(
         spark, docs, args.output,
         threshold=args.threshold, bands=args.bands, rows=args.rows,

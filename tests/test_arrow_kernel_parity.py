@@ -188,6 +188,29 @@ def test_empty_batch():
     assert out.schema == OUT_SCHEMA
 
 
+@pytest.mark.parametrize("span_t", [SPAN_T, SPAN_T_NOBB])
+def test_all_empty_or_null_span_batch(span_t):
+    """A batch whose docs have only empty or null span lists, so the
+    kernel sees no span at all: every doc is the oracle's empty-input row,
+    SPEC §4's rule (completed, spans=[], zero counts, false flags)."""
+    ids, rows = ["e0", "n0", "e1", "n1"], [[], None, [], None]
+    out = extract_record_batch(to_batch(ids, rows, span_t))
+    assert out.schema == OUT_SCHEMA
+    got = out.to_pydict()
+    for i, did in enumerate(ids):
+        exp = extract_doc(did, [])
+        assert exp.status == "completed" and exp.spans == []
+        assert exp.metadata == {
+            "word_count": "0", "char_count": "0", "page_count": "0",
+            "has_images": "false", "has_tables": "false",
+        }
+        assert got["doc_id"][i] == did
+        assert all(got[c][i] == [] for c in ("kinds", "texts", "media_refs", "orders", "page_nos", "bboxes"))
+        assert (got["status"][i], got["error"][i]) == ("completed", None)
+        assert kernel_metadata(got, i) == exp.metadata
+        assert (exp.pages, exp.bboxes) == ([], [])
+
+
 def test_no_bbox_input_shape():
     """Inputs conforming to the pre-bbox span struct (the BASELINE
     input_hint's exact 4-field shape) must still extract, with every

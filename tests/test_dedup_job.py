@@ -13,7 +13,7 @@ import tempfile
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
 
-from dedup_job import run_dedup  # noqa: E402
+from dedup_job import main, run_dedup  # noqa: E402
 
 from docling_nlp_api_spark.operators.dedup import (  # noqa: E402
     PLANT_OFFSET,
@@ -128,3 +128,18 @@ def test_exact_dups_below_shingle_floor_are_dropped(spark, sf_dir):
         assert m["n_dropped_total"] > m["n_dropped_neardup"]
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_main_writes_uri_output_only_through_spark(spark, sf_dir, tmp_path, monkeypatch):
+    """main() with a file:// --output root writes its tables and
+    metrics.json there, and creates no local directory named after the
+    URI (`./file:/...`) under the working directory."""
+    from pyspark.sql import SparkSession
+
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("SPARK_GRAFT_DATA_ROOT", os.path.dirname(sf_dir))
+    # main() stops its session; keep the shared one alive
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    assert main(["--tier", "sf0.001", "--output", f"file://{tmp_path}/out"]) == 0
+    assert (tmp_path / "out" / "metrics.json").exists()
+    assert not (tmp_path / "file:").exists()
