@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import ArrayType, StructType
 
+from ..session import drop_zip_finders
 from .extract_arrow import extract_map_in_arrow, utf8_buffers
 
 
@@ -287,7 +288,10 @@ def output_batch(out: pa.RecordBatch) -> pa.RecordBatch:
 
 def _extract_batches(batches):
     """mapInArrow body of extract(): the kernel, then `output_batch`."""
-    return map(output_batch, extract_map_in_arrow(batches))
+    try:
+        yield from map(output_batch, extract_map_in_arrow(batches))
+    finally:
+        drop_zip_finders()
 
 
 def extract(df: DataFrame) -> DataFrame:

@@ -7,66 +7,59 @@ sandbox — same commit protocol):
     <out>/_staged/part_id=K/*.parquet       the input, restaged once by
                                             part_id = pmod(xxhash64(doc_id), N)
                                             (Iceberg bucket(N, doc_id)
-                                            stand-in; _STAGED_LAYOUT marks
-                                            a committed staging)
+                                            stand-in) by Python tasks;
+                                            _STAGED_LAYOUT marks it committed
     <out>/extracted/part_id=K/*.parquet     extract()'s rows, hash-partitioned
                                             by doc_id, in extract()'s columns
                                             (part-<uuid>.c000.snappy.parquet)
     <out>/_metrics/<run_id>-<pid>.parquet   one file per committed partition:
                                             docs/spans in and out, wall_sec
     <out>/_checkpoints/<run_id>-<pid>.parquet
-                                            one file per committed partition:
-                                            (run_id, partition_id, status,
-                                             rows_in, rows_out, started_at,
-                                             committed_at); the file is the
-                                            commit
+                                            a partition's commit: run_id,
+                                            partition_id, status, rows in and
+                                            out, started_at, committed_at
 
-Ingest and output: a commit partition is the unit of work. A commit
-batch reads only its pending partitions' staged files: the driver lists
-them per part_id (`_staged_parts`), and the batch runs one Python task for
-each partition that has any. Each task is one row of a tiny `spark.range`;
-its `mapInArrow` reads all of its partition's staged files with pyarrow,
-runs the kernel and extract.output_batch on them, and writes the
-partition's rows, exactly extract()'s, as one parquet file with the
-parquet schema and metadata a Spark write of extract() gives. It
-returns one small row: part_id, path, docs, failed, spans in and out,
-measured seconds. Neither spans nor output rows cross between the
-JVM and Python, and a batch is one job of one stage with no shuffle. A
-batch runs at most batch_size Python tasks, each with a fixed set-up cost,
-so batch_size should be at least the executor core count. The driver and
-the tasks do all file work with pyarrow at the URI Spark writes to
-(session.qualified_uri), resolved once per run(), so the output root must
-be on a filesystem pyarrow opens (a local path or file://); run() rejects
-any other before its first job and leaves the session's configuration as
-it found it.
+Ingest and output: one staging job, part_id computed on the JVM, writes
+each part_id's rows with pyarrow in Python tasks. A commit batch then
+runs one Python task (a row of a tiny `spark.range`) per pending
+partition with staged files (`_staged_parts`): it reads them with
+pyarrow, runs the kernel and extract.output_batch, writes exactly
+extract()'s rows as one parquet file with the schema and metadata a
+Spark write of extract() gives, and returns one small row: part_id,
+path, docs, failed, spans in and out, measured seconds. A batch is one
+job of one stage, with no shuffle and no span or output row crossing
+between the JVM and Python. Every task body ends with
+session.drop_zip_finders, so the next task on its worker does not
+re-read PySpark's zip archives. batch_size should be at least the
+executor core count. All file work is pyarrow's, at the URI Spark
+writes to (session.qualified_uri): run() rejects an output root that
+pyarrow cannot open (only local paths and file:// are tested) before
+its first job, and leaves the session's configuration as it found it.
 
 Commit protocol (mirrors Iceberg MERGE semantics with plain files):
 1. pending = all partition ids minus those with a checkpoint file of this
    run_id, found by listing _checkpoints (no Spark job).
-2. per batch: (a) one job writes one hidden attempt file per partition
-   with staged files, `extracted/part_id=K/.<uuid>.attempt` (Spark's
-   reader skips the leading '.', and the name is no *.parquet), and
-   collects their rows, at most one per partition; (b) in each part_id
-   dir of the batch the driver deletes every file that is not a
-   collected one (an earlier attempt's visible file, failed or retried
-   tasks' attempt files); (c) it moves each collected file onto a
-   visible part-<uuid>.c000.snappy.parquet; (d) it writes each
-   partition's metrics file, then each checkpoint file, each under a
-   hidden temp name moved onto its own name.
-3. a crash anywhere before a partition's checkpoint file exists leaves
-   that partition pending, with its dir holding old, hidden or moved
-   files in any mix: the redo's step (b) deletes all but its own
-   attempt file, and its metrics file replaces the old one under the
-   same name, so no row and no record is ever doubled. A checkpoint
-   file is written only after the batch's metrics files, so a committed
+2. per batch: (a) one job writes a hidden attempt file per partition with
+   staged files, `extracted/part_id=K/.<uuid>.attempt` (no *.parquet, and
+   Spark's reader skips the '.'), and collects at most one row per
+   partition; (b) the driver deletes every file in the batch's part_id
+   dirs that is not a collected one (an earlier attempt's visible file,
+   failed or retried tasks' attempt files); (c) it moves each collected
+   file onto a visible part-<uuid>.c000.snappy.parquet; (d) it writes
+   each partition's metrics file, then each checkpoint file, each moved
+   whole from a hidden temp name.
+3. a crash before a partition's checkpoint file exists leaves it pending,
+   its dir holding old, hidden or moved files in any mix: the redo's step
+   (b) deletes all but its own attempt file, and its metrics file
+   replaces the old one, so no row and no record is ever doubled.
+   Checkpoint files follow the batch's metrics files, so a committed
    partition has its metrics and is never touched again.
 
 Skew (mega-docs): hashing doc_id spreads mega-docs over the part_ids, and
-no doc is ever split. A partition's staged files are one task, so
-n_partitions must scale with the input: a partition's bytes bound its
-task's time. extract_arrow._bounded_slices cuts every batch the kernel
-sees to a span budget, so a mega-doc bounds kernel memory by its own size
-and needs no path of its own.
+no doc is ever split. A partition is one task, so n_partitions must scale
+with the input: a partition's bytes bound its task's time.
+extract_arrow._bounded_slices cuts every batch the kernel sees to a span
+budget, so a mega-doc bounds kernel memory by its own size.
 
 Reference anchor: the reference absorbs per-document failures into data
 rather than failing the request (docling_service.py:82-91); this pipeline
@@ -85,6 +78,7 @@ from collections.abc import Callable
 from datetime import datetime, timezone
 from functools import partial
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.fs as pafs
@@ -97,15 +91,17 @@ from pyspark.sql.types import StructType
 from ..operators.extract import EXTRACT_SPARK_SCHEMA, check_input_schema, output_batch
 from ..operators.extract_arrow import extract_map_in_arrow
 from ..schema import CHECKPOINT_SCHEMA, METRICS_SCHEMA
-from ..session import arrow_fs
+from ..session import arrow_fs, drop_zip_finders
 
-# a task's result: the one output file it wrote
+# a task's result: the one output file it wrote; a staging task's: its files
 _COUNTS = ("docs", "failed", "spans_in", "spans_out", "seconds")
 _RESULT_SCHEMA = pa.schema(
     [("part_id", pa.int32()), ("path", pa.string())]
     + [(k, pa.float64() if k == "seconds" else pa.int64()) for k in _COUNTS]
 )
 _RESULT_SPARK_SCHEMA = from_arrow_schema(_RESULT_SCHEMA)
+_STAGED_SCHEMA = pa.schema(list(_RESULT_SCHEMA)[:2])
+_STAGED_SPARK_SCHEMA = from_arrow_schema(_STAGED_SCHEMA)
 # Spark's parquet.block.size: a row group is flushed past this many bytes
 _ROW_GROUP_BYTES = 128 << 20
 # parquet writer settings of an output file: dictionaries on the
@@ -147,12 +143,11 @@ class ExtractionPipeline:
     # -- commit records -----------------------------------------------------
     def committed_partitions(self) -> set[int]:
         """The partitions this run has committed: those with a checkpoint
-        file `<run_id>-<partition_id>.parquet`, found by listing
-        `_checkpoints` through pyarrow at the URI Spark writes to, with no
-        Spark job. A parquet file there with any other name (a Spark part
-        file of the old append layout, say) raises a ValueError that names
-        it: passing over it would redo every partition and count its
-        metrics twice."""
+        file `<run_id>-<partition_id>.parquet` in `_checkpoints`, listed
+        with pyarrow, with no Spark job. A parquet file there of any other
+        name (a Spark part file of the old append layout, say) raises a
+        ValueError that names it: passing over it would redo every
+        partition and count its metrics twice."""
         fs, root = arrow_fs(self.spark, self.ckpt_dir)
         done = set()
         for info in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True)):
@@ -170,9 +165,8 @@ class ExtractionPipeline:
         return done
 
     def pending_partitions(self) -> list[int]:
-        """All partition ids anti-joined against committed ones. The id set
-        is tiny (metadata), so the anti-join is a set difference here; on a
-        real catalog it is `pending LEFT ANTI JOIN committed`."""
+        """All partition ids less the committed ones: a set difference here,
+        `LEFT ANTI JOIN committed` on a real catalog."""
         return sorted(set(range(self.n_partitions)) - self.committed_partitions())
 
     # -- run ----------------------------------------------------------------
@@ -182,12 +176,10 @@ class ExtractionPipeline:
         spark = self.spark
         check_input_schema(input_df.schema)
         # before any job: a scheme pyarrow cannot open fails here, not in a
-        # task; tasks read the staged files and write the output, and the
-        # driver publishes the output and writes the commit records, where
-        # Spark writes
+        # task (tasks and driver do all file work with pyarrow)
         fs, root = arrow_fs(spark, self.out_dir)
         committed = self.committed_partitions()
-        self._stage(input_df)
+        stage_s = self._stage(input_df)
         write = partial(
             _extract_files,
             fs=fs,
@@ -200,21 +192,16 @@ class ExtractionPipeline:
         batches = [
             pending[i : i + self.batch_size] for i in range(0, len(pending), self.batch_size)
         ]
-        done = 0
-        total_docs = 0
-        write_s: list[float] = []
-        commit_s: list[float] = []
-        n_tasks: list[int] = []
+        done = total_docs = 0
+        phases: dict[str, list] = {"write_s": [], "task_s": [], "commit_s": [], "tasks": []}
         for batch in batches:
             t0 = time.time()
             started_at = datetime.now(timezone.utc).replace(tzinfo=None)
             parts = _staged_parts(fs, f"{root}/_staged", batch)
             results = {}
             if parts:
-                # one job, one task per partition: each task writes its
-                # partition's hidden attempt file and returns its row; only
-                # a collected row's file is published, so a failed or
-                # retried attempt's file never is
+                # one task per partition; only a collected row's file is
+                # published, never a failed or retried attempt's
                 rows = (
                     spark.range(len(parts), numPartitions=len(parts))
                     .mapInArrow(partial(write, parts=parts), schema=_RESULT_SPARK_SCHEMA)
@@ -223,8 +210,9 @@ class ExtractionPipeline:
                 results = {r["part_id"]: r for r in rows}
             _publish_output(fs, f"{root}/extracted", batch, results.values())
 
-            write_s.append(time.time() - t0)
-            n_tasks.append(len(parts))
+            phases["write_s"].append(time.time() - t0)
+            phases["task_s"].append(max((r["seconds"] for r in results.values()), default=0.0))
+            phases["tasks"].append(len(parts))
             committed_at = datetime.now(timezone.utc).replace(tzinfo=None)
             ck_rows, mt_rows = [], []
             for pid in batch:
@@ -246,20 +234,15 @@ class ExtractionPipeline:
                 self._write_record(fs, f"{root}/_metrics", METRICS_SCHEMA, row)
             for row in ck_rows:
                 self._write_record(fs, f"{root}/_checkpoints", CHECKPOINT_SCHEMA, row)
-            commit_s.append(time.time() - t1)
+            phases["commit_s"].append(time.time() - t1)
             committed |= set(batch)
             done += 1
             if fail_after_batches is not None and done >= fail_after_batches:
                 raise RuntimeError(f"injected failure after {done} batches")
 
         return {
-            "run_id": self.run_id,
-            "batches": done,
-            "partitions_done": len(committed),
-            "docs_out": total_docs,
-            "write_s": write_s,
-            "commit_s": commit_s,
-            "tasks": n_tasks,
+            "run_id": self.run_id, "batches": done, "partitions_done": len(committed),
+            "docs_out": total_docs, "stage_s": stage_s, **phases,
         }
 
     def _file_schema(self, schema: StructType) -> pa.Schema:
@@ -304,80 +287,46 @@ class ExtractionPipeline:
         ).first()
         return f"content:{agg['n']}:{agg['h']}"
 
-    def _stage(self, input_df: DataFrame) -> None:
-        """One-time restage of the input PHYSICALLY partitioned by part_id
-        (the sandbox stand-in for an Iceberg table bucket-partitioned on
-        doc_id). After staging, a commit batch reads only its own
-        partitions' files, and a resume at 90% complete reads only the
-        pending 10% of input bytes. Total input read: 1 full scan
-        (staging), then each staged file once. The marker is read, the
-        dir wiped and the marker published through the pyarrow
-        filesystem of the staging dir (session.arrow_fs).
-
-        Crash-safe: the staging write is atomic-by-marker — the marker
-        is published (_publish) only after the parquet job commits, so a
-        crash mid-staging restages from scratch. A missing marker WIPES
-        the staging dir first: under partitionOverwriteMode=dynamic (a
-        session may set it), mode("overwrite") replaces only the part_id
-        dirs present in the NEW data — without the wipe, a retry with a
-        different bucket count (or an input that leaves some part_id
-        empty) would union dead-attempt orphan dirs into every later
-        scan. Staging is
-        keyed by n_partitions AND the input's identity — the sorted
-        source-file set for file-backed inputs, an order-independent
-        content fingerprint for in-memory inputs (whose inputFiles() is
-        empty and would otherwise collide) — so a layout staged for a
-        different bucket count or a different input is rejected rather
-        than silently reused (an in-place
-        rewrite of the same file paths is the one change this cannot
-        see — delete _staged/ when rewriting a source in place)."""
+    def _stage(self, input_df: DataFrame) -> float:
+        """Restage the input once by part_id (the stand-in for an Iceberg
+        table bucketed on doc_id) and return the seconds it took, 0.0 if a
+        committed staging was found. One job's Python tasks (_stage_files)
+        write the files; the driver publishes the collected ones, then
+        _STAGED_LAYOUT, the commit point. A missing marker wipes the dir
+        first, so no dead attempt's file is ever read. The marker holds
+        n_partitions and the input's identity (the md5 of its file list,
+        or a content fingerprint for an in-memory input), so a staging of
+        another bucket count or input is rejected, not reused; an in-place
+        rewrite of the same files is not seen: delete _staged/ then."""
         files = input_df.inputFiles()
         if files:
             src_key = hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()
         else:
-            # Non-file-backed input (in-memory / createDataFrame): an
-            # empty file list would make every such input hash identical
-            # and silently reuse stale staged data. Plan identity
-            # (semanticHash) is NOT stable for re-created inputs either
-            # (the LogicalRDD identity leaks into the hash — verified on
-            # PySpark 4.1.2), so fingerprint the CONTENT: row count +
-            # order-independent sum of per-row xxhash64. Deterministic
-            # across sessions, partitionings, and row orders, at the
-            # cost of one extra scan of an input that by definition
-            # fits the session; a DIFFERENT in-memory input into the
-            # same out_dir is rejected, the SAME input — even re-created
-            # in a fresh session — resumes. (Map-typed input columns
-            # would need a to_json pre-hash; the pipeline's input
-            # contract is (doc_id, spans), which xxhash64 supports.)
+            # a plan hash differs for a re-created in-memory input; content does not
             src_key = self._content_key(input_df)
         layout = f"{self.n_partitions} {src_key}"
-        fs, staged_path = arrow_fs(self.spark, self.staged_dir)
-        marker = f"{staged_path}/{_STAGED_LAYOUT}"
+        fs, root = arrow_fs(self.spark, self.staged_dir)
+        marker = f"{root}/{_STAGED_LAYOUT}"
+        stage_s = 0.0
         if fs.get_file_info(marker).type == pafs.FileType.NotFound:
-            # no marker = no committed staging: clear any half-written
-            # attempt so dynamic partition overwrite cannot leave orphans
-            fs.delete_dir_contents(staged_path, missing_dir_ok=True)
-            (
-                input_df.withColumn(
-                    "part_id",
-                    F.pmod(F.xxhash64("doc_id"), F.lit(self.n_partitions)).cast("int"),
-                )
-                .write.mode("overwrite")
-                .partitionBy("part_id")
-                .parquet(self.staged_dir)
-            )
-            _publish(fs, staged_path, _STAGED_LAYOUT, lambda f: f.write(layout.encode()))
+            t0 = time.perf_counter()
+            fs.delete_dir_contents(root, missing_dir_ok=True)
+            src = input_df.select("doc_id", "spans")
+            body = partial(_stage_files, fs=fs, path=root, schema=self._file_schema(src.schema))
+            bucket = F.pmod(F.xxhash64("doc_id"), F.lit(self.n_partitions)).cast("int")
+            rows = src.withColumn("part_id", bucket).mapInArrow(body, _STAGED_SPARK_SCHEMA).collect()
+            _publish_output(fs, root, range(self.n_partitions), rows)
+            _publish(fs, root, _STAGED_LAYOUT, lambda f: f.write(layout.encode()))
+            stage_s = time.perf_counter() - t0
         with fs.open_input_stream(marker) as f:
             staged_layout = f.read().decode().strip()
         if staged_layout != layout:
             raise ValueError(
-                f"staged layout at {self.staged_dir} was bucketed for "
-                f"'{staged_layout}', this run expects '{layout}' "
-                "(n_partitions + input identity: md5 of the file list for "
-                "file-backed inputs, a content fingerprint for in-memory "
-                "ones) — delete the "
-                "staging or match it"
+                f"staged layout at {self.staged_dir} was bucketed for '{staged_layout}', this "
+                f"run expects '{layout}' (n_partitions + input identity: md5 of the file list "
+                "or a content fingerprint) — delete the staging or match it"
             )
+        return stage_s
 
     def read_output(self) -> DataFrame:
         return self.spark.read.parquet(self.extracted_dir)
@@ -390,9 +339,8 @@ def _staged_parts(
     fs: pafs.FileSystem, staged_path: str, part_ids: list[int]
 ) -> list[tuple[int, list[str]]]:
     """(part_id, its staged file paths) for each of `part_ids` that has
-    staged files, listed on `fs`, the filesystem the tasks read them
-    from; `staged_path` is the staging dir as session.arrow_fs resolves
-    it. No staged files give no parts, and the batch runs no job."""
+    staged files under `staged_path` on `fs`, where the tasks read them.
+    No staged files give no parts, and the batch runs no job."""
     parts = []
     for k in part_ids:
         selector = pafs.FileSelector(f"{staged_path}/part_id={k}", allow_not_found=True)
@@ -406,23 +354,60 @@ def _staged_parts(
     return parts
 
 
+def _stage_files(batches, fs, path: str, schema: pa.Schema):
+    """mapInArrow body of the staging job: buffer the (doc_id, spans,
+    part_id) rows by part_id and, at the end and each time more than
+    _ROW_GROUP_BYTES are buffered, write each part_id's rows in `schema`
+    as the one row group of a hidden attempt file
+    `path/part_id=K/.<uuid>.attempt`. A task holds one open file, however
+    many part_ids it sees. Yields the files' _STAGED_SCHEMA rows."""
+    try:
+        staged, bufs, buf_bytes = [], {}, 0
+
+        def flush():
+            for pid, buf in sorted(bufs.items()):
+                fs.create_dir(f"{path}/part_id={pid}")
+                name = f"{path}/part_id={pid}/.{uuid.uuid4().hex}.attempt"
+                with pq.ParquetWriter(name, schema, filesystem=fs) as writer:
+                    _write_row_group(writer, buf)
+                staged.append(dict(part_id=pid, path=name))
+            bufs.clear()
+
+        for batch in batches:
+            ids = batch.column(2).to_numpy()
+            order = np.argsort(ids, kind="stable")
+            ids, rows = ids[order], batch.select([0, 1]).take(order)
+            pids, starts = np.unique(ids, return_index=True)
+            for pid, lo, hi in zip(pids.tolist(), starts, [*starts[1:], len(ids)]):
+                bufs.setdefault(pid, []).append(rows.slice(lo, hi - lo))
+            buf_bytes += rows.nbytes
+            if buf_bytes > _ROW_GROUP_BYTES:
+                flush()
+                buf_bytes = 0
+        flush()
+        yield pa.RecordBatch.from_pylist(staged, schema=_STAGED_SCHEMA)
+    finally:
+        drop_zip_finders()
+
+
 def _extract_files(batches, fs, parts: list[tuple[int, list[str]]], **out):
     """mapInArrow body of a batch's job: for each index i in `batches`,
-    write all staged files of partition parts[i] as its one output file
-    (_write_part, with the `out` arguments) and yield its _RESULT_SCHEMA
-    row."""
-    for ids in batches:
-        for i in ids.column(0).to_pylist():
-            pid, paths = parts[i]
-            row = _write_part(fs, paths, pid, **out)
-            yield pa.RecordBatch.from_pylist([row], schema=_RESULT_SCHEMA)
+    write partition parts[i]'s staged files as its one output file
+    (_write_part, with the `out` arguments); yield its _RESULT_SCHEMA row."""
+    try:
+        for ids in batches:
+            for i in ids.column(0).to_pylist():
+                pid, paths = parts[i]
+                row = _write_part(fs, paths, pid, **out)
+                yield pa.RecordBatch.from_pylist([row], schema=_RESULT_SCHEMA)
+    finally:
+        drop_zip_finders()
 
 
 def _write_part(fs, paths: list[str], pid: int, out_path: str, batch_rows: int, schema) -> dict:
     """Read the staged files `paths` of part_id `pid` from `fs`,
-    `batch_rows` docs at a time, run the kernel and extract.output_batch
-    on them, and write output_batch's batches, as they come, in `schema`
-    as the hidden attempt file
+    `batch_rows` docs at a time, run the kernel and extract.output_batch,
+    and write the batches in `schema` as the hidden attempt file
     `out_path/part_id=<pid>/.<uuid>.attempt`: one row group, or another
     past _ROW_GROUP_BYTES. Returns the file's result row, with the
     measured seconds of its read, kernel and write."""
@@ -457,11 +442,11 @@ def _write_row_group(writer: pq.ParquetWriter, batches: list[pa.RecordBatch]) ->
 
 
 def _publish_output(fs: pafs.FileSystem, out_path: str, part_ids: list[int], results) -> None:
-    """Publish a batch's output: in each `out_path/part_id=K` directory of
+    """Publish a job's files: in each `out_path/part_id=K` directory of
     `part_ids`, delete every file that is not one of the collected
-    `results` (the visible files of an earlier attempt at the partition,
-    and the hidden files of dead or retried tasks), then move each
-    collected file onto a visible name of Spark's form."""
+    `results` (an earlier attempt's visible files, dead or retried
+    tasks' hidden ones), then move each collected file onto a visible
+    name of Spark's form."""
     winners = {r["path"] for r in results}
     for pid in part_ids:
         part_dir = pafs.FileSelector(f"{out_path}/part_id={pid}", allow_not_found=True)
@@ -480,10 +465,9 @@ def _publish(
     fs: pafs.FileSystem, path: str, name: str, write: Callable[[pa.NativeFile], object]
 ) -> None:
     """Publish the file `name` under the directory `path` on `fs` whole:
-    `write(f)` writes its bytes to an output stream on the hidden temp
-    name `.<name>.tmp`, which Spark's reader skips, and the temp file is
-    moved onto `name`. A file under that name is therefore whole, and a
-    redo replaces it."""
+    `write(f)` writes it to the hidden temp name `.<name>.tmp`, which
+    Spark's reader skips, and that is moved onto `name`, which a redo
+    replaces."""
     fs.create_dir(path)
     tmp = f"{path}/.{name}.tmp"
     with fs.open_output_stream(tmp) as f:

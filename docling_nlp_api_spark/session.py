@@ -4,6 +4,8 @@ way a 1000-executor cluster run would be (AQE, Arrow, UTC, skew join)."""
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 from urllib.parse import urlsplit
 
 import pyarrow as pa
@@ -37,11 +39,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batch sizing: 256 docs/batch. Interleaved A/B at 32 cores
         # (sf0.5, same window): 256 -> 34.9k/43.9k docs/s vs 1024 ->
-        # 30.6k/25.4k — larger batches only add assembly latency variance
-        # because extract_arrow._bounded_slices re-cuts any batch whose
-        # span total exceeds BATCH_SPAN_BUDGET anyway (memory is bounded
-        # in SPANS, not docs; a batch packing several mega-docs cannot
-        # blow a worker even on the raw extract() path)
+        # 30.6k/25.4k. Memory is bounded in spans, not docs:
+        # extract_arrow._bounded_slices re-cuts any batch over
+        # BATCH_SPAN_BUDGET
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         # sandbox inputs are hundreds of MB: 16 MB splits keep all local[N]
         # cores busy (128 MB default would pack a 357 MB table into ~3
@@ -131,3 +131,13 @@ def arrow_fs(spark: SparkSession, path: str) -> tuple[pafs.FileSystem, str]:
     except (pa.ArrowException, OSError) as exc:
         scheme = urlsplit(uri).scheme
         raise ValueError(f"pyarrow cannot open '{scheme}://' paths such as {uri}: {exc}") from exc
+
+
+def drop_zip_finders() -> None:
+    """Delete the zipimporter entries of sys.path_importer_cache as a task
+    body ends: PySpark's worker calls invalidate_caches() before each task,
+    which re-reads each cached zip's directory (0.1-0.25 s a task). A later
+    import rebuilds a finder from zipimport's directory cache, unread."""
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+        del cache[path]

@@ -45,10 +45,13 @@ checkpoint file under _checkpoints, are skipped; the job is idempotent at
 partition granularity.
 
 Prints one JSON summary line: batches, partitions_done, docs_out, the job
-phase wall_sec, and per commit batch the measured seconds of the output
-write and publish (`write_s`), of writing its metrics and checkpoint
-files (`commit_s`), and its Python task count (`tasks`): one per
-partition of the batch that has staged input.
+phase wall_sec, the seconds staging took (`stage_s`, 0.0 on a resume that
+finds the input staged), and per commit batch the measured seconds of the
+output write and publish (`write_s`), its longest task-measured seconds
+(`task_s`; `write_s - task_s` is the batch's fixed job and task set-up
+cost), of writing its metrics and checkpoint files (`commit_s`), and its
+Python task count (`tasks`): one per partition of the batch that has
+staged input.
 """
 
 from __future__ import annotations
@@ -102,7 +105,8 @@ def main(argv: list[str] | None = None) -> int:
     # amortizes on a long-running cluster job; BENCH/submit_scaling.json
     # reports it alongside total submit wall time
     summary["wall_sec"] = round(time.time() - t0, 2)
-    for phase in ("write_s", "commit_s"):
+    summary["stage_s"] = round(summary["stage_s"], 3)
+    for phase in ("write_s", "task_s", "commit_s"):
         summary[phase] = [round(x, 3) for x in summary[phase]]
     print(json.dumps(summary))
     spark.stop()

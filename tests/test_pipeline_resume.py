@@ -103,16 +103,17 @@ def test_staged_crash_resume_identical(spark, tmp_path, input_df):
 
 
 def test_staged_restage_wipes_dead_attempt_orphans(spark, tmp_path, input_df):
-    """A crash BETWEEN the staging parquet commit and the marker write
-    must not leak dead-attempt part_id dirs into the retry: in a session
-    with partitionOverwriteMode=dynamic, mode("overwrite") only replaces
-    partitions present in the NEW data, so a retry with a smaller bucket
-    count would otherwise read the union of both layouts. _stage wipes
-    the dir whenever the marker is absent."""
+    """A crash BETWEEN the publication of the staged files and the marker
+    write must not leak dead-attempt part_id dirs into the retry: staging
+    writes only the part_id dirs of the NEW data, so a retry with a
+    smaller bucket count would otherwise read the union of both layouts,
+    in any session (this one sets partitionOverwriteMode=dynamic, which
+    no longer matters to staging). _stage wipes the dir whenever the
+    marker is absent."""
     dead = ExtractionPipeline(
         spark, str(tmp_path / "wo"), n_partitions=N_PARTS * 2, batch_size=BATCH,
     )
-    # simulate the crash window: staging parquet committed, marker never
+    # simulate the crash window: staged files published, marker never
     # written (the marker write is the commit point)
     dead._stage(input_df)
     marker = tmp_path / "wo" / "_staged" / "_STAGED_LAYOUT"
@@ -122,10 +123,8 @@ def test_staged_restage_wipes_dead_attempt_orphans(spark, tmp_path, input_df):
     }
     assert len(orphan_dirs) == N_PARTS * 2  # dead attempt's 16 part_id dirs
 
-    # retry at half the bucket count in a dynamic-overwrite session:
-    # dynamic overwrite alone would leave part_id=8..15 orphans; the wipe
-    # must remove them (run() itself leaves the session mode alone, and a
-    # static overwrite would clear the dir without the wipe)
+    # retry at half the bucket count: without the wipe, part_id=8..15
+    # would stay as orphans
     p = ExtractionPipeline(
         spark, str(tmp_path / "wo"), n_partitions=N_PARTS, batch_size=BATCH,
     )
@@ -149,10 +148,10 @@ def test_staged_restage_wipes_dead_attempt_orphans(spark, tmp_path, input_df):
 
 
 def test_run_leaves_session_overwrite_mode(spark, tmp_path, input_df):
-    """run() overwrites only its batches' output dirs through a write
-    option: the session's partitionOverwriteMode is the same after a run
-    as before it, so a later partitioned overwrite in the same session
-    keeps its own semantics."""
+    """run() sets no session configuration: the session's
+    partitionOverwriteMode is the same after a run as before it, so a
+    later partitioned overwrite in the same session keeps its own
+    semantics."""
     key = "spark.sql.sources.partitionOverwriteMode"
     before = spark.conf.get(key)
     p = ExtractionPipeline(spark, str(tmp_path / "conf"), n_partitions=N_PARTS, batch_size=BATCH)
@@ -356,6 +355,12 @@ _CRASH_POINTS = {
     "dead_attempt_beside_stale_file": ({0, 1}, 2 * BATCH + 1),
     "mid_move": ({0, 1}, None),
     "after_moves": ({0, 1}, None),
+    # staging, in the first run: after the staging job, before any move of
+    # a staged file; in the middle of the moves; after them, before the
+    # _STAGED_LAYOUT marker
+    "stage_before_moves": (set(), None),
+    "stage_mid_move": (set(), None),
+    "stage_after_moves": (set(), None),
 }
 
 
@@ -413,19 +418,22 @@ def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, ma
     visible, some still hidden attempt files), after the moves, after the
     output with a dead attempt's file and a stale visible file left in a
     pending partition, after some and after all of the batch's metrics
-    files, after some and after all of its checkpoint files. The crash
-    leaves exactly the partitions with a checkpoint file committed, the
-    resume never touches their output files, and the result equals an
-    uninterrupted run: the same output content, the same metrics and
-    checkpoint rows, and exactly one record file of each kind per
-    partition, with no hidden or temp file left anywhere."""
+    files, after some and after all of its checkpoint files; and at each
+    step of staging: before, in the middle of and after the moves of the
+    staged files. The crash leaves exactly the partitions with a
+    checkpoint file committed, the resume never touches their output
+    files nor reads a file of a dead staging attempt, and the result
+    equals an uninterrupted run: the same output content, the same
+    metrics and checkpoint rows, and exactly one record file of each kind
+    per partition, with no hidden or temp file left anywhere, _staged
+    included."""
     import shutil
 
     from docling_nlp_api_spark.plans import pipeline
 
     committed, failing_write = _CRASH_POINTS[point]
     p = ExtractionPipeline(spark, str(tmp_path / point), n_partitions=MX_PARTS, batch_size=BATCH)
-    writes, listings, names = [], [], []
+    writes, listings, names, publishes = [], [], [], []
     real_write, staged_parts = ExtractionPipeline._write_record, pipeline._staged_parts
     real_name, real_publish = pipeline._visible_name, pipeline._publish_output
 
@@ -444,15 +452,21 @@ def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, ma
         return parts
 
     def failing_name():
-        if point == "mid_move" and len(listings) == 2:
+        # the first publish of the run is its staging
+        if (point == "mid_move" and len(listings) == 2
+                or point == "stage_mid_move" and len(publishes) == 1):
             names.append(1)
             if len(names) == 2:
                 raise RuntimeError("injected move failure")
         return real_name()
 
     def failing_publish(*args):
+        publishes.append(args[1])
+        if point == "stage_before_moves" and len(publishes) == 1:
+            raise RuntimeError("injected failure before the moves")
         real_publish(*args)
-        if point == "after_moves" and len(listings) == 2:
+        if (point == "after_moves" and len(listings) == 2
+                or point == "stage_after_moves" and len(publishes) == 1):
             raise RuntimeError("injected failure after the moves")
 
     monkeypatch.setattr(ExtractionPipeline, "_write_record", counting_write)
@@ -462,6 +476,19 @@ def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, ma
     with pytest.raises(Exception, match="missing|injected"):
         p.run(input_df, fail_after_batches=2)
     assert p.committed_partitions() == committed
+    staged = tmp_path / point / "_staged"
+    dead = {f.name for f in staged.rglob("*") if f.is_file()}
+    if point.startswith("stage_"):
+        assert publishes[0].endswith("/_staged") and not listings
+        assert not (staged / "_STAGED_LAYOUT").exists()
+        dead_hidden = [n for n in dead if n.startswith(".")]
+        if point == "stage_before_moves":
+            assert dead and len(dead_hidden) == len(dead)
+        if point == "stage_mid_move":
+            assert dead_hidden and len(dead_hidden) < len(dead)
+        if point == "stage_after_moves":
+            assert dead and not dead_hidden
+    n_listed = len(listings)
 
     extracted = tmp_path / point / "extracted"
     crashed = [f.name for f in _files(extracted, [2, 3])]
@@ -475,7 +502,7 @@ def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, ma
         shutil.copy(stale, extracted / "part_id=2" / f"part-stale{stale.name[4:]}")
         shutil.copy(stale, extracted / "part_id=2" / ".dead.attempt")
     kept = _files(extracted, committed)
-    assert kept
+    assert kept or not committed
     summary = p.run(input_df)
     assert summary["partitions_done"] == MX_PARTS
     assert _files(extracted, committed) == kept
@@ -483,8 +510,16 @@ def test_crash_matrix_resumes_exactly(spark, tmp_path, input_df, monkeypatch, ma
     for d, names in _final_state(p)[3].items():
         assert names == [f"run0-{k}.parquet" for k in range(MX_PARTS)], (d, names)
     _assert_one_file_per_partition(p)
-    left = [f for f in (tmp_path / point).rglob(".*") if "_staged" not in f.parts]
+    left = list((tmp_path / point).rglob(".*"))
     assert not left, left
+    if point.startswith("stage_"):
+        # the resume read only files of its own staging
+        read = {
+            path.rsplit("/", 1)[1]
+            for parts in listings[n_listed:] for _, ps in parts for path in ps
+        }
+        assert read and not read & dead
+        assert not dead & {f.name for f in staged.rglob("*")}
 
 
 def test_foreign_checkpoint_file_raises(spark, tmp_path):
@@ -613,7 +648,9 @@ def test_output_independent_of_input_layout(spark, tmp_path, recorded_parts):
     few rows read back in 2-doc Arrow batches: every run gives the same
     output content and the same _metrics rows, and each partition with
     docs has exactly one output file. In the 7-file run some partition's
-    file is built from several staged files."""
+    file is built from several staged files. Staging writes a task's
+    rows of a part_id as one row group, so the small row groups are made
+    by rewriting the staged files before the run."""
     import pyarrow.parquet as pq
 
     from docling_nlp_api_spark.schema import DOCUMENTS_SPANS_SCHEMA
@@ -623,10 +660,7 @@ def test_output_independent_of_input_layout(spark, tmp_path, recorded_parts):
         DOCUMENTS_SPANS_SCHEMA,
     )
     df = spans_df(spark, 10, start=990).unionByName(bad)
-    small_groups = {
-        "parquet.block.row.count.limit": "2",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "2",
-    }
+    small_groups = {"spark.sql.execution.arrow.maxRecordsPerBatch": "2"}
     layouts = {
         "one_file": (1, {}),
         "seven_files": (7, {}),
@@ -642,6 +676,10 @@ def test_output_independent_of_input_layout(spark, tmp_path, recorded_parts):
         try:
             p = ExtractionPipeline(spark, str(tmp_path / name), n_partitions=4, batch_size=2)
             n_listed = len(recorded_parts)
+            if name == "small_row_groups":
+                p._stage(spark.read.parquet(src))
+                for f in (tmp_path / name / "_staged").glob("part_id=*/*.parquet"):
+                    pq.write_table(pq.ParquetFile(f).read(), f, row_group_size=2)
             p.run(spark.read.parquet(src))
         finally:
             for k, v in old.items():
@@ -840,3 +878,27 @@ def test_wall_sec_is_measured_per_partition(spark, tmp_path, recorded_parts):
             assert 0 < m["wall_sec"] <= summary["write_s"][pid // 4], m
         else:
             assert m["wall_sec"] == 0.0, m
+
+
+def test_stage_and_task_seconds_are_measured(spark, tmp_path):
+    """The summary carries the seconds staging took, 0.0 when a committed
+    staging is found, and for each batch its longest task-measured
+    seconds, `task_s`: the largest wall_sec of its partitions, 0.0 for a
+    batch with no task, and never more than the batch's write time, so
+    that write_s - task_s is the batch's fixed job and set-up cost."""
+    out, df = str(tmp_path / "s"), spans_df(spark, 5, start=990)
+    summary = ExtractionPipeline(spark, out, n_partitions=8, batch_size=2).run(df)
+    assert summary["stage_s"] > 0
+    assert len(summary["task_s"]) == len(summary["write_s"]) == 4
+    p = ExtractionPipeline(spark, out, run_id="again", n_partitions=8, batch_size=1)
+    again = p.run(df)
+    assert again["stage_s"] == 0.0
+    wall0, wall = (
+        {r["partition_id"]: r["wall_sec"] for r in p.read_metrics().filter(f"run_id = '{run}'").collect()}
+        for run in ("run0", "again")
+    )
+    assert summary["task_s"] == [max(wall0[2 * b], wall0[2 * b + 1]) for b in range(4)]
+    assert 0 in again["tasks"], again  # a batch with no staged file runs no task
+    for pid, (task, write, n) in enumerate(zip(again["task_s"], again["write_s"], again["tasks"])):
+        assert task == wall[pid]
+        assert (0 < task <= write) if n else task == 0.0, again
